@@ -160,6 +160,41 @@ object Bench {
   private def ceilingFor(name: String): Double =
     if (DeepPipelines(name)) 4.0 else 3.0
 
+  /** Wall seconds of one run of `body`, or None when it throws: a failed
+    * run yields no timing, so a query that dies early can never ship as
+    * a fast one.
+    */
+  def timeRun(name: String)(body: => Unit): Option[Double] = {
+    val t0 = System.nanoTime()
+    try { body; Some((System.nanoTime() - t0) / 1e9) }
+    catch { case e: Throwable => System.err.println(s"[bench] $name FAILED: $e"); None }
+  }
+
+  /** The runs one query gets, in order: best-of-2; a third run when the
+    * two disagree >2x — a contention fingerprint, not a code property — or
+    * both exceed `ceiling`, so a GC/JIT-unlucky pair of borderline runs
+    * does not ship as the number; then, while still breaching AND still
+    * improving (the JIT/page-cache warm-up clearly hasn't converged), up
+    * to 5 runs in all. A genuinely slow query plateaus and still breaches.
+    * More than two runs means a variance rerun was taken. None — the
+    * query failed — as soon as any run fails; it is not run again.
+    */
+  def measureRuns(ceiling: Double)(run: () => Option[Double]): Option[Seq[Double]] = {
+    def more(runs: Seq[Double]): Boolean = runs.length match {
+      case 0 | 1 => true
+      case 2 => runs.max > 2.0 * runs.min || runs.min > ceiling
+      case n => n < 5 && runs.min > ceiling && runs.last == runs.min
+    }
+    @annotation.tailrec
+    def loop(runs: Seq[Double]): Option[Seq[Double]] =
+      if (!more(runs)) Some(runs)
+      else run() match {
+        case Some(sec) => loop(runs :+ sec)
+        case None => None
+      }
+    loop(Seq.empty)
+  }
+
   /** Compact ALWAYS-PARSEABLE stdout summary. The driver captures only the
     * LAST ~2000 chars of output — r12's line grew past that boundary (the
     * 300-query spreads payload), lost its opening brace, and cost the
@@ -168,16 +203,18 @@ object Bench {
     * 4 slowest extra query entries, breach/suspect name lists capped (the
     * full count ships as n_breaches/n_suspects), and NO per-query
     * foreign/spread maps (bench_full.json carries all of those complete).
-    * BenchLineSpec pins the worst case (20 breaches of the longest
-    * registry names) under 1500 chars.
+    * `total` and `finalResults` cover the timed queries only; failed ones
+    * ship as the `failed_queries` count (names in bench_full.json).
+    * BenchLineSpec pins the worst case (20 breaches and 20 failures of the
+    * longest registry names) under 1500 chars.
     */
   def headlineLine(total: Double, nQueries: Int,
                    finalResults: Map[String, Double],
                    gcTotal: Double, sfDir: String,
                    decodeJson: String, contention: String,
                    breachNames: Seq[String], suspectNames: Seq[String],
-                   clean: Boolean, pinnedBuildSec: Double,
-                   coldTotalSec: Double): String = {
+                   failedNames: Seq[String], clean: Boolean,
+                   pinnedBuildSec: Double, coldTotalSec: Double): String = {
     val headline = Seq("q1_pricing", "pipeline_consume_counts",
       "s7_replay_window", "a4_event_stats", "d1_dedup",
       "dedup_minhash_lsh", "emb_ivf_topk", "corpus_prepare_v7")
@@ -191,7 +228,8 @@ object Bench {
     val suspectJson = suspectNames.take(4).map("\"" + _ + "\"")
       .mkString("[", ",", "]")
     s"""{"metric":"total","value":${f"$total%.2f"},"unit":"sec",""" +
-      s""""n_queries":$nQueries,"queries":$headQs,""" +
+      s""""n_queries":$nQueries,"failed_queries":${failedNames.length},""" +
+      s""""queries":$headQs,""" +
       s""""gc_total_sec":${f"$gcTotal%.1f"},""" +
       s""""pinned_build_sec":${f"$pinnedBuildSec%.2f"},""" +
       s""""cold_total_sec":${f"$coldTotalSec%.1f"},""" +
@@ -276,21 +314,24 @@ object Bench {
     var qForeign = Map.empty[String, Seq[Double]]
     var qGc = Map.empty[String, Seq[Double]]
     def runOnce(fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame,
-                name: String): Double = {
+                name: String): Option[Double] = {
       val c0 = cpuSample()
       val g0 = gcMillis()
-      val t0 = System.nanoTime()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable => System.err.println(s"[bench] $name: $e") }
-      finally Caches.release()
-      val sec = (System.nanoTime() - t0) / 1e9
-      val c1 = cpuSample()
-      qGc += name -> (qGc.getOrElse(name, Seq.empty[Double]) :+ (gcMillis() - g0) / 1e3)
-      val f =
-        if (c0._1 < 0 || c1._1 < 0 || sec < 0.2) -1.0
-        else ((c1._1 - c0._1) - (c1._2 - c0._2)) / (sec * UserHz)
-      qForeign += name -> (qForeign.getOrElse(name, Seq.empty[Double]) :+ f)
-      sec
+      val run = timeRun(name) {
+        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        finally Caches.release()
+      }
+      // only timed runs are recorded: index-aligned with allRuns
+      run.foreach { sec =>
+        val c1 = cpuSample()
+        qGc += name -> (qGc.getOrElse(name, Seq.empty[Double]) :+ (gcMillis() - g0) / 1e3)
+        val f =
+          if (c0._1 < 0 || c1._1 < 0 || sec < 0.2) -1.0
+          else ((c1._1 - c0._1) - (c1._2 - c0._2)) / (sec * UserHz)
+        qForeign += name -> (qForeign.getOrElse(name, Seq.empty[Double]) :+ f)
+      }
+      tick()
+      run
     }
     // JIT/codegen warm-up so the first measured query isn't charged for it
     SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
@@ -318,44 +359,23 @@ object Bench {
       if (sink == Int.MinValue) println(sink) // keep the loop un-elidable
     }
     tick()
-    // sorted order, best-of-2 per query; a third run (min of 3 ships, the
-    // rerun list stamped as evidence) when either (a) the two runs
-    // disagree >2x — a contention fingerprint, not a code property — or
-    // (b) both runs exceed the 3 s ceiling — borderline queries get one
-    // more attempt to show the machine's real capability before a
-    // GC/JIT-unlucky pair of runs ships as the number
-    var varianceQueries = List.empty[String]
-    // every run per query is kept so the artifact can show SPREAD, not just
-    // the min — r4's judge rerun couldn't distinguish "genuinely ~3 s" from
-    // "1.8 s with one unlucky run" for a flagged query that shipped one number
-    var allRuns = Map.empty[String, Seq[Double]]
     // optional query-name args restrict the run (single-query iteration —
     // same convention as Verify's subset arg); no args = full registry
     val selected =
       if (args.nonEmpty) SparkEntry.queries.filter(kv => args.contains(kv._1))
       else SparkEntry.queries
-    val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val a = runOnce(fn, name); tick()
-      val b = runOnce(fn, name); tick()
-      var runs =
-        if (math.max(a, b) > 2.0 * math.min(a, b) ||
-            math.min(a, b) > ceilingFor(name)) {
-          varianceQueries ::= name
-          val c = runOnce(fn, name); tick()
-          Seq(a, b, c)
-        } else Seq(a, b)
-      // still breaching AND still improving -> the JIT/page-cache warm-up
-      // clearly hasn't converged; keep measuring (max 5 runs total) so a
-      // cold-start ramp can't ship as a capability number. A genuinely
-      // slow query plateaus and still breaches; every run ships in
-      // `spreads` either way.
-      while (runs.length < 5 && runs.min > ceilingFor(name) &&
-             runs.last == runs.min) {
-        runs = runs :+ runOnce(fn, name); tick()
-      }
-      allRuns += name -> runs
-      name -> runs.min
-    }.toMap
+    // sorted order, runs per query as measureRuns schedules them. Every run
+    // is kept so the artifact can show SPREAD, not just the min — r4's
+    // judge rerun couldn't distinguish "genuinely ~3 s" from "1.8 s with
+    // one unlucky run" for a flagged query that shipped one number
+    val measured = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
+      name -> measureRuns(ceilingFor(name))(() => runOnce(fn, name))
+    }
+    var allRuns = measured.collect { case (n, Some(runs)) => n -> runs }.toMap
+    var varianceQueries = allRuns.collect { case (n, runs) if runs.length > 2 => n }.toSet
+    // failed queries ship by name only: no timing, not in total
+    var failedQueries = measured.collect { case (n, None) => n }.toSet
+    val results = allRuns.map { case (n, runs) => n -> runs.min }
 
     // --- breach adjudication (r9 verdict): ACT on contention instead of
     // shipping phantoms. Two consecutive driver rounds shipped breach
@@ -374,12 +394,6 @@ object Bench {
       if (c0._1 < 0 || c1._1 < 0) -1.0
       else ((c1._1 - c0._1) - (c1._2 - c0._2)) / (winSec * UserHz)
     }
-    def runWithForeign(
-        fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame,
-        name: String): (Double, Double) = {
-      val sec = runOnce(fn, name) // runOnce brackets with cpuSample itself
-      (sec, qForeign(name).last)
-    }
     var finalResults = results
     var suspects = Set.empty[String]
     val retryT0 = System.nanoTime()
@@ -389,20 +403,29 @@ object Bench {
         val fn = selected(name)
         var sawCalmRun = false
         var attempts = 0
-        while (attempts < 3 && finalResults(name) > ceilingFor(name) &&
-               retryBudgetLeft) {
+        while (attempts < 3 && !failedQueries(name) &&
+               finalResults(name) > ceilingFor(name) && retryBudgetLeft) {
           var probes = 0
           var f = foreignOver(0.5)
           while (probes < 5 && f >= 0 && f > gateForeign && retryBudgetLeft) {
             Thread.sleep(3000); f = foreignOver(0.5); probes += 1
           }
-          val (sec, during) = runWithForeign(fn, name); tick()
-          allRuns += name -> (allRuns(name) :+ sec)
-          if (during >= 0 && during <= gateForeign) sawCalmRun = true
-          finalResults += name -> math.min(finalResults(name), sec)
+          // runOnce brackets each run with cpuSample itself
+          runOnce(fn, name) match {
+            case Some(sec) =>
+              val during = qForeign(name).last
+              allRuns += name -> (allRuns(name) :+ sec)
+              if (during >= 0 && during <= gateForeign) sawCalmRun = true
+              finalResults += name -> math.min(finalResults(name), sec)
+            case None =>
+              failedQueries += name
+              finalResults -= name
+              allRuns -= name
+              varianceQueries -= name
+          }
           attempts += 1
         }
-        if (finalResults(name) > ceilingFor(name) && !sawCalmRun)
+        if (!failedQueries(name) && finalResults(name) > ceilingFor(name) && !sawCalmRun)
           suspects += name
       }
 
@@ -509,11 +532,13 @@ object Bench {
       .map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
       .mkString("{", ",", "}")
     val gcTotal = gcMillis() / 1e3
-    val vq = varianceQueries.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val vq = varianceQueries.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val failedNames = failedQueries.toSeq.sorted
+    val failedJson = failedNames.map("\"" + _ + "\"").mkString("[", ",", "]")
     // per-run spreads for every variance-flagged query plus the
     // ceiling-adjacent ones (best > 2.5 s): [a, b, c?] in run order, so a
     // reader can tell dispersion from a genuinely slow query
-    val spreadNames = (varianceQueries.toSet ++
+    val spreadNames = (varianceQueries ++
       finalResults.collect { case (k, v) if v > 2.5 => k }).toSeq.sorted
     def spreadJson(names: Seq[String]): String = names.map { n =>
       "\"" + n + "\":" + allRuns(n).map(r => f"$r%.3f").mkString("[", ",", "]")
@@ -532,7 +557,7 @@ object Bench {
       s""""foreign_cores_max":${f"$foreignCoresMax%.3f"},""" +
       s""""start_delay_sec":${f"$startDelaySec%.1f"},""" +
       s""""headline_contended":$headlineContended,""" +
-      s""""variance_reruns":${varianceQueries.length}"""
+      s""""variance_reruns":${varianceQueries.size}"""
     val decodeJson =
       s""""decode_struct_sec":${f"${decode._1}%.3f"},""" +
       s""""decode_perfield_sec":${f"${decode._2}%.3f"},""" +
@@ -561,6 +586,7 @@ object Bench {
     // compact ALWAYS-PARSEABLE summary instead.
     val fullJson =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir",""" +
+      s""""failed_queries":$failedJson,""" +
       s""""query_foreign_at_min":$qf,""" +
       s""""query_gc_at_min":$qg,"gc_total_sec":${f"$gcTotal%.1f"},""" +
       s""""query_first_run":$qc,"cold_total_sec":${f"$coldTotalSec%.1f"},""" +
@@ -579,9 +605,9 @@ object Bench {
     // per-query foreign/spread maps are FILE-ONLY since r14; the r13
     // verdict's #2 directed keeping the line inside the driver's ~2000-char
     // tail budget after r12's line overran it and zeroed the PERF diff).
-    println(headlineLine(total, results.size, finalResults, gcTotal, sfDir,
-      decodeJson, contention, breachNames, suspects.toSeq.sorted, clean,
-      pinnedBuildSec, coldTotalSec))
+    println(headlineLine(total, finalResults.size, finalResults, gcTotal, sfDir,
+      decodeJson, contention, breachNames, suspects.toSeq.sorted, failedNames,
+      clean, pinnedBuildSec, coldTotalSec))
     if (foreign > 0)
       System.err.println(s"[bench] WARNING: $foreign concurrent java process(es) " +
         "detected — timings may be contention-inflated; rerun on an idle host")

@@ -10,6 +10,11 @@ import scala.collection.mutable
   * paired unpersist those blocks accumulate in executor storage for the
   * lifetime of the session. Verify/Bench call [[release]] after each query;
   * a spec asserts nothing stays cached.
+  *
+  * [[release]] is session-global, so code that runs beside other queries
+  * scopes its barrier itself instead: ConsumePipeline cuts each
+  * micro-batch with a lazy local checkpoint and unpersists exactly that
+  * barrier's blocks when the batch body exits.
   */
 object Caches {
   private val live = mutable.ArrayBuffer.empty[DataFrame]

@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.operators.{Dedup, Retry, Validation}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.Row
@@ -21,9 +22,28 @@ import org.apache.spark.sql.Row
   *     (W4), no per-record remote round-trip;
   *   - the manual ack is the checkpoint commit: a micro-batch that fails
   *     reprocesses from the last committed offsets, and the idempotent
-  *     dedup + deterministic routing make the replay safe;
+  *     dedup + deterministic routing make the replay recompute the same
+  *     rows (delivery to the sinks: see below);
   *   - multi-sink fan-out (processed + DLQ + retry) happens inside one
-  *     `foreachBatch`, the transactional-ish unit.
+  *     `foreachBatch`, and each micro-batch is computed ONCE: the batch
+  *     `foreachBatch` hands over is a plan over the micro-batch RDD, so
+  *     each of the three appends would re-run its post-shuffle half — the
+  *     dedup state store's load, update and commit included. A lazy local
+  *     checkpoint cuts that lineage; the first append materializes it,
+  *     the other two read its blocks, and the blocks are released when the
+  *     batch body exits, success or not.
+  *
+  * Delivery across the three sinks is at-least-once, not exactly-once:
+  * the appends are three separate writes, so a crash between two of them
+  * replays the batch and re-appends the sinks that had already landed.
+  * A lost local-checkpoint block (executor loss) fails the batch the same
+  * way, and it replays from the streaming checkpoint.
+  *
+  * Dedup keys on the decoded event id as-is, so every empty-id event
+  * shares one dedup key ("") and every poison pill shares another (null):
+  * only the first of each class reaches the DLQ until that key's state
+  * expires, so how many do depends on state-expiry timing. (The reference
+  * validates before dedup and dead-letters each one.)
   *
   * The same column logic (Validation/Retry/Dedup operators) drives the
   * batch oracle queries — streaming and batch forms cannot drift.
@@ -113,10 +133,19 @@ object ConsumePipeline {
     val writer: DataStreamWriter[Row] = deduped.writeStream
       .option("checkpointLocation", s"$outDir/_checkpoint")
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val routed = route(batch, cfg, failurePredicate)
-        routed.processed.write.mode("append").parquet(s"$outDir/processed")
-        routed.dlq.write.mode("append").parquet(s"$outDir/dlq")
-        routed.retry.write.mode("append").parquet(s"$outDir/retry")
+        // one lineage cut per micro-batch (see the object doc): the first
+        // append materializes it, and exactly its blocks are released here
+        // — never via Caches.release(), which would drop frames other
+        // queries in the session hold
+        val once = batch.localCheckpoint(eager = false)
+        try {
+          val routed = route(once, cfg, failurePredicate)
+          routed.processed.write.mode("append").parquet(s"$outDir/processed")
+          routed.dlq.write.mode("append").parquet(s"$outDir/dlq")
+          routed.retry.write.mode("append").parquet(s"$outDir/retry")
+        } finally once.queryExecution.logical.collectFirst {
+          case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+        }
         ()
       }
     (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()

@@ -8,9 +8,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * the round lost its entire PERF round-over-round comparison (r13 verdict
   * task #2). headlineLine is size-capped by construction; this spec pins
   * the WORST case — every registry query present, 20 ceiling breaches and
-  * 8 contention suspects drawn from the LONGEST registry names, slowest
-  * slots also landing on long names, decode error present — under 1500
-  * chars, leaving ≥500 chars of headroom for the harness epilogue.
+  * 8 contention suspects drawn from the LONGEST registry names, 20 more
+  * long-named queries failed, slowest slots also landing on long names,
+  * decode error present — under 1500 chars, leaving ≥500 chars of
+  * headroom for the harness epilogue. A failed query is counted, never
+  * timed.
   */
 class BenchLineSpec extends AnyFunSuite {
 
@@ -18,9 +20,10 @@ class BenchLineSpec extends AnyFunSuite {
     val names = SparkEntry.queries.keys.toSeq
     assert(names.size > 300, "registry should be fully populated")
     val longest = names.sortBy(n => (-n.length, n))
+    val failed = longest.slice(20, 40).sorted
     // worst-case values: hundreds of seconds, full %.3f width
     val finalResults = names.map(_ -> 123.456).toMap ++
-      longest.take(12).map(_ -> 999.999).toMap // longest names = slowest
+      longest.take(12).map(_ -> 999.999).toMap -- failed // longest names = slowest
     val breaches = longest.take(20).sorted
     val suspects = longest.take(8).sorted
     val decodeJson =
@@ -37,9 +40,10 @@ class BenchLineSpec extends AnyFunSuite {
       total = 99999.99, nQueries = names.size, finalResults = finalResults,
       gcTotal = 999.9, sfDir = "/root/testdata/sf0.1",
       decodeJson = decodeJson, contention = contention,
-      breachNames = breaches, suspectNames = suspects, clean = false,
-      pinnedBuildSec = 999.99, coldTotalSec = 9999.9)
+      breachNames = breaches, suspectNames = suspects, failedNames = failed,
+      clean = false, pinnedBuildSec = 999.99, coldTotalSec = 9999.9)
     assert(line.startsWith("{") && line.endsWith("}"), "line must be one JSON object")
+    assert(line.contains("\"failed_queries\":20"))
     assert(!line.contains("\n"), "line must be a single line")
     assert(line.length < 1500,
       s"worst-case headline line is ${line.length} chars — must stay under " +
@@ -53,11 +57,54 @@ class BenchLineSpec extends AnyFunSuite {
       gcTotal = 0.1, sfDir = "/x",
       decodeJson = """"decode_struct_sec":0.1,"decode_perfield_sec":0.2,"decode_floor_sec":0.0,""",
       contention = """"foreign_jvms":0,"variance_reruns":0""",
-      breachNames = Seq.empty, suspectNames = Seq.empty, clean = true,
-      pinnedBuildSec = 3.21, coldTotalSec = 12.3)
+      breachNames = Seq.empty, suspectNames = Seq.empty, failedNames = Seq.empty,
+      clean = true, pinnedBuildSec = 3.21, coldTotalSec = 12.3)
     for (k <- Seq("\"pinned_build_sec\":3.21", "\"cold_total_sec\":12.3",
-                  "\"n_breaches\":0", "\"n_suspects\":0", "\"clean\":true",
-                  "\"queries_full\":"))
+                  "\"n_breaches\":0", "\"n_suspects\":0", "\"failed_queries\":0",
+                  "\"clean\":true", "\"queries_full\":"))
       assert(line.contains(k), s"missing $k in: $line")
+  }
+
+  test("a throwing query is counted as failed, not timed") {
+    var calls = Map.empty[String, Int]
+    def body(name: String): Unit = {
+      calls += name -> (calls.getOrElse(name, 0) + 1)
+      if (name == "boom") throw new IllegalStateException("planted failure")
+      Thread.sleep(5)
+    }
+    assert(Bench.timeRun("boom")(body("boom")).isEmpty, "a failed run has no timing")
+    val measured = Seq("ok", "boom").map { n =>
+      n -> Bench.measureRuns(ceiling = 3.0)(() => Bench.timeRun(n)(body(n)))
+    }.toMap
+    assert(measured("boom").isEmpty)
+    // the direct call above plus ONE run inside measureRuns
+    assert(calls("boom") == 2, "a failed query is not run again")
+    val okRuns = measured("ok").get
+    assert(okRuns.length >= 2 && okRuns.forall(_ >= 0.005))
+    val finalResults = measured.collect { case (n, Some(runs)) => n -> runs.min }
+    val failed = measured.collect { case (n, None) => n }.toSeq
+    val total = finalResults.values.sum
+    val line = Bench.headlineLine(
+      total = total, nQueries = finalResults.size, finalResults = finalResults,
+      gcTotal = 0.0, sfDir = "/x", decodeJson = "", contention = "\"foreign_jvms\":0",
+      breachNames = Seq.empty, suspectNames = Seq.empty, failedNames = failed,
+      clean = true, pinnedBuildSec = 0.0, coldTotalSec = total)
+    assert(line.contains("\"n_queries\":1,\"failed_queries\":1"), line)
+    assert(!line.contains("boom"), s"a failed query must not ship a timing: $line")
+  }
+
+  test("measureRuns: best-of-2, a third run on a >2x spread, more while breaching") {
+    def scripted(secs: Double*): () => Option[Double] = {
+      val it = secs.iterator
+      () => Some(it.next())
+    }
+    assert(Bench.measureRuns(3.0)(scripted(1.0, 1.5)).contains(Seq(1.0, 1.5)))
+    assert(Bench.measureRuns(3.0)(scripted(1.0, 2.5, 1.1)).contains(Seq(1.0, 2.5, 1.1)))
+    // both over the ceiling and still improving: up to 5 runs
+    assert(Bench.measureRuns(3.0)(scripted(5.0, 4.8, 4.6, 4.4, 4.2))
+      .contains(Seq(5.0, 4.8, 4.6, 4.4, 4.2)))
+    // a failure on the third run fails the query
+    val failThird = { var n = 0; () => { n += 1; if (n == 3) None else Some(n * 4.0) } }
+    assert(Bench.measureRuns(3.0)(failThird).isEmpty)
   }
 }
