@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 object Bench {
 
@@ -82,7 +81,8 @@ object Bench {
     * per-source fertility rollup), and the Gonzalez FPS coreset rounds.
     * Their cost at local[32]/sf0.1 is SERIAL JOB
     * DEPTH (8-10 dependent stage jobs x the ~0.3 s scheduler+barrier
-    * floor), not per-stage work — profiled via SPARK_GRAFT_BARRIER_DEBUG.
+    * floor), not per-stage work (per-barrier creation times measured in
+    * round 6, SCALE.md "Measured scaling curve").
     * Since r9 the capstones share ONE session-pinned prep prefix
     * (ScaleQueries.corpusStages + the v7/v8 shared encode): the first
     * capstone run of a session materializes it once, every later run and
@@ -243,7 +243,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // clean-run gates: pre-existing load (before our JVM ramps) and the
     // worst per-interval foreign-core burn observed during the run
     val gateLoad1 = sys.env.getOrElse("SPARK_GRAFT_LOAD1_GATE", "4.0").toDouble
@@ -294,13 +293,7 @@ object Bench {
         }
       }
     }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     spark.sparkContext.setLogLevel("WARN")
     // noop sink, not count(): count() lets Catalyst prune every projection
     // (a key-derivation query would degenerate to a scan row count) — the

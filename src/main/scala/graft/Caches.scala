@@ -26,28 +26,11 @@ object Caches {
     df.persist()
   }
 
-  /** Eager localCheckpoint() + track the checkpoint blocks for release.
-    * For iterative operators (scale/Clusters): persist() alone caches data
-    * but keeps the logical plan nested, and self-join loops double the plan
-    * per round — analysis itself blows up after ~6 rounds. Checkpointing
-    * truncates lineage to the materialized rows. (On a real cluster a
-    * reliable checkpoint() to durable storage is the fault-tolerant form;
-    * executor-local blocks are the right trade for these small label
-    * tables.)
-    */
-  def localCheckpoint(df: DataFrame): DataFrame = synchronized {
-    val sc = df.sparkSession.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    val out = df.localCheckpoint()
-    liveRddIds ++= sc.getPersistentRDDs.keySet.diff(before).map(sc -> _)
-    out
-  }
-
-  /** Lazy localCheckpoint: truncates lineage like [[localCheckpoint]] but
+  /** Lazy localCheckpoint: truncates lineage to the materialized rows but
     * defers materialization into the first action that touches the frame —
-    * no extra serialized job, unlike the eager form (measured: eager
-    * barriers in corpus_prepare_v4 cost ~3.5 s of additional
-    * materialization jobs at sf0.1).
+    * no extra serialized job, unlike the eager `localCheckpoint()`
+    * (measured: eager barriers in corpus_prepare_v4 cost ~3.5 s of
+    * additional materialization jobs at sf0.1).
     *
     * This is the cure for combinatorial ANALYZED-plan growth, a distinct
     * failure mode from recompute: a multi-stage pipeline whose stages each
@@ -68,22 +51,19 @@ object Caches {
   def lazyBarrier(df: DataFrame): DataFrame = synchronized {
     val sc = df.sparkSession.sparkContext
     val before = sc.getPersistentRDDs.keySet
-    // SPARK_GRAFT_BARRIER_DEBUG=1 prints per-barrier creation cost: under
-    // AQE, localCheckpoint(eager=false) still materializes the subtree's
-    // query stages at CREATION time, so this is where a staged pipeline's
-    // wall-clock actually goes (see tools.StageProbe)
-    val t0 = System.nanoTime()
+    // under AQE, localCheckpoint(eager=false) still materializes the
+    // subtree's query stages at CREATION time, so this is where a staged
+    // pipeline's wall-clock actually goes (per-barrier times measured in
+    // round 6, SCALE.md "Measured scaling curve"; per-layer barrier counts
+    // are in the perfbench trace)
     val out = df.localCheckpoint(eager = false)
-    if (sys.env.contains("SPARK_GRAFT_BARRIER_DEBUG"))
-      System.err.println(f"[barrier] ${(System.nanoTime() - t0) / 1e9}%.3f s  " +
-        df.queryExecution.logical.getClass.getSimpleName)
     liveRddIds ++= sc.getPersistentRDDs.keySet.diff(before).map(sc -> _)
     out
   }
 
   /** Eager reliable checkpoint() — lineage cut to files under
     * `sc.setCheckpointDir`, surviving executor loss. The durable sibling of
-    * [[localCheckpoint]] for iterative operators on unreliable executors:
+    * [[lazyBarrier]] for iterative operators on unreliable executors:
     * same lineage truncation, but a lost executor replays from storage
     * instead of failing the job (local checkpoint blocks are
     * non-replicated executor state). Costs one write+read of the frame per
@@ -177,14 +157,7 @@ object Caches {
     * only for frames registered through [[sessionMemo]], whose lifetime is
     * the session, not the query.
     */
-  def pinnedBarrier(df: DataFrame): DataFrame = {
-    val t0 = System.nanoTime()
-    val out = df.localCheckpoint(eager = false)
-    if (sys.env.contains("SPARK_GRAFT_BARRIER_DEBUG"))
-      System.err.println(f"[barrier pinned] ${(System.nanoTime() - t0) / 1e9}%.3f s  " +
-        df.queryExecution.logical.getClass.getSimpleName)
-    out
-  }
+  def pinnedBarrier(df: DataFrame): DataFrame = df.localCheckpoint(eager = false)
 
   /** Unpersist every tracked frame and clear the registry. */
   def release(): Unit = synchronized {

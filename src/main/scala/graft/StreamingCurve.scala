@@ -337,20 +337,12 @@ object StreamingCurve {
     val work = if (args.length > 1) args(1) else "/tmp/graft_streamcurve"
     val mults = (if (args.length > 2) args(2).split(",").toSeq.map(_.trim)
                  else Seq("1", "5", "10")).map(_.toInt)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // transformWithState (the hh arm) requires the multi-column-family
-      // RocksDB provider; the admission arms are provider-agnostic
-      .config("spark.sql.streaming.stateStore.providerClass",
+    // transformWithState (the hh arm) requires the multi-column-family
+    // RocksDB provider; the admission arms are provider-agnostic
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt,
+      "spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.Hashing.register(spark)
     val docs = graft.sources.Tables.documents(spark, src)
       .select("doc_id", "text", "source")
     val vecs = graft.sources.Tables.embeddings(spark, src)

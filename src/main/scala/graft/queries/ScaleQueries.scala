@@ -29,7 +29,7 @@ object ScaleQueries {
     * and reused, exactly like the v9 capstones' pinned fixture frames.
     * Warm runs then measure decode + the operator, not repeated JPEG/AVI/
     * WAV synthesis (measured: fixture encode was 25-30% of the warm time
-    * of the mm pixel/hash queries — tools.MediaFixtureProbe). At
+    * of the mm pixel/hash queries, r13 — OPTIMIZATION_r13.md). At
     * production scale the media bytes are INPUT read from storage; the
     * inline synthesis exists only because fixtures are formula-planted.
     * Results are unchanged: the pinned frame is byte-identical to the
@@ -1711,7 +1711,16 @@ object ScaleQueries {
     // with it the Σ n_c² within-cluster verify work — stays small at this
     // corpus size; nLists ∝ corpus is the SemDeDup knob.
     "corpus_prepare_v4" -> QueryDef(
-      build = (s, dir) => corpusV4Stages(s, dir).last._2,
+      build = (s, dir) => {
+        val capped = Sampling.capPerGroup(corpusStages(s, dir).sem, "doc_id",
+          "source", cap = 18, salt = "prep4")
+        Sampling.assignSplits(capped, "doc_id",
+            Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1), salt = "split4")
+          .groupBy("split")
+          .agg(count(lit(1)).as("n_docs"), sum("doc_id").as("sum_ids"),
+            countDistinct("source").as("n_sources"))
+          .orderBy("split")
+      },
       oracle = Some(corpusV4Oracle),
       doc = "Capstone v4: v3 + decontamination gate + SemDeDup semantic dedup — the full training-data dataflow"),
 
@@ -2311,7 +2320,7 @@ object ScaleQueries {
     * derive the identical normalize → quality-gate → exact-dedup
     * (→ LSH → decontaminate → SemDeDup) prefix. Re-deriving it per query
     * cost each capstone ~1.5 s of pure serial barrier materialization at
-    * sf0.1 (SPARK_GRAFT_BARRIER_DEBUG profiling; corpus_prepare_v5
+    * sf0.1 (per-barrier timings, r9 — SCALE.md round 9; corpus_prepare_v5
     * breached its 4.0 s deep ceiling on a QUIET host purely on that
     * depth). On a cluster this is exactly the production posture:
     * materialize the curated staging table once, point every downstream
@@ -2405,12 +2414,6 @@ object ScaleQueries {
     (st.scored, st.ded)
   }
 
-  /** The v4 capstone pipeline exposed as named stage frames so
-    * `tools.StageProbe` can time each stage in isolation; the registered
-    * query consumes only the final frame. Stage semantics documented at
-    * the query registration above; the stage frames themselves are the
-    * session-pinned [[corpusStages]].
-    */
   /** The mm_video_pair_dedup planted fixture (keyframe hashes + container-
     * extracted captions), session-pinned: demux + decode + hash + caption
     * extraction run once; warm runs measure the joint-class operator.
@@ -2438,82 +2441,6 @@ object ScaleQueries {
     }
   }
 
-  /** mm_video_pair_dedup exposed as named stage frames for
-    * `tools.StageProbe` ("videopair" mode) — the registered query consumes
-    * only the final frame; the cc stage re-derives the namespaced edge
-    * union inline so its timing isolates the CC rounds from edge
-    * generation and joint-class assembly.
-    */
-  private[graft] def videoPairStages(s: SparkSession, dir: String): Seq[(String, DataFrame)] = {
-    val (fph, qualified, caps) = videoPairFixture(s, dir)
-    val vidEdges = AviMjpeg.videoDupPairsQualified(qualified, fph,
-        maxHamming = 4, minMatch = 2)
-      .select(col("video_a").as("doc_a"), col("video_b").as("doc_b"))
-    val wTr = Window.partitionBy("cap_sha256")
-    val txtClusters = caps
-      .select(col("doc_id").as("pair_id"),
-        min("doc_id").over(wTr).as("txt_cc"))
-    val cc = Clusters.connectedComponents(vidEdges, "doc_a", "doc_b")
-    val fin = CrossModal.pairDedupFromEdgesResolvedTxt(
-        caps.select(col("doc_id").as("pair_id")), vidEdges, txtClusters)
-      .orderBy("pair_id")
-    Seq("vid_edges" -> vidEdges, "txt_clusters" -> txtClusters,
-      "cc_rounds" -> cc, "final" -> fin)
-  }
-
-  /** mm_audio_pair_dedup stage frames for `tools.StageProbe`
-    * ("audiopair" mode).
-    */
-  private[graft] def audioPairStages(s: SparkSession, dir: String): Seq[(String, DataFrame)] = {
-    val fin = defs("mm_audio_pair_dedup").build(s, dir)
-    import s.implicits._
-    val d = docs(s, dir).filter(col("doc_id") % 4 === 1)
-    val fp = graft.Caches.sessionMemo[DataFrame](s, s"mmAudioPair:$dir") {
-      sys.error("fixture must already be pinned by the build above")
-    }
-    val b = MediaDedup.capBandBuckets(MediaDedup.bandRows(fp), maxBucket = 64)
-    val l = b.select(col("doc_id").as("doc_a"), col("band"), col("v"),
-      col("b0").as("a0"), col("b1").as("a1"), col("b2").as("a2"),
-      col("b3").as("a3"))
-    val r = b.select(col("doc_id").as("doc_b"), col("band"), col("v"),
-      col("b0").as("x0"), col("b1").as("x1"), col("b2").as("x2"),
-      col("b3").as("x3"))
-    val audEdges = l.join(r, Seq("band", "v"))
-      .filter(col("doc_a") < col("doc_b"))
-      .filter(expr("CAST(bit_count(a0 ^ x0) + bit_count(a1 ^ x1) + " +
-        "bit_count(a2 ^ x2) + bit_count(a3 ^ x3) AS INT)") <= 2)
-      .select("doc_a", "doc_b").distinct()
-    val caps = d.select(col("doc_id").as("pair_id"), col("text"))
-    val txtClusters = caps
-      .select(col("pair_id"), sha2(encode(col("text"), "UTF-8"), 256).as("dg"))
-      .select(col("pair_id"), min("pair_id").over(
-        Window.partitionBy("dg")).as("txt_cc"))
-    val cc = Clusters.connectedComponents(audEdges, "doc_a", "doc_b")
-    Seq("aud_edges" -> audEdges, "txt_clusters" -> txtClusters,
-      "cc_rounds" -> cc, "final" -> fin)
-  }
-
-  private[graft] def corpusV4Stages(s: SparkSession, dir: String): Seq[(String, DataFrame)] = {
-        val st = corpusStages(s, dir)
-        val near = st.ded.join(st.lshDropped, Seq("doc_id"), "left_anti")
-        val capped = Sampling.capPerGroup(st.sem, "doc_id", "source", cap = 18,
-          salt = "prep4")
-        val fin = Sampling.assignSplits(capped, "doc_id",
-            Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1), salt = "split4")
-          .groupBy("split")
-          .agg(count(lit(1)).as("n_docs"), sum("doc_id").as("sum_ids"),
-            countDistinct("source").as("n_sources"))
-          .orderBy("split")
-        Seq("normalize_quality" -> st.scored, "gate_exact_dedup" -> st.ded,
-          "lsh_near_dedup" -> near, "decontaminate" -> st.clean,
-          "semantic_dedup" -> st.sem, "cap_split_agg" -> fin)
-  }
-
-  /** The v7/v8 shared encode (sample-trained BPE over the dedup survivors,
-    * per-doc token counts) — session-pinned for the same reason as
-    * [[corpusStages]]: two capstones derive it identically and it carries
-    * a multi-round trainer subtree.
-    */
   /** Session-pinned exact retrieval ground truth (r13): the brute-force
     * top-10 over the 5% query sample is the MEASURING STICK four eval
     * queries compare their ANN arms against (emb_ivf_recall,
@@ -5756,14 +5683,12 @@ object ScaleQueries {
     // hash-checked, not just the scores.
     "emb_ivf_quant_auto" -> QueryDef(
       build = (s, dir) => {
-        // the same sqrt-N geometry ivfQuantizedTopKAuto derives, with the
-        // corpus-count scalar memoized per session (one probe job, not
-        // one per run — the vecPlanNot4 memo class)
+        // the corpus-count scalar is memoized per session (one probe job,
+        // not one per run — the vecPlanNot4 memo class)
         val e = embs(s, dir)
         val n = graft.Caches.sessionMemo(s, s"nEmbs:$dir")(e.count())
         Quant.ivfQuantizedTopK(e, "vec_id", "embedding", k = 3,
-            nLists = math.max(8, math.ceil(math.sqrt(n.toDouble)).toInt),
-            nProbe = 2)
+            nLists = Quant.autoLists(n), nProbe = 2)
           .orderBy("query_id", "rank")
       },
       oracle = Some {

@@ -102,21 +102,13 @@ object Bpe {
     var toks = graft.Caches.lazyBarrier(
       tokenize(docs, idCol, textCol, sampleOneIn))
     var merges = Vector.empty[Merge]
-    val barrierEvery = sys.env.getOrElse("BPE_BARRIER_EVERY", "1").toInt
-    def maybeBarrier(r: Int, df: DataFrame): DataFrame =
-      if (barrierEvery > 0 && r % barrierEvery == 0)
-        graft.Caches.lazyBarrier(df)
-      else df
 
     for (r <- 1 to rounds) {
       val withNext = toks.withColumn("nxt", lead("tok", 1).over(w))
-      val tH = System.nanoTime()
       val bestRow = withNext.filter(col("nxt").isNotNull)
         .groupBy("tok", "nxt").agg(count(lit(1)).as("bn"))
         .orderBy(col("bn").desc, col("tok"), col("nxt")).limit(1)
         .head()
-      if (sys.env.contains("BPE_DEBUG"))
-        System.err.println(f"[bpe] round $r head: ${(System.nanoTime()-tH)/1e9}%.3f s")
       val (ba, bb, bn) =
         (bestRow.getString(0), bestRow.getString(1), bestRow.getLong(2))
       merges = merges :+ Merge(r, ba, bb, bn)
@@ -125,7 +117,9 @@ object Bpe {
       // only needed by tokens/corpus callers
       if (r == rounds && !needToks) return (toks, merges)
 
-      toks = maybeBarrier(r, applyMerge(withNext, ba, bb))
+      // one barrier per round: the next round's window and argmax read
+      // this table, not a plan that re-applies every earlier merge
+      toks = graft.Caches.lazyBarrier(applyMerge(withNext, ba, bb))
     }
     (toks, merges)
   }

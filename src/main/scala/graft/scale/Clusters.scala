@@ -154,8 +154,6 @@ object Clusters {
       done = stable(jumped)
       labels = jumped
       iter += 1
-      if (sys.env.contains("SPARK_GRAFT_CC_DEBUG"))
-        System.err.println(s"[cc] round $iter done=$done")
     }
     // an unconverged label table is silently WRONG dedup output — fail
     // loudly; with 3 doublings, 16 rounds resolve diameters far beyond

@@ -8,59 +8,29 @@ import org.apache.spark.sql.functions._
   * Every band-blocked join in the engine (text LSH, image aHash, video
   * keyframe bands, audio fingerprint bands, all admission probes, both
   * CrossModal edges) routes through here, so the physical strategy is
-  * ONE decision, measured once (tools.StageProbe `capcost` mode) instead
-  * of five copies drifting apart.
+  * ONE decision instead of five copies drifting apart. The DuckDB
+  * bcnt/qband oracle CTEs replay it.
   *
-  * Two physical plans with IDENTICAL semantics (the DuckDB bcnt/qband
-  * oracle CTEs replay either, unchanged):
-  *
-  *  - `window`: `count().over(Window.partitionBy(keys))` + filter. The
-  *    window partitions on the SAME key the downstream self-join shuffles
-  *    on, so the exchange is shared — and because Spark's default
-  *    equi-join is sort-merge, the window's sort is the sort SMJ needs
-  *    anyway. One pass over the input.
-  *  - `twophase`: aggregate `keys → n` (map-side combinable partials —
-  *    only (key, count) rows shuffle), keep keys with n > maxBucket (a
-  *    set bounded by N/maxBucket, near-empty on non-degenerate content),
-  *    LEFT ANTI join the input against it (AQE broadcasts the hot set
-  *    when small). No sort — but the input subtree is computed TWICE
-  *    (agg + join sides) unless the caller checkpointed it, which is the
-  *    wrong trade whenever the band rows derive from a decode pass.
+  * The plan is `count().over(Window.partitionBy(keys))` + filter. The
+  * window partitions on the SAME key the downstream self-join shuffles
+  * on, so the exchange is shared — and because Spark's default equi-join
+  * is sort-merge, the window's sort is the sort SMJ needs anyway. One
+  * pass over the input.
   *
   * Measured at ×1 on non-degenerate registry content (sf0.1, r13 —
-  * SCALE.md "cap cost at ×1"): the window form is the default; the
-  * toggle exists so the probe can re-measure both on future content.
+  * SCALE.md "cap cost at ×1"): a two-phase alternative (map-side
+  * `keys → n` aggregate + LEFT ANTI join of the hot keys) was within ±8 %
+  * on five of six queries and 65 % slower on `mm_dedup_eval`, whose band
+  * rows it computes twice; on content with real hot buckets the window
+  * pays for itself by pruning rows.
   */
 object HotBuckets {
 
-  /** "window" | "twophase" | "off" — process-wide, settable for
-    * measurement via `-Dgraft.capMode=...` or `sys.props`. "off" skips
-    * suppression entirely and exists ONLY for the probe's no-cap
-    * baseline; registry queries must never run with it (their oracles
-    * replay the cap).
-    */
-  def mode: String = sys.props.getOrElse("graft.capMode", "window")
-
   def cap(b: DataFrame, keys: Seq[String], maxBucket: Int): DataFrame =
     if (maxBucket == Int.MaxValue) b // genuinely uncapped (skew-gate arms)
-    else mode match {
-      case "off"      => b
-      case "twophase" => twoPhase(b, keys, maxBucket)
-      case _          => window(b, keys, maxBucket)
-    }
-
-  private def window(b: DataFrame, keys: Seq[String], maxBucket: Int): DataFrame =
-    b.withColumn("bucket_n",
+    else b.withColumn("bucket_n",
         count(lit(1)).over(org.apache.spark.sql.expressions.Window
           .partitionBy(keys.map(col): _*)))
       .filter(col("bucket_n") <= maxBucket)
       .drop("bucket_n")
-
-  private def twoPhase(b: DataFrame, keys: Seq[String], maxBucket: Int): DataFrame = {
-    val hot = b.groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).as("bucket_n"))
-      .filter(col("bucket_n") > maxBucket)
-      .select(keys.map(col): _*)
-    b.join(hot, keys, "left_anti")
-  }
 }

@@ -126,21 +126,15 @@ object Quant {
         col("qscore"), col("rank"))
   }
 
-  /** [[ivfQuantizedTopK]] with the CORPUS-SCALED list count — the auto
-    * form of the documented knob: nLists = max(8, ⌈√N⌉), so expected
-    * within-list candidate pairs stay O(N·√N·nProbe / 1) ≈ linear-ish in
-    * N instead of O(N²/const). Measured (ScaleCurve ×10, 20 k vectors):
-    * fixed nLists=8 runs 13.5 s; this form stays in low seconds. The
-    * one-row count is a bounded driver-side scalar (same class as the
-    * percentile-threshold builds); the oracle replays the same
+  /** The CORPUS-SCALED list count for [[ivfQuantizedTopK]] over `n`
+    * vectors — the auto form of the documented knob: nLists =
+    * max(8, ⌈√N⌉), so expected within-list candidate pairs stay
+    * O(N·√N·nProbe / 1) ≈ linear-ish in N instead of O(N²/const).
+    * Measured (ScaleCurve ×10, 20 k vectors): fixed nLists=8 runs 13.5 s;
+    * this geometry stays in low seconds. Oracles replay the same
     * GREATEST(8, CEIL(SQRT(COUNT(*)))) so the geometry is hash-checked.
     */
-  def ivfQuantizedTopKAuto(corpus: DataFrame, idCol: String, vecCol: String,
-                           k: Int, nProbe: Int = 1): DataFrame = {
-    val n = corpus.count()
-    val nLists = math.max(8, math.ceil(math.sqrt(n.toDouble)).toInt)
-    ivfQuantizedTopK(corpus, idCol, vecCol, k, nLists, nProbe)
-  }
+  def autoLists(n: Long): Int = math.max(8, math.ceil(math.sqrt(n.toDouble)).toInt)
 
   /** Top-k cosine over int8-quantized vectors — same plan shape as the
     * exact [[Similarity.bruteForceTopK]] (queries broadcast, corpus

@@ -31,15 +31,15 @@ object Tables {
     *
     * `spark.read.parquet` re-lists the path and re-reads parquet footers
     * for schema inference on EVERY call — measured 59 ms of driver time
-    * per call at sf0.1 (tools.ProbeRead), paid inside the timed region of
-    * every bench run of every query. Reusing the resolved relation is
-    * metadata caching only: no rows are persisted, every action still
-    * computes from the parquet files. This is the session-scale analog of
-    * resolving tables through a catalog/manifest instead of re-listing
-    * the filesystem per query (optimization guide §6); fixture dirs are
-    * immutable for the life of a session, so the cached listing cannot go
-    * stale here (a mutable production table would resolve through a real
-    * catalog instead).
+    * per call at sf0.1 (OPTIMIZATION_r13.md §1), paid inside the timed
+    * region of every bench run of every query. Reusing the resolved
+    * relation is metadata caching only: no rows are persisted, every
+    * action still computes from the parquet files. This is the
+    * session-scale analog of resolving tables through a catalog/manifest
+    * instead of re-listing the filesystem per query (optimization guide
+    * §6); fixture dirs are immutable for the life of a session, so the
+    * cached listing cannot go stale here (a mutable production table
+    * would resolve through a real catalog instead).
     */
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
     graft.Caches.sessionMemo(spark, s"tables:$dir/$name")(

@@ -1,10 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for named registry queries (or all) to
-  * files — the r13 optimization round's before/after plan evidence
-  * (`plans/r13/<query>_{before,after}.txt`).
+  * files: the plan-inspection tool for auditing scan pruning
+  * (ReadSchema), filter pushdown (PushedFilters), join strategies and
+  * WholeStageCodegen spans, and the before/after plan evidence of an
+  * optimization round (`plans/r13/<query>_{before,after}.txt`).
   *
   * Usage:
   *   sbt 'runMain graft.tools.PlanDump <outDir> <suffix> [query ...]'
@@ -22,14 +22,7 @@ object PlanDump {
     val suffix = args(1)
     val names = args.drop(2).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("WARN")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     val sel = if (names.nonEmpty) names else graft.SparkEntry.queries.keys.toSeq.sorted

@@ -8,10 +8,12 @@
 #   4. clean-run benchmark at sf0.1       (graft.Bench — JSON with clean
 #                                          flag, per-query spreads,
 #                                          ceiling-breach list)
+#   5. gated-benchmark self-test          (perfbench/run.py --self-test —
+#                                          the harness BENCHMARK.json runs)
 #
 # Usage: tools/repro.sh [sf_dir=/root/testdata/sf0.01] [bench_sf_dir=/root/testdata/sf0.1]
 #   REPRO_SKIP_TESTS=1  skip step 1
-#   REPRO_SKIP_BENCH=1  skip step 4 (e.g. on a busy host — the bench
+#   REPRO_SKIP_BENCH=1  skip steps 4-5 (e.g. on a busy host — the bench
 #                       stamps contention evidence, but won't be 'clean')
 #   REPRO_QUERIES=a,b   restrict steps 2-3 to a comma-separated subset
 set -euo pipefail
@@ -24,20 +26,20 @@ OUT="$(mktemp -d /tmp/graft_repro.XXXXXX)"
 echo "== graft repro: verify=$SF_DIR bench=$BENCH_SF_DIR out=$OUT"
 
 if [[ -z "${REPRO_SKIP_TESTS:-}" ]]; then
-  echo "== [1/4] sbt test"
+  echo "== [1/5] sbt test"
   sbt -batch test
 else
-  echo "== [1/4] skipped (REPRO_SKIP_TESTS)"
+  echo "== [1/5] skipped (REPRO_SKIP_TESTS)"
 fi
 
-echo "== [2/4] correctness dump -> $OUT"
+echo "== [2/5] correctness dump -> $OUT"
 if [[ -n "${REPRO_QUERIES:-}" ]]; then
   sbt -batch "runMain graft.Verify $SF_DIR $OUT $REPRO_QUERIES"
 else
   sbt -batch "runMain graft.Verify $SF_DIR $OUT"
 fi
 
-echo "== [3/4] DuckDB oracle compare"
+echo "== [3/5] DuckDB oracle compare"
 if [[ -n "${REPRO_QUERIES:-}" ]]; then
   # subset mode: queries not dumped report 'no spark output' — show only
   # the dumped ones (their PASS/FAIL lines; the global tally counts the
@@ -50,11 +52,13 @@ else
 fi
 
 if [[ -z "${REPRO_SKIP_BENCH:-}" ]]; then
-  echo "== [4/4] bench at $BENCH_SF_DIR (needs an idle host for clean:true)"
+  echo "== [4/5] bench at $BENCH_SF_DIR (needs an idle host for clean:true)"
   SPARK_GRAFT_SF_DIR="$BENCH_SF_DIR" SPARK_GRAFT_CPUS=32 \
     sbt -batch 'runMain graft.Bench' | grep -E '^\[info\] \{|^\{' || true
+  echo "== [5/5] perfbench self-test"
+  python3 perfbench/run.py --self-test
 else
-  echo "== [4/4] skipped (REPRO_SKIP_BENCH)"
+  echo "== [4-5/5] skipped (REPRO_SKIP_BENCH)"
 fi
 
 echo "== repro complete; correctness artifacts in $OUT"
