@@ -8,21 +8,59 @@ import scala.collection.mutable
   * persisted (HOF columns don't codegen, so multi-referenced derivations
   * recompute without a barrier — see NearDup.withSignatures); without a
   * paired unpersist those blocks accumulate in executor storage for the
-  * lifetime of the session. Verify/Bench call [[release]] after each query;
-  * a spec asserts nothing stays cached.
+  * lifetime of the session. A spec asserts nothing stays cached.
   *
-  * [[release]] is session-global, so code that runs beside other queries
-  * scopes its barrier itself instead: ConsumePipeline cuts each
-  * micro-batch with a lazy local checkpoint and unpersists exactly that
-  * barrier's blocks when the batch body exits.
+  * Two ways to release them:
+  *   - [[scoped]] for code that runs beside other queries in the session —
+  *     every streaming batch body: it releases exactly the frames and
+  *     barriers registered inside its body on the current thread, when the
+  *     body exits, whether it succeeds or throws;
+  *   - [[release]] for a driver that owns the whole session and runs one
+  *     query at a time (Verify, Bench, ScaleCurve, the tools): it releases
+  *     everything registered outside any scope.
   */
 object Caches {
-  private val live = mutable.ArrayBuffer.empty[DataFrame]
-  private val liveRddIds = mutable.ArrayBuffer.empty[(org.apache.spark.SparkContext, Int)]
+  /** Frames and checkpoint RDDs registered in one release domain. */
+  private final class Tracked {
+    val frames = mutable.ArrayBuffer.empty[DataFrame]
+    val rddIds = mutable.ArrayBuffer.empty[(org.apache.spark.SparkContext, Int)]
+
+    def release(): Unit = {
+      frames.foreach(_.unpersist())
+      frames.clear()
+      rddIds.foreach { case (sc, id) =>
+        sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false))
+      }
+      rddIds.clear()
+    }
+  }
+
+  private val global = new Tracked
+  // the innermost scoped() body running on this thread, else the global
+  // domain; a plain (non-inheritable) thread local, so a thread started
+  // inside a body does not register into a scope that has already exited
+  private val scope = ThreadLocal.withInitial[Tracked](() => global)
+  private def current: Tracked = scope.get
+
+  /** Runs `body` as its own release domain: whatever it registers through
+    * [[persist]] or [[lazyBarrier]] on this thread — kernels included — is
+    * released when it exits, success or not. Frames registered outside
+    * `body` are untouched.
+    */
+  def scoped[T](body: => T): T = {
+    val outer = scope.get
+    val mine = new Tracked
+    scope.set(mine)
+    try body
+    finally {
+      scope.set(outer)
+      synchronized(mine.release())
+    }
+  }
 
   /** persist() + track for later release. */
   def persist(df: DataFrame): DataFrame = synchronized {
-    live += df
+    current.frames += df
     df.persist()
   }
 
@@ -57,7 +95,7 @@ object Caches {
     // round 6, SCALE.md "Measured scaling curve"; per-layer barrier counts
     // are in the perfbench trace)
     val out = df.localCheckpoint(eager = false)
-    liveRddIds ++= sc.getPersistentRDDs.keySet.diff(before).map(sc -> _)
+    current.rddIds ++= sc.getPersistentRDDs.keySet.diff(before).map(sc -> _)
     out
   }
 
@@ -159,13 +197,8 @@ object Caches {
     */
   def pinnedBarrier(df: DataFrame): DataFrame = df.localCheckpoint(eager = false)
 
-  /** Unpersist every tracked frame and clear the registry. */
-  def release(): Unit = synchronized {
-    live.foreach(_.unpersist())
-    live.clear()
-    liveRddIds.foreach { case (sc, id) =>
-      sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false))
-    }
-    liveRddIds.clear()
-  }
+  /** Unpersist every frame tracked outside a [[scoped]] body and clear
+    * that registry.
+    */
+  def release(): Unit = synchronized(global.release())
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import graft.operators.{Dedup, Retry, Validation}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.Row
@@ -28,10 +27,11 @@ import org.apache.spark.sql.Row
   *     `foreachBatch`, and each micro-batch is computed ONCE: the batch
   *     `foreachBatch` hands over is a plan over the micro-batch RDD, so
   *     each of the three appends would re-run its post-shuffle half — the
-  *     dedup state store's load, update and commit included. A lazy local
-  *     checkpoint cuts that lineage; the first append materializes it,
-  *     the other two read its blocks, and the blocks are released when the
-  *     batch body exits, success or not.
+  *     dedup state store's load, update and commit included. A
+  *     `Caches.lazyBarrier` cuts that lineage; the first append
+  *     materializes it, the other two read its blocks, and the batch body
+  *     runs inside `Caches.scoped`, so exactly those blocks are released
+  *     when it exits, success or not.
   *
   * Delivery across the three sinks is at-least-once, not exactly-once:
   * the appends are three separate writes, so a crash between two of them
@@ -133,20 +133,13 @@ object ConsumePipeline {
     val writer: DataStreamWriter[Row] = deduped.writeStream
       .option("checkpointLocation", s"$outDir/_checkpoint")
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        // one lineage cut per micro-batch (see the object doc): the first
-        // append materializes it, and exactly its blocks are released here
-        // — never via Caches.release(), which would drop frames other
-        // queries in the session hold
-        val once = batch.localCheckpoint(eager = false)
-        try {
-          val routed = route(once, cfg, failurePredicate)
+        // one lineage cut per micro-batch (see the object doc)
+        graft.Caches.scoped {
+          val routed = route(graft.Caches.lazyBarrier(batch), cfg, failurePredicate)
           routed.processed.write.mode("append").parquet(s"$outDir/processed")
           routed.dlq.write.mode("append").parquet(s"$outDir/dlq")
           routed.retry.write.mode("append").parquet(s"$outDir/retry")
-        } finally once.queryExecution.logical.collectFirst {
-          case r: LogicalRDD => r.rdd.unpersist(blocking = false)
         }
-        ()
       }
     (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
   }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.Envelope
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -26,7 +26,11 @@ object ReplayJob {
 
   /** Streams `sourceDir` (parquet, `schema`) through the time-bound (F6) +
     * user filter (F5), stamps the S10 replay projection, and appends to
-    * `outDir/replayed` until the source is drained.
+    * `outDir/replayed` until the source is drained. The output is
+    * exactly-once: the parquet file sink commits each batch to its
+    * `_spark_metadata` log and skips a batch that log already holds, so a
+    * restart that replays a batch whose checkpoint commit was lost does
+    * not append it twice.
     */
   def start(spark: SparkSession, sourceDir: String, schema: StructType,
             outDir: String, cfg: Config): StreamingQuery = {
@@ -39,12 +43,10 @@ object ReplayJob {
       .withColumn("replay_target", concat(col("topic"), lit(cfg.targetSuffix)))
       .withColumn("replay_original_offset", col("event_id"))
       .writeStream
+      .format("parquet")
+      .option("path", s"$outDir/replayed")
       .option("checkpointLocation", s"$outDir/_checkpoint")
       .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").parquet(s"$outDir/replayed")
-        ()
-      }
       .start()
   }
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.scale.NearDup
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -10,16 +10,11 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * (1) near-dup'd WITHIN the batch (LSH candidates + signature agreement,
   * smaller id survives), (2) admitted against the persisted signature
   * index, and (3) appended — both the surviving documents and their index
-  * rows — partitioned by batch id with dynamic partition overwrite, so a
-  * replayed micro-batch overwrites its own partition instead of
-  * double-appending (checkpoint-replay idempotency without a transaction
-  * log).
+  * rows — under the [[Admission]] replay protocol.
   *
-  * The index directory is the ONLY cross-batch state: no executor state
-  * store, so corpus size is bounded by object storage, not cluster memory
-  * — the property that lets a dedup'd corpus grow past any single
-  * cluster's state capacity. Per-batch cost is O(batch + bucket
-  * collisions), never O(corpus).
+  * The index directory is the ONLY cross-batch state, so a dedup'd corpus
+  * grows past any single cluster's state capacity. Per-batch cost is
+  * O(batch + bucket collisions), never O(corpus).
   */
 object StreamingAdmission {
 
@@ -45,111 +40,69 @@ object StreamingAdmission {
     * `rejectedDir`, when set, receives the batch's AUDIT SIDECAR: one
     * (doc_id, reason, batch_id) row per rejected doc — reason ∈
     * {contaminated, intra_batch_dup, index_dup}, the streaming twin of
-    * the batch `corpus_audit_trail` — written with the same per-batch
-    * dynamic partition overwrite, so replays stay idempotent.
+    * the batch `corpus_audit_trail`.
     */
   def admitBatch(batch: DataFrame, batchId: Long, indexDir: String,
                  admittedDir: String, minSigMatches: Int = 6,
                  gate: Option[DecontaminationGate] = None,
                  rejectedDir: Option[String] = None,
-                 tombstonesDir: Option[String] = None): Unit = {
-    val spark = batch.sparkSession
-    if (batch.isEmpty) return
-
-    def writeRejected(rows: Seq[DataFrame]): Unit = rejectedDir.foreach { dir =>
-      if (rows.nonEmpty)
-        rows.reduce(_ unionByName _)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode(SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id").parquet(dir)
-    }
-
-    // (0) decontamination gate, when configured: contaminated docs never
-    // reach dedup, the index, or the corpus. The probe carries the batch
-    // columns through — the clean side is a filter over the scored batch,
-    // not an anti-join back against it.
-    val scored = gate.map { g =>
-      graft.scale.Contamination
-        .scoreAgainstSet(g.suite, batch, "doc_id", g.shingleN, g.threshold)
-    }
-    val cleanBatch = scored.fold(batch)(
-      _.filter(!col("contaminated"))
-        .select(batch.columns.map(col).toIndexedSeq: _*))
-    val contaminatedRows = scored.toSeq.map(
-      _.filter(col("contaminated"))
-        .select(col("doc_id"), lit("contaminated").as("reason")))
-    if (cleanBatch.isEmpty) {
+                 tombstonesDir: Option[String] = None): Unit =
+    Admission.admit(batch, batchId, tombstonesDir) { b =>
+      // (0) decontamination gate, when configured: contaminated docs never
+      // reach dedup, the index, or the corpus. The probe carries the batch
+      // columns through — the clean side is a filter over the scored batch,
+      // not an anti-join back against it.
+      val scored = gate.map { g =>
+        graft.scale.Contamination
+          .scoreAgainstSet(g.suite, batch, "doc_id", g.shingleN, g.threshold)
+      }
+      val cleanBatch = scored.fold(batch)(
+        _.filter(!col("contaminated"))
+          .select(batch.columns.map(col).toIndexedSeq: _*))
+      val contaminatedRows = scored.toSeq.map(
+        _.filter(col("contaminated"))
+          .select(col("doc_id"), lit("contaminated").as("reason")))
       // everything was leaked eval content — the audit trail still ships
-      writeRejected(contaminatedRows)
-      return
+      if (cleanBatch.isEmpty) b.reject(rejectedDir, contaminatedRows)
+      else {
+        val sigs = NearDup.withSignatures(cleanBatch)
+
+        // (1) intra-batch near-dups: of any agreeing pair, the smaller id
+        // wins (fused band-bucket verify — NearDup.lshDuplicates,
+        // equivalence spec-pinned against the candidates + signature-join
+        // composition). Persisted when the sidecar is on (two consumers:
+        // the anti-join and the reason rows).
+        val intraDropped0 = NearDup.lshDuplicates(sigs, "doc_id", minSigMatches)
+        val intraDropped =
+          if (rejectedDir.isDefined) graft.Caches.persist(intraDropped0)
+          else intraDropped0
+        val intraSurvivors =
+          cleanBatch.join(intraDropped, Seq("doc_id"), "left_anti")
+
+        // (2) cross-shard admission against the index as of before this
+        // batch, tombstone-masked (see Admission for the replay guarantee)
+        val index = b.asOf(indexDir,
+          NearDup.signatureIndex(batch.limit(0), "doc_id"), "doc")
+        val verdicts0 = NearDup.admitAgainst(index, intraSurvivors, "doc_id",
+          minSigMatches = minSigMatches)
+        val verdicts =
+          if (rejectedDir.isDefined) graft.Caches.persist(verdicts0) else verdicts0
+        val admitted = intraSurvivors.join(
+          verdicts.filter(!col("is_dup")).select("doc_id"), Seq("doc_id"), "left_semi")
+
+        b.reject(rejectedDir, contaminatedRows ++ Seq(
+          intraDropped.select(col("doc_id"), lit("intra_batch_dup").as("reason")),
+          verdicts.filter(col("is_dup"))
+            .select(col("doc_id"), lit("index_dup").as("reason"))))
+
+        // (3) idempotent append: one partition per micro-batch (signatures
+        // reused from the stage frame, not recomputed)
+        b.append(sigs.join(admitted.select("doc_id"), Seq("doc_id"), "left_semi")
+          .select(col("doc_id").as("doc"), col("minhash_sig"),
+            posexplode(col("bands")).as(Seq("band_idx", "band_hash"))), indexDir)
+        b.append(admitted, admittedDir)
+      }
     }
-    val sigs = NearDup.withSignatures(cleanBatch)
-
-    // (1) intra-batch near-dups: of any agreeing pair, the smaller id wins
-    // (fused band-bucket verify — NearDup.lshDuplicates, equivalence
-    // spec-pinned against the candidates + signature-join composition).
-    // Persisted when the sidecar is on (two consumers: the anti-join and
-    // the reason rows).
-    val intraDropped0 = NearDup.lshDuplicates(sigs, "doc_id", minSigMatches)
-    val intraDropped =
-      if (rejectedDir.isDefined) graft.Caches.persist(intraDropped0)
-      else intraDropped0
-    val intraSurvivors = cleanBatch.join(intraDropped, Seq("doc_id"), "left_anti")
-
-    // (2) cross-shard admission against the persisted index AS OF before
-    // this batch: a replayed micro-batch filters out its own (and any
-    // later) partition — the INDEX side of a replay is exactly the state
-    // of the batch's first run (batch ids must be monotonically
-    // increasing; Structured Streaming guarantees it). Tombstones
-    // (right-to-be-forgotten, see graft.scale.Deletion) mask the index AT
-    // READ: the next batch's probe cannot match deleted content, so a
-    // near-dup of only-deleted content is ADMITTED — the pinned
-    // semantics. The physical rewrite (Deletion.rewritePurged) is a
-    // separate compaction concern. The replay guarantee is therefore
-    // verdict-exact only for a FIXED tombstone set: the mask is re-read
-    // at replay time, so a crash-recovery replay AFTER a tombstone append
-    // re-decides under the current set (a rejection whose only match was
-    // since deleted flips to admission). That is deletion law applied
-    // retroactively — a replay must not resurrect matches against purged
-    // content — and it is the deliberate trade: legal erasure outranks
-    // cross-purge verdict reproduction. Pipelines needing byte-stable
-    // replays must freeze tombstonesDir for the recovery window.
-    val tombstones = tombstonesDir
-      .filter(graft.io.Fs.exists(spark, _))
-      .map(spark.read.parquet(_))
-    val rawIndex =
-      if (graft.io.Fs.exists(spark, indexDir))
-        spark.read.parquet(indexDir).filter(col("batch_id") < batchId)
-      else NearDup.signatureIndex(batch.limit(0), "doc_id")
-    val index = tombstones.fold(rawIndex)(
-      t => graft.scale.Deletion.purge(rawIndex, t, "doc"))
-    val verdicts0 = NearDup.admitAgainst(index, intraSurvivors, "doc_id",
-      minSigMatches = minSigMatches)
-    val verdicts =
-      if (rejectedDir.isDefined) graft.Caches.persist(verdicts0) else verdicts0
-    val admitted = intraSurvivors.join(
-      verdicts.filter(!col("is_dup")).select("doc_id"), Seq("doc_id"), "left_semi")
-
-    writeRejected(contaminatedRows ++ Seq(
-      intraDropped.select(col("doc_id"), lit("intra_batch_dup").as("reason")),
-      verdicts.filter(col("is_dup"))
-        .select(col("doc_id"), lit("index_dup").as("reason"))))
-
-    // (3) idempotent append: one partition per micro-batch (signatures
-    // reused from the stage frame, not recomputed); dynamic overwrite is a
-    // per-write option — the shared session's conf is left untouched
-    sigs.join(admitted.select("doc_id"), Seq("doc_id"), "left_semi")
-      .select(col("doc_id").as("doc"), col("minhash_sig"),
-        posexplode(col("bands")).as(Seq("band_idx", "band_hash")))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(indexDir)
-    admitted.withColumn("batch_id", lit(batchId))
-      .write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(admittedDir)
-    graft.Caches.release()
-  }
 
   /** Start the continuous admission stream over a `(doc_id, text)` source.
     * `tombstonesDir`, when set, is re-read each micro-batch, so ids
@@ -160,11 +113,6 @@ object StreamingAdmission {
             gate: Option[DecontaminationGate] = None,
             rejectedDir: Option[String] = None,
             tombstonesDir: Option[String] = None): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        admitBatch(batch, id, indexDir, admittedDir, minSigMatches, gate,
-          rejectedDir, tombstonesDir)
-      }
-      .start()
+    Admission.start(docs, checkpoint)(admitBatch(_, _, indexDir, admittedDir,
+      minSigMatches, gate, rejectedDir, tombstonesDir))
 }

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import graft.scale.{AudioDedup, MediaDedup, Multimodal}
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode}
-import org.apache.spark.sql.functions._
+import graft.scale.AudioDedup
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Continuous audio-corpus growth: the streaming form of the energy-
@@ -13,18 +12,17 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * payloads are rejected with reason `undecodable`, never thrown on —
   * (2) fingerprinted and de-duplicated WITHIN the batch (band-bucket
   * join, Hamming ≤ `maxHamming`, smaller id wins), (3) admitted against
-  * the persisted band-row index AS OF before this batch (tombstones mask
-  * the index at read — [[graft.scale.Deletion]] semantics, the audio row
-  * of the right-to-be-forgotten family), and (4) appended idempotently,
-  * partitioned by batch id with dynamic partition overwrite.
+  * the persisted band-row index, and (4) appended under the [[Admission]]
+  * replay protocol.
   *
-  * The fingerprint shares [[MediaDedup]]'s four-16-bit-band layout, so
-  * steps (2)–(4) ARE the image twin's operators — hot-bucket caps
-  * included (a silent/flat clip is the audio analog of a blank image:
-  * one shared fingerprint bucket). Per-batch cost is O(batch +
-  * band-bucket collisions), never O(corpus); payload bytes never
-  * shuffle (decode happens scan-side), and the index probe moves only
-  * (band, v, 4×16-bit fingerprint) ints.
+  * The fingerprint shares [[graft.scale.MediaDedup]]'s four-16-bit-band
+  * layout, so the batch body IS the image twin's
+  * ([[StreamingMediaAdmission]]) with the fingerprint in place of the
+  * perceptual hash — hot-bucket caps included (a silent/flat clip is the
+  * audio analog of a blank image: one shared fingerprint bucket).
+  * Per-batch cost is O(batch + band-bucket collisions), never O(corpus);
+  * payload bytes never shuffle (decode happens scan-side), and the index
+  * probe moves only (band, v, 4×16-bit fingerprint) ints.
   */
 object StreamingAudioAdmission {
 
@@ -36,82 +34,16 @@ object StreamingAudioAdmission {
   def admitBatch(batch: DataFrame, batchId: Long, indexDir: String,
                  admittedDir: String, maxHamming: Int = 8,
                  rejectedDir: Option[String] = None,
-                 tombstonesDir: Option[String] = None): Unit = {
-    val spark = batch.sparkSession
-    import spark.implicits._
-    if (batch.isEmpty) return
-
-    def writeRejected(rows: Seq[DataFrame]): Unit = rejectedDir.foreach { dir =>
-      if (rows.nonEmpty)
-        rows.reduce(_ unionByName _)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode(SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id").parquet(dir)
-    }
-
-    // (1) decode + fingerprint (one pass over payloads, scan-side);
-    // undecodable payloads fall out of the frame, audited by anti-join
-    val media = batch.select(col("doc_id"), lit("audio").as("media_type"),
-      col("payload")).as[Multimodal.MediaRecord]
-    val fp = graft.Caches.persist(AudioDedup.fingerprintsWav(media).toDF())
-    val undecodable = batch.select("doc_id")
-      .join(fp.select("doc_id"), Seq("doc_id"), "left_anti")
-      .select(col("doc_id"), lit("undecodable").as("reason"))
-
-    // (2) intra-batch duplicates: smaller id wins (capped band join)
-    val intraDropped0 = MediaDedup.phashDuplicates(fp, maxHamming)
-    val intraDropped =
-      if (rejectedDir.isDefined) graft.Caches.persist(intraDropped0)
-      else intraDropped0
-    val intraSurvivors = fp.join(intraDropped, Seq("doc_id"), "left_anti")
-
-    // (3) admission against the index AS OF before this batch; tombstones
-    // mask at read (see StreamingAdmission's replay-guarantee note: the
-    // index side is replay-exact via the batch-id filter; the tombstone
-    // mask is current law, re-read per run)
-    val tombstones = tombstonesDir
-      .filter(graft.io.Fs.exists(spark, _))
-      .map(spark.read.parquet(_))
-    val rawIndex =
-      if (graft.io.Fs.exists(spark, indexDir))
-        spark.read.parquet(indexDir).filter(col("batch_id") < batchId)
-      else MediaDedup.bandRows(fp.limit(0))
-    val index = tombstones.fold(rawIndex)(
-      t => graft.scale.Deletion.purge(rawIndex, t, "doc_id"))
-    val verdicts0 = MediaDedup.admitAgainst(index, intraSurvivors, maxHamming)
-    val verdicts =
-      if (rejectedDir.isDefined) graft.Caches.persist(verdicts0) else verdicts0
-    val admitted = intraSurvivors.join(
-      verdicts.filter(!col("is_dup")).select("doc_id"), Seq("doc_id"), "left_semi")
-
-    writeRejected(Seq(undecodable,
-      intraDropped.select(col("doc_id"), lit("intra_batch_dup").as("reason")),
-      verdicts.filter(col("is_dup"))
-        .select(col("doc_id"), lit("index_dup").as("reason"))))
-
-    // (4) idempotent append: band rows to the index, ids to the corpus
-    MediaDedup.bandRows(admitted)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(indexDir)
-    admitted.select("doc_id")
-      .withColumn("batch_id", lit(batchId))
-      .write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(admittedDir)
-    graft.Caches.release()
-  }
+                 tombstonesDir: Option[String] = None): Unit =
+    StreamingMediaAdmission.admitHashed(batch, batchId, indexDir, admittedDir,
+      maxHamming, rejectedDir, tombstonesDir, "audio",
+      AudioDedup.fingerprintsWav(_).toDF())
 
   /** Start the continuous audio admission over a (doc_id, payload) source. */
   def start(clips: DataFrame, indexDir: String, admittedDir: String,
             checkpoint: String, maxHamming: Int = 8,
             rejectedDir: Option[String] = None,
             tombstonesDir: Option[String] = None): StreamingQuery =
-    clips.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        admitBatch(batch, id, indexDir, admittedDir, maxHamming, rejectedDir,
-          tombstonesDir)
-      }
-      .start()
+    Admission.start(clips, checkpoint)(admitBatch(_, _, indexDir, admittedDir,
+      maxHamming, rejectedDir, tombstonesDir))
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.scale.{CrossModal, MediaDedup, Multimodal, NearDup}
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -23,9 +23,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * ([[CrossModal.jointVerdicts]]), both masked by the shared tombstone
   * set (one takedown removes the pair from BOTH indices); (4) idempotent
   * append — image band rows, caption signature rows, and the admitted
-  * pair ids WITH their disagreement flags — partitioned by batch id with
-  * dynamic partition overwrite (checkpoint-replay idempotency without a
-  * transaction log).
+  * pair ids WITH their disagreement flags — under the [[Admission]]
+  * replay protocol.
   *
   * The two index directories are the ONLY cross-batch state. Per-batch
   * cost is O(batch + bucket collisions) in both modalities; payloads and
@@ -43,84 +42,57 @@ object StreamingPairAdmission {
                  txtIndexDir: String, admittedDir: String,
                  maxHamming: Int = 8, minSigMatches: Int = 6,
                  rejectedDir: Option[String] = None,
-                 tombstonesDir: Option[String] = None): Unit = {
-    val spark = batch.sparkSession
-    import spark.implicits._
-    if (batch.isEmpty) return
+                 tombstonesDir: Option[String] = None): Unit =
+    Admission.admit(batch, batchId, tombstonesDir) { b =>
+      import batch.sparkSession.implicits._
+      // (1) decode + hash at the scan side
+      val media = batch.select(col("doc_id"), lit("image").as("media_type"),
+        col("payload")).as[Multimodal.MediaRecord]
+      val ph = graft.Caches.persist(MediaDedup.phashes(media))
+      val undecodable = batch.select("doc_id")
+        .join(ph.select("doc_id"), Seq("doc_id"), "left_anti")
+        .select(col("doc_id"), lit("undecodable").as("reason"))
+      val pairs = batch.join(ph.select("doc_id"), Seq("doc_id"), "left_semi")
 
-    def writeRejected(rows: Seq[DataFrame]): Unit = rejectedDir.foreach { dir =>
-      if (rows.nonEmpty)
-        rows.reduce(_ unionByName _)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode(SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id").parquet(dir)
+      // (2) intra-batch joint dedup: one fused CC over both modality edge
+      // sets; the canonical pair of each joint class survives
+      val intra = graft.Caches.persist(CrossModal.pairDedup(
+        ph, pairs.select(col("doc_id"), col("text")), "doc_id",
+        maxHamming, minSigMatches))
+      val intraDropped = intra.filter(!col("is_canonical"))
+        .select(col("pair_id").as("doc_id"))
+      val survivors = pairs.join(intraDropped, Seq("doc_id"), "left_anti")
+
+      // (3) joint probe of both indices as of before this batch, masked by
+      // the one tombstone set that covers both modalities of a pair
+      val imgIndex = b.asOf(imgIndexDir,
+        MediaDedup.bandRows(ph.limit(0)), "doc_id")
+      val txtIndex = b.asOf(txtIndexDir,
+        NearDup.signatureIndex(pairs.select("doc_id", "text").limit(0), "doc_id"),
+        "doc")
+      val verdicts = graft.Caches.persist(CrossModal.jointVerdicts(
+        imgIndex, txtIndex,
+        ph.join(survivors.select("doc_id"), Seq("doc_id"), "left_semi"),
+        survivors.select(col("doc_id"), col("text")), "doc_id",
+        maxHamming, minSigMatches))
+      val admitted = verdicts.filter(!col("is_dup"))
+        .select(col("pair_id").as("doc_id"), col("img_dup"), col("txt_dup"),
+          col("disagree"))
+
+      b.reject(rejectedDir, Seq(undecodable,
+        intraDropped.select(col("doc_id"), lit("intra_pair_dup").as("reason")),
+        verdicts.filter(col("is_dup"))
+          .select(col("pair_id").as("doc_id"), lit("pair_dup").as("reason"))))
+
+      // (4) idempotent append: band rows + signature rows + flagged ids
+      val admittedIds = admitted.select("doc_id")
+      b.append(MediaDedup.bandRows(
+        ph.join(admittedIds, Seq("doc_id"), "left_semi")), imgIndexDir)
+      b.append(NearDup.signatureIndex(
+        survivors.join(admittedIds, Seq("doc_id"), "left_semi")
+          .select("doc_id", "text"), "doc_id"), txtIndexDir)
+      b.append(admitted, admittedDir)
     }
-
-    // (1) decode + hash at the scan side
-    val media = batch.select(col("doc_id"), lit("image").as("media_type"),
-      col("payload")).as[Multimodal.MediaRecord]
-    val ph = graft.Caches.persist(MediaDedup.phashes(media))
-    val undecodable = batch.select("doc_id")
-      .join(ph.select("doc_id"), Seq("doc_id"), "left_anti")
-      .select(col("doc_id"), lit("undecodable").as("reason"))
-    val pairs = batch.join(ph.select("doc_id"), Seq("doc_id"), "left_semi")
-
-    // (2) intra-batch joint dedup: one fused CC over both modality edge
-    // sets; the canonical pair of each joint class survives
-    val intra = graft.Caches.persist(CrossModal.pairDedup(
-      ph, pairs.select(col("doc_id"), col("text")), "doc_id",
-      maxHamming, minSigMatches))
-    val intraDropped = intra.filter(!col("is_canonical"))
-      .select(col("pair_id").as("doc_id"))
-    val survivors = pairs.join(intraDropped, Seq("doc_id"), "left_anti")
-
-    // (3) joint probe of both indices AS OF before this batch, tombstone-
-    // masked (one takedown set covers both modalities of a pair)
-    val tombstones = tombstonesDir
-      .filter(graft.io.Fs.exists(spark, _))
-      .map(spark.read.parquet(_))
-    def indexAsOf(dir: String, empty: => DataFrame, keyCol: String): DataFrame = {
-      val raw =
-        if (graft.io.Fs.exists(spark, dir))
-          spark.read.parquet(dir).filter(col("batch_id") < batchId)
-        else empty
-      tombstones.fold(raw)(t => graft.scale.Deletion.purge(raw, t, keyCol))
-    }
-    val imgIndex = indexAsOf(imgIndexDir,
-      MediaDedup.bandRows(ph.limit(0)), "doc_id")
-    val txtIndex = indexAsOf(txtIndexDir,
-      NearDup.signatureIndex(pairs.select("doc_id", "text").limit(0), "doc_id"),
-      "doc")
-    val verdicts = graft.Caches.persist(CrossModal.jointVerdicts(
-      imgIndex, txtIndex,
-      ph.join(survivors.select("doc_id"), Seq("doc_id"), "left_semi"),
-      survivors.select(col("doc_id"), col("text")), "doc_id",
-      maxHamming, minSigMatches))
-    val admitted = verdicts.filter(!col("is_dup"))
-      .select(col("pair_id").as("doc_id"), col("img_dup"), col("txt_dup"),
-        col("disagree"))
-
-    writeRejected(Seq(undecodable,
-      intraDropped.select(col("doc_id"), lit("intra_pair_dup").as("reason")),
-      verdicts.filter(col("is_dup"))
-        .select(col("pair_id").as("doc_id"), lit("pair_dup").as("reason"))))
-
-    // (4) idempotent append: band rows + signature rows + flagged ids
-    def appendPart(df: DataFrame, dir: String): Unit =
-      df.withColumn("batch_id", lit(batchId))
-        .write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(dir)
-    val admittedIds = admitted.select("doc_id")
-    appendPart(MediaDedup.bandRows(
-      ph.join(admittedIds, Seq("doc_id"), "left_semi")), imgIndexDir)
-    appendPart(NearDup.signatureIndex(
-      survivors.join(admittedIds, Seq("doc_id"), "left_semi")
-        .select("doc_id", "text"), "doc_id"), txtIndexDir)
-    appendPart(admitted, admittedDir)
-    graft.Caches.release()
-  }
 
   /** Start the continuous pair admission over a (doc_id, payload, text)
     * source.
@@ -130,11 +102,7 @@ object StreamingPairAdmission {
             maxHamming: Int = 8, minSigMatches: Int = 6,
             rejectedDir: Option[String] = None,
             tombstonesDir: Option[String] = None): StreamingQuery =
-    pairsSrc.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        admitBatch(batch, id, imgIndexDir, txtIndexDir, admittedDir,
-          maxHamming, minSigMatches, rejectedDir, tombstonesDir)
-      }
-      .start()
+    Admission.start(pairsSrc, checkpoint)(admitBatch(_, _, imgIndexDir,
+      txtIndexDir, admittedDir, maxHamming, minSigMatches, rejectedDir,
+      tombstonesDir))
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.scale.Similarity
 import graft.scale.Similarity.VectorBandPlan
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -11,9 +11,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * is (1) near-dup'd WITHIN the batch (banded-SRP bucket collision +
   * exact-cosine verify, smaller id survives), (2) admitted against the
   * persisted banded POSTING index, and (3) appended — admitted vectors to
-  * `admittedDir`, their int-only posting rows to `indexDir` — partitioned
-  * by batch id with dynamic partition overwrite, so a checkpoint-replayed
-  * micro-batch overwrites its own partition instead of double-appending.
+  * `admittedDir`, their int-only posting rows to `indexDir` — under the
+  * [[Admission]] replay protocol.
   *
   * Same scale posture as the text side: the index directory is the ONLY
   * cross-batch state (no state store — corpus growth bounded by object
@@ -94,67 +93,52 @@ object StreamingVectorAdmission {
                  admittedDir: String, plan: VectorBandPlan,
                  threshold: Double = 0.92,
                  gate: Option[SemanticGate] = None,
-                 tombstonesDir: Option[String] = None): Unit = {
-    val spark = batch.sparkSession
-    if (batch.isEmpty) return
-    graft.functions.Hashing.register(spark)
-    // (0) semantic decontamination, when configured: leaked-eval vectors
-    // never reach dedup, the index, or the corpus
-    val screened = gate.fold(batch) { g =>
-      val bc = spark.sparkContext.broadcast(g)
-      val isLeak = udf((v: Seq[Float]) => bc.value.contaminated(v))
-      batch.filter(!isLeak(col("embedding")))
-    }
-    if (screened.isEmpty) return
-    val side = graft.Caches.persist(
-      Similarity.vectorSide(screened, "vec_id", "embedding"))
-    val posts = graft.Caches.persist(
-      Similarity.vectorPostings(screened, "vec_id", "embedding", plan))
+                 tombstonesDir: Option[String] = None): Unit =
+    Admission.admit(batch, batchId, tombstonesDir) { b =>
+      val spark = batch.sparkSession
+      graft.functions.Hashing.register(spark)
+      // (0) semantic decontamination, when configured: leaked-eval vectors
+      // never reach dedup, the index, or the corpus
+      val screened = gate.fold(batch) { g =>
+        val bc = spark.sparkContext.broadcast(g)
+        val isLeak = udf((v: Seq[Float]) => bc.value.contaminated(v))
+        batch.filter(!isLeak(col("embedding")))
+      }
+      if (!screened.isEmpty) {
+        val side = graft.Caches.persist(
+          Similarity.vectorSide(screened, "vec_id", "embedding"))
+        val posts = graft.Caches.persist(
+          Similarity.vectorPostings(screened, "vec_id", "embedding", plan))
 
-    // (1) intra-batch: any-band collision (ids only) -> exact cosine on the
-    // joined-back vectors -> larger id dies
-    val intraCands = posts.as("l").join(posts.as("r"),
-        col("l.band_idx") === col("r.band_idx") &&
-        col("l.bucket") === col("r.bucket") && col("l.id") < col("r.id"))
-      .select(col("l.id").as("id_a"), col("r.id").as("id_b")).distinct()
-    val intraDropped = intraCands
-      .join(side.select(col("id").as("id_a"), col("v").as("va"), col("n").as("na")), "id_a")
-      .join(side.select(col("id").as("id_b"), col("v").as("vb"), col("n").as("nb")), "id_b")
-      .withColumn("score",
-        Similarity.dot(col("va"), col("vb")) / (col("na") * col("nb")))
-      .filter(col("score") >= threshold)
-      .select(col("id_b").as("id")).distinct()
-    val intraSurvivors = side.join(intraDropped, Seq("id"), "left_anti")
-    val survivorPosts = posts.join(intraDropped, Seq("id"), "left_anti")
+        // (1) intra-batch: any-band collision (ids only) -> exact cosine on
+        // the joined-back vectors -> larger id dies
+        val intraCands = posts.as("l").join(posts.as("r"),
+            col("l.band_idx") === col("r.band_idx") &&
+            col("l.bucket") === col("r.bucket") && col("l.id") < col("r.id"))
+          .select(col("l.id").as("id_a"), col("r.id").as("id_b")).distinct()
+        val intraDropped = intraCands
+          .join(side.select(col("id").as("id_a"), col("v").as("va"), col("n").as("na")), "id_a")
+          .join(side.select(col("id").as("id_b"), col("v").as("vb"), col("n").as("nb")), "id_b")
+          .withColumn("score",
+            Similarity.dot(col("va"), col("vb")) / (col("na") * col("nb")))
+          .filter(col("score") >= threshold)
+          .select(col("id_b").as("id")).distinct()
+        val intraSurvivors = side.join(intraDropped, Seq("id"), "left_anti")
+        val survivorPosts = posts.join(intraDropped, Seq("id"), "left_anti")
 
-    // (2) cross-batch admission against the index AS OF before this batch
-    // (a replayed batch filters out its own and later partitions, so it
-    // reproduces its first run's verdicts). The posting probe shuffles
-    // ints only; indexed vectors come from the admitted corpus BY ID.
-    val haveIndex = graft.io.Fs.exists(spark, indexDir)
-    // tombstones (graft.scale.Deletion semantics) mask the index and the
-    // admitted corpus at read: the next batch's probe cannot match
-    // deleted vectors, so a near-dup of only-deleted content admits
-    val tombstones = tombstonesDir
-      .filter(graft.io.Fs.exists(spark, _))
-      .map(spark.read.parquet(_))
-    def purged(df: DataFrame, key: String): DataFrame =
-      tombstones.fold(df)(t => graft.scale.Deletion.purge(df, t, key))
-    val rejected =
-      if (!haveIndex) intraSurvivors.limit(0).select(col("id"))
-      else {
-        val idxPosts = purged(spark.read.parquet(indexDir)
-          .filter(col("batch_id") < batchId), "id")
+        // (2) cross-batch admission against the tombstone-masked index and
+        // corpus as of before this batch. The posting probe shuffles ints
+        // only; indexed vectors come from the admitted corpus BY ID.
+        val idxPosts = b.asOf(indexDir, posts.limit(0), "id")
           .select(col("id").as("c_id"), col("band_idx"), col("bucket"))
         val crossCands = survivorPosts
           .select(col("id").as("b_id"), col("band_idx"), col("bucket"))
           .join(idxPosts, Seq("band_idx", "bucket"))
           .select("b_id", "c_id").distinct()
-        val corpusSide = purged(spark.read.parquet(admittedDir)
-          .filter(col("batch_id") < batchId), "vec_id")
+        val corpusSide = b.asOf(admittedDir, screened.limit(0), "vec_id")
           .select(col("vec_id").as("c_id"), col("embedding").as("cv"))
           .withColumn("cn", Similarity.norm(col("cv")))
-        crossCands
+        val rejected = crossCands
           .join(intraSurvivors.select(col("id").as("b_id"), col("v").as("bv"),
             col("n").as("bn")), "b_id")
           .join(corpusSide, "c_id")
@@ -162,21 +146,14 @@ object StreamingVectorAdmission {
             Similarity.dot(col("bv"), col("cv")) / (col("bn") * col("cn")))
           .filter(col("score") >= threshold)
           .select(col("b_id").as("id")).distinct()
-      }
-    val admitted = intraSurvivors.join(rejected, Seq("id"), "left_anti")
-    val admittedPosts = survivorPosts.join(rejected, Seq("id"), "left_anti")
+        val admitted = intraSurvivors.join(rejected, Seq("id"), "left_anti")
 
-    // (3) idempotent append: one partition per micro-batch
-    admittedPosts
-      .withColumn("batch_id", lit(batchId))
-      .write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(indexDir)
-    admitted.select(col("id").as("vec_id"), col("v").as("embedding"))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(admittedDir)
-    graft.Caches.release()
-  }
+        // (3) idempotent append: one partition per micro-batch
+        b.append(survivorPosts.join(rejected, Seq("id"), "left_anti"), indexDir)
+        b.append(admitted.select(col("id").as("vec_id"), col("v").as("embedding")),
+          admittedDir)
+      }
+    }
 
   /** Start the continuous admission stream over a `(vec_id, embedding)`
     * source. `plan` sizes the banded geometry to the corpus the stream is
@@ -188,11 +165,6 @@ object StreamingVectorAdmission {
             threshold: Double = 0.92,
             gate: Option[SemanticGate] = None,
             tombstonesDir: Option[String] = None): StreamingQuery =
-    vectors.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        admitBatch(batch, id, indexDir, admittedDir, plan, threshold, gate,
-          tombstonesDir)
-      }
-      .start()
+    Admission.start(vectors, checkpoint)(admitBatch(_, _, indexDir, admittedDir,
+      plan, threshold, gate, tombstonesDir))
 }

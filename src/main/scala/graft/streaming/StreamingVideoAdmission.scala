@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.scale.{AviMjpeg, Multimodal}
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -15,10 +15,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * fail to demux/decode are rejected with reason `undecodable`, never
   * thrown on — (2) de-duplicated WITHIN the batch (position-aligned band
   * blocking, keyframe-majority Hamming verify, smaller id wins), (3)
-  * admitted against the persisted band-row index AS OF before this
-  * batch, and (4) appended — admitted ids and their index rows —
-  * partitioned by batch id with dynamic partition overwrite (checkpoint-
-  * replay idempotency without a transaction log).
+  * admitted against the persisted band-row index, and (4) appended —
+  * admitted ids and their index rows — under the [[Admission]] replay
+  * protocol.
   *
   * The index directory is the ONLY cross-batch state. Per-batch cost is
   * O(batch + band-bucket collisions), never O(corpus): payloads never
@@ -38,86 +37,51 @@ object StreamingVideoAdmission {
   def admitBatch(batch: DataFrame, batchId: Long, indexDir: String,
                  admittedDir: String, maxHamming: Int = 8, minMatch: Int = 2,
                  rejectedDir: Option[String] = None,
-                 tombstonesDir: Option[String] = None): Unit = {
-    val spark = batch.sparkSession
-    import spark.implicits._
-    if (batch.isEmpty) return
+                 tombstonesDir: Option[String] = None): Unit =
+    Admission.admit(batch, batchId, tombstonesDir) { b =>
+      import batch.sparkSession.implicits._
+      // (1) demux + decode + hash (scan-side, one pass over payloads);
+      // undecodable videos fall out of the hash frame → audited by anti-join
+      val media = batch.select(col("doc_id"), lit("video").as("media_type"),
+        col("payload")).as[Multimodal.MediaRecord]
+      val fph = graft.Caches.persist(AviMjpeg.keyframeHashes(media, k = 3).toDF())
+      val undecodable = batch.select("doc_id")
+        .join(fph.select(col("video_id").as("doc_id")), Seq("doc_id"), "left_anti")
+        .select(col("doc_id"), lit("undecodable").as("reason"))
 
-    def writeRejected(rows: Seq[DataFrame]): Unit = rejectedDir.foreach { dir =>
-      if (rows.nonEmpty)
-        rows.reduce(_ unionByName _)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode(SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id").parquet(dir)
+      // (2) intra-batch duplicates: keyframe-majority pairs, smaller id wins
+      val intraDropped0 = AviMjpeg.videoDuplicates(fph, maxHamming, minMatch)
+      val intraDropped =
+        if (rejectedDir.isDefined) graft.Caches.persist(intraDropped0)
+        else intraDropped0
+      val intraSurvivors = fph.join(intraDropped, Seq("video_id"), "left_anti")
+
+      // (3) admission against the tombstone-masked index as of before
+      // this batch: a clone of only-deleted videos admits
+      val index = b.asOf(indexDir, AviMjpeg.videoBandRows(fph.limit(0)), "video_id")
+      val verdicts0 = AviMjpeg.admitAgainstVideos(index, intraSurvivors,
+        maxHamming, minMatch)
+      val verdicts =
+        if (rejectedDir.isDefined) graft.Caches.persist(verdicts0) else verdicts0
+      val admitted = intraSurvivors.join(
+        verdicts.filter(!col("is_dup")).select("video_id"), Seq("video_id"), "left_semi")
+
+      b.reject(rejectedDir, Seq(undecodable,
+        intraDropped.select(col("video_id").as("doc_id"),
+          lit("intra_batch_dup").as("reason")),
+        verdicts.filter(col("is_dup"))
+          .select(col("video_id").as("doc_id"), lit("index_dup").as("reason"))))
+
+      // (4) idempotent append: band rows to the index, ids to the corpus
+      b.append(AviMjpeg.videoBandRows(admitted), indexDir)
+      b.append(admitted.select(col("video_id").as("doc_id")).distinct(), admittedDir)
     }
-
-    // (1) demux + decode + hash (scan-side, one pass over payloads);
-    // undecodable videos fall out of the hash frame → audited by anti-join
-    val media = batch.select(col("doc_id"), lit("video").as("media_type"),
-      col("payload")).as[Multimodal.MediaRecord]
-    val fph = graft.Caches.persist(AviMjpeg.keyframeHashes(media, k = 3).toDF())
-    val undecodable = batch.select("doc_id")
-      .join(fph.select(col("video_id").as("doc_id")), Seq("doc_id"), "left_anti")
-      .select(col("doc_id"), lit("undecodable").as("reason"))
-
-    // (2) intra-batch duplicates: keyframe-majority pairs, smaller id wins
-    val intraDropped0 = AviMjpeg.videoDuplicates(fph, maxHamming, minMatch)
-    val intraDropped =
-      if (rejectedDir.isDefined) graft.Caches.persist(intraDropped0)
-      else intraDropped0
-    val intraSurvivors = fph.join(intraDropped, Seq("video_id"), "left_anti")
-
-    // (3) admission against the index AS OF before this batch (a replayed
-    // batch filters out its own and later partitions — same verdicts as
-    // its first run)
-    // tombstones (graft.scale.Deletion semantics) mask the index at read:
-    // a clone of only-deleted videos admits on the next batch
-    val tombstones = tombstonesDir
-      .filter(graft.io.Fs.exists(spark, _))
-      .map(spark.read.parquet(_))
-    val rawIndex =
-      if (graft.io.Fs.exists(spark, indexDir))
-        spark.read.parquet(indexDir).filter(col("batch_id") < batchId)
-      else AviMjpeg.videoBandRows(fph.limit(0))
-    val index = tombstones.fold(rawIndex)(
-      t => graft.scale.Deletion.purge(rawIndex, t, "video_id"))
-    val verdicts0 = AviMjpeg.admitAgainstVideos(index, intraSurvivors,
-      maxHamming, minMatch)
-    val verdicts =
-      if (rejectedDir.isDefined) graft.Caches.persist(verdicts0) else verdicts0
-    val admitted = intraSurvivors.join(
-      verdicts.filter(!col("is_dup")).select("video_id"), Seq("video_id"), "left_semi")
-
-    writeRejected(Seq(undecodable,
-      intraDropped.select(col("video_id").as("doc_id"),
-        lit("intra_batch_dup").as("reason")),
-      verdicts.filter(col("is_dup"))
-        .select(col("video_id").as("doc_id"), lit("index_dup").as("reason"))))
-
-    // (4) idempotent append: band rows to the index, ids to the corpus
-    AviMjpeg.videoBandRows(admitted)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(indexDir)
-    admitted.select(col("video_id").as("doc_id"))
-      .distinct()
-      .withColumn("batch_id", lit(batchId))
-      .write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(admittedDir)
-    graft.Caches.release()
-  }
 
   /** Start the continuous video admission over a (doc_id, payload) source. */
   def start(videos: DataFrame, indexDir: String, admittedDir: String,
             checkpoint: String, maxHamming: Int = 8, minMatch: Int = 2,
             rejectedDir: Option[String] = None,
             tombstonesDir: Option[String] = None): StreamingQuery =
-    videos.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        admitBatch(batch, id, indexDir, admittedDir, maxHamming, minMatch,
-          rejectedDir, tombstonesDir)
-      }
-      .start()
+    Admission.start(videos, checkpoint)(admitBatch(_, _, indexDir, admittedDir,
+      maxHamming, minMatch, rejectedDir, tombstonesDir))
 }

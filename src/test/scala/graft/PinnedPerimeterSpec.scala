@@ -15,7 +15,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * The same source scan guards two more perimeters: sessions are built
   * only by `graft.Session`, and only entry points (Bench, Verify, the
   * curves, tools) read environment variables or system properties, so no
-  * operator grows a process-wide mode or debug switch.
+  * operator grows a process-wide mode or debug switch. Two more keep the
+  * streaming batch bodies on their shared mechanisms: the batch-keyed
+  * overwrite lives only in the admission protocol, and no streaming code
+  * releases session-global caches or cuts lineage by hand.
   */
 class PinnedPerimeterSpec extends AnyFunSuite {
 
@@ -83,5 +86,23 @@ class PinnedPerimeterSpec extends AnyFunSuite {
     }
     assert(found.isEmpty,
       s"operator code must not read process-wide switches; found in $found")
+  }
+
+  test("the batch-keyed partition overwrite lives only in the admission protocol") {
+    val found = mainSources.collect {
+      case (f, src) if src.contains("partitionOverwriteMode") => f
+    }
+    assert(found == Seq("graft/streaming/Admission.scala"),
+      s"write batch-keyed output through streaming.Admission; found in $found")
+  }
+
+  test("streaming code neither releases session-global caches nor checkpoints by hand") {
+    val found = mainSources.collect {
+      case (f, src) if f.startsWith("graft/streaming/") &&
+        (src.contains("Caches.release()") || src.contains(".localCheckpoint(")) => f
+    }
+    assert(found.isEmpty,
+      s"streaming batch bodies release through Caches.scoped and cut lineage " +
+        s"through Caches.lazyBarrier; found in $found")
   }
 }
