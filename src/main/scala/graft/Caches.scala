@@ -1,37 +1,42 @@
 package graft
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import scala.collection.mutable
 
-/** Registry of persisted intermediates so long-lived sessions can release
-  * them once a query materializes. Several stage-frames are deliberately
-  * persisted (HOF columns don't codegen, so multi-referenced derivations
-  * recompute without a barrier — see NearDup.withSignatures); without a
-  * paired unpersist those blocks accumulate in executor storage for the
-  * lifetime of the session. A spec asserts nothing stays cached.
+/** Lineage cuts and persisted intermediates, under one lifetime rule: a
+  * cut lives as long as the release domain that made it. Several
+  * stage-frames are deliberately persisted (HOF columns don't codegen, so
+  * multi-referenced derivations recompute without a barrier — see
+  * NearDup.withSignatures); without a paired unpersist those blocks
+  * accumulate in executor storage for the lifetime of the session. A spec
+  * asserts nothing stays cached.
   *
-  * Two ways to release them:
-  *   - [[scoped]] for code that runs beside other queries in the session —
-  *     every streaming batch body: it releases exactly the frames and
-  *     barriers registered inside its body on the current thread, when the
+  * There are three release domains, and [[persist]] and [[lazyBarrier]]
+  * register into the innermost one running on the current thread:
+  *   - a [[scoped]] body — every streaming batch body: released when the
   *     body exits, whether it succeeds or throws;
-  *   - [[release]] for a driver that owns the whole session and runs one
-  *     query at a time (Verify, Bench, ScaleCurve, the tools): it releases
-  *     everything registered outside any scope.
+  *   - a [[sessionMemo]] builder, which runs as a scoped body: whatever it
+  *     registers (kernel intermediates included) is released when it
+  *     returns, and what it hands back lives for the session, so a frame
+  *     it returns is a [[pinnedBarrier]] (materialized when made, never
+  *     tracked) or a plain table read;
+  *   - the query, for a driver that owns the whole session and runs one
+  *     query at a time (Verify, Bench, ScaleCurve, the tools): everything
+  *     registered outside any scope, released by [[release]].
   */
 object Caches {
   /** Frames and checkpoint RDDs registered in one release domain. */
   private final class Tracked {
     val frames = mutable.ArrayBuffer.empty[DataFrame]
-    val rddIds = mutable.ArrayBuffer.empty[(org.apache.spark.SparkContext, Int)]
+    val rdds = mutable.ArrayBuffer.empty[RDD[_]]
 
     def release(): Unit = {
       frames.foreach(_.unpersist())
       frames.clear()
-      rddIds.foreach { case (sc, id) =>
-        sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false))
-      }
-      rddIds.clear()
+      rdds.foreach(_.unpersist(blocking = false))
+      rdds.clear()
     }
   }
 
@@ -40,7 +45,6 @@ object Caches {
   // domain; a plain (non-inheritable) thread local, so a thread started
   // inside a body does not register into a scope that has already exited
   private val scope = ThreadLocal.withInitial[Tracked](() => global)
-  private def current: Tracked = scope.get
 
   /** Runs `body` as its own release domain: whatever it registers through
     * [[persist]] or [[lazyBarrier]] on this thread — kernels included — is
@@ -58,17 +62,20 @@ object Caches {
     }
   }
 
-  /** persist() + track for later release. */
-  def persist(df: DataFrame): DataFrame = synchronized {
-    current.frames += df
-    df.persist()
+  /** persist() + track in the current release domain. */
+  def persist(df: DataFrame): DataFrame = {
+    val domain = scope.get
+    val out = df.persist()
+    synchronized(domain.frames += df)
+    out
   }
 
   /** Lazy localCheckpoint: truncates lineage to the materialized rows but
     * defers materialization into the first action that touches the frame —
     * no extra serialized job, unlike the eager `localCheckpoint()`
     * (measured: eager barriers in corpus_prepare_v4 cost ~3.5 s of
-    * additional materialization jobs at sf0.1).
+    * additional materialization jobs at sf0.1). Its blocks are released
+    * with the current release domain.
     *
     * This is the cure for combinatorial ANALYZED-plan growth, a distinct
     * failure mode from recompute: a multi-stage pipeline whose stages each
@@ -81,37 +88,20 @@ object Caches {
     * InMemoryTableScan nodes and ~4.5 s of driver time PER ACTION (fully
     * cached!) at corpus_prepare_v4's semantic stage. A lazy local
     * checkpoint replaces the subtree with one LogicalRDD leaf: same
-    * blocks, same single computation, milliseconds of planning. (At
-    * cluster scale with preemptible executors, [[reliableCheckpoint]] is
-    * the durable sibling; executor-local blocks are the right trade for
-    * single-app batch queries.)
+    * blocks, same single computation, milliseconds of planning.
     */
-  def lazyBarrier(df: DataFrame): DataFrame = synchronized {
-    val sc = df.sparkSession.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    // under AQE, localCheckpoint(eager=false) still materializes the
-    // subtree's query stages at CREATION time, so this is where a staged
-    // pipeline's wall-clock actually goes (per-barrier times measured in
-    // round 6, SCALE.md "Measured scaling curve"; per-layer barrier counts
-    // are in the perfbench trace)
+  def lazyBarrier(df: DataFrame): DataFrame = {
+    val domain = scope.get
+    // localCheckpoint(eager=false) can still run jobs at CREATION time
+    // (under AQE a broadcast join's build side runs here), so creating a
+    // barrier can take much of a staged pipeline's wall-clock (per-barrier
+    // times measured in round 6, SCALE.md "Measured scaling curve";
+    // per-layer barrier counts are in the perfbench trace) — hence
+    // outside the lock
     val out = df.localCheckpoint(eager = false)
-    current.rddIds ++= sc.getPersistentRDDs.keySet.diff(before).map(sc -> _)
+    out.queryExecution.logical.collectFirst { case r: LogicalRDD => r.rdd }
+      .foreach(rdd => synchronized(domain.rdds += rdd))
     out
-  }
-
-  /** Eager reliable checkpoint() — lineage cut to files under
-    * `sc.setCheckpointDir`, surviving executor loss. The durable sibling of
-    * [[lazyBarrier]] for iterative operators on unreliable executors:
-    * same lineage truncation, but a lost executor replays from storage
-    * instead of failing the job (local checkpoint blocks are
-    * non-replicated executor state). Costs one write+read of the frame per
-    * call — the right trade when rounds are long-lived or executors are
-    * preemptible. Requires a checkpoint dir to be configured.
-    */
-  def reliableCheckpoint(df: DataFrame): DataFrame = {
-    require(df.sparkSession.sparkContext.getCheckpointDir.nonEmpty,
-      "reliable checkpointing needs spark.sparkContext.setCheckpointDir(...)")
-    df.checkpoint()
   }
 
   // --- session-pinned frames: shared ACROSS registered queries ---------
@@ -144,12 +134,12 @@ object Caches {
     * stage frames that several REGISTERED QUERIES derive identically (the
     * capstone prep prefix — v4/v5/v6/v7/v8/audit each re-derived the same
     * normalize→gate→dedup staging chain, ~1.5 s of pure barrier
-    * materialization EACH at sf0.1). Build the shared frames inside `mk`
-    * with [[pinnedBarrier]] (NOT [[lazyBarrier]] — per-query [[release]]
-    * would unpersist a truncated-lineage frame out from under later
-    * queries). Pinned frames survive release() and die with their
-    * context — on a cluster this is precisely "materialize the curated
-    * staging table once, let every downstream job read it".
+    * materialization EACH at sf0.1). `mk` runs as a [[scoped]] body: what
+    * it registers is released when it returns, so a frame it returns is
+    * built with [[pinnedBarrier]] or read straight from a table. Pinned
+    * frames survive release() and die with their context — on a cluster
+    * this is precisely "materialize the curated staging table once, let
+    * every downstream job read it".
     *
     * The pin PERIMETER is frozen as of r13 (judge ruling): no further
     * query-path computation may move into session memos; every key used by
@@ -163,7 +153,7 @@ object Caches {
       if (perCtx == null) { perCtx = mutable.Map.empty[String, MemoCell]; memo.put(sc, perCtx) }
       perCtx.getOrElseUpdate(key, new MemoCell(() => {
         val t0 = System.nanoTime()
-        val v = mk
+        val v = scoped(mk)
         val sec = (System.nanoTime() - t0) / 1e9
         synchronized {
           var b = buildSec.get(sc)
@@ -177,12 +167,9 @@ object Caches {
   }
 
   /** Seconds spent so far inside each session-memo builder of this
-    * context, keyed by memo key. Builder wall-time covers the eager part
-    * of pin construction (driver derivation, probe jobs, and — under
-    * AQE — the query-stage materialization that `localCheckpoint(eager =
-    * false)` performs at CREATION time, see [[lazyBarrier]]); residual
-    * lazy materialization lands in the first consumer's first run, which
-    * Bench ships separately as query_first_run.
+    * context, keyed by memo key. Pins materialize inside their builder
+    * ([[pinnedBarrier]]), so builder wall-time is the whole pin cost:
+    * driver derivation, probe jobs and every pinned frame's blocks.
     */
   def pinnedBuildSecs(spark: org.apache.spark.sql.SparkSession): Map[String, Double] =
     synchronized {
@@ -190,12 +177,12 @@ object Caches {
       if (b == null) Map.empty else b.toMap
     }
 
-  /** Lineage barrier for session-pinned frames: same lazy localCheckpoint
-    * as [[lazyBarrier]] but deliberately NOT tracked for [[release]] —
-    * only for frames registered through [[sessionMemo]], whose lifetime is
-    * the session, not the query.
+  /** Lineage barrier for session-pinned frames: an eager localCheckpoint,
+    * deliberately NOT tracked — only for frames a [[sessionMemo]] builder
+    * returns, whose lifetime is the session. It materializes when made, so
+    * the pin needs nothing its builder registered once the builder returns.
     */
-  def pinnedBarrier(df: DataFrame): DataFrame = df.localCheckpoint(eager = false)
+  def pinnedBarrier(df: DataFrame): DataFrame = df.localCheckpoint()
 
   /** Unpersist every frame tracked outside a [[scoped]] body and clear
     * that registry.

@@ -2331,10 +2331,7 @@ object ScaleQueries {
     * `ded` (digest-exact dedup survivors WITH text), `lshDropped`
     * (MinHash-LSH casualty ids), `clean` (decontaminated doc_id+source),
     * `semDropped` (SemDeDup casualty ids), `sem` (final survivor set).
-    * Stage semantics are documented at the v4 registration above; the
-    * `sem.count()` at the end materializes the whole chain eagerly INSIDE
-    * the memo so no per-query release() can unpersist a tracked upstream
-    * (NearDup.withSignatures persists internally) before first use.
+    * Stage semantics are documented at the v4 registration above.
     */
   private[graft] final case class CorpusStages(
       scored: DataFrame, ded: DataFrame, lshDropped: DataFrame,
@@ -2398,10 +2395,6 @@ object ScaleQueries {
         val sem = graft.Caches.pinnedBarrier(
           clean.join(semDropped, Seq("doc_id"), "left_anti")
             .select("doc_id", "source"))
-        // materialize the whole chain NOW (one job cascade): after this,
-        // every pinned frame is backed by its own blocks and per-query
-        // release() of helper-internal persists cannot strand anything
-        sem.count(); lshDropped.count(); scored.count()
         CorpusStages(scored, ded, lshDropped, clean, semDropped, sem)
     }
 
@@ -2453,20 +2446,14 @@ object ScaleQueries {
   private def exactTop10(s: SparkSession, dir: String): DataFrame =
     graft.Caches.sessionMemo(s, s"exactTop10:$dir") {
       val e = embs(s, dir)
-      val f = graft.Caches.pinnedBarrier(Similarity.bruteForceTopK(
+      graft.Caches.pinnedBarrier(Similarity.bruteForceTopK(
         e.filter(col("vec_id") % 20 === 0), e, "vec_id", "embedding", k = 10))
-      f.count() // materialize inside the memo (see corpusStages)
-      f
     }
 
   private def corpusEncoded(s: SparkSession, dir: String): DataFrame =
-    graft.Caches.sessionMemo(s, s"corpusEncoded:$dir") {
-      val st = corpusStages(s, dir)
-      val enc = graft.Caches.pinnedBarrier(
-        Bpe.encodeCorpus(st.ded, "doc_id", "text", rounds = 1, sampleOneIn = 4))
-      enc.count() // materialize inside the memo (see corpusStages)
-      enc
-    }
+    graft.Caches.sessionMemo(s, s"corpusEncoded:$dir")(graft.Caches.pinnedBarrier(
+      Bpe.encodeCorpus(corpusStages(s, dir).ded, "doc_id", "text", rounds = 1,
+        sampleOneIn = 4)))
 
   /** Session-pinned banded vector near-dup PAIRS (corpus-scaled geometry):
     * `dedup_embedding_banded` reports them and `dedup_vector_clusters`
@@ -2481,11 +2468,9 @@ object ScaleQueries {
       val withDups = e.unionByName(
         e.filter(col("vec_id") % 25 === 0)
           .withColumn("vec_id", col("vec_id") + 100000))
-      val p = graft.Caches.pinnedBarrier(
+      graft.Caches.pinnedBarrier(
         Similarity.srpBandedNearDupPairsAuto(withDups, "vec_id", "embedding",
           threshold = 0.35))
-      p.count() // materialize inside the memo (see corpusStages)
-      p
     }
 
   /** Shared oracle CTE chain for the planted-PNG perceptual-hash queries:
@@ -8225,10 +8210,7 @@ object ScaleQueries {
             .union(AudioDedup.mediaWavPlanted(ids, shift = 800000L, stereo = true))
             .union(AudioDedup.mediaWavPlanted(ids.map(_ + 5000011L),
               shift = 900000L - 5000011L))
-          val f = graft.Caches.pinnedBarrier(
-            AudioDedup.fingerprintsWav(media).toDF())
-          f.count() // materialize inside the memo (see corpusStages)
-          f
+          graft.Caches.pinnedBarrier(AudioDedup.fingerprintsWav(media).toDF())
         }
         val b = MediaDedup.capBandBuckets(MediaDedup.bandRows(fp), maxBucket = 64)
         val l = b.select(col("doc_id").as("doc_a"), col("band"), col("v"),

@@ -30,17 +30,9 @@ object Clusters {
   /** Resolves the undirected pair graph into components.
     * Returns one row per node appearing in `pairs`:
     * (node, cluster_id) with cluster_id = the component's minimum node id.
-    *
-    * `reliable = true` flips the per-round lineage cut from executor-local
-    * checkpoint blocks to a durable `checkpoint()` (requires
-    * `sc.setCheckpointDir`): same operator, but a preempted executor
-    * replays its label partition from storage instead of failing the whole
-    * iteration — the production setting for long dedup runs on spot
-    * capacity.
     */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
-                          maxIter: Int = 16,
-                          reliable: Boolean = false): DataFrame = {
+                          maxIter: Int = 16): DataFrame = {
     // lazy local checkpoint, not eager: the cut still replaces the plan
     // with a LogicalRDD leaf immediately (the lineage/analysis truncation
     // this loop needs), but the final stage's materialization folds into
@@ -49,16 +41,14 @@ object Clusters {
     // upstream query stages still materialize at cut creation, so the
     // interleaved A/B on the pair capstones showed parity-to-better, not
     // the 2× the job count suggests; lazy is kept as the never-worse form.)
-    val cut: DataFrame => DataFrame =
-      if (reliable) graft.Caches.reliableCheckpoint else graft.Caches.lazyBarrier
     // cut + distinct here, on the PAIR list: the input is typically an
     // expensive similarity join that everything below (nodes, edges,
     // labels) re-references — materialize it once; distinct at this level
     // (LSH candidates repeat a pair once per colliding band) makes the
     // 3-way edge union distinct by construction — reversal can't collide
     // with a<b pairs, self-loops come from the distinct node set
-    val half = cut(pairs.select(col(aCol).cast("long").as("src"),
-      col(bCol).cast("long").as("dst")).distinct())
+    val half = graft.Caches.lazyBarrier(pairs.select(
+      col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst")).distinct())
     // Checkpoints (not persists) throughout: the loop self-joins its own
     // output, so a nested plan doubles per round — lineage must be cut to
     // the materialized rows each iteration, or analysis alone blows up
@@ -74,13 +64,13 @@ object Clusters {
     // duplicate edges, and deduping the corpus-sized edge list would be
     // the loop's single largest shuffle bought for nothing (an input pair
     // listed twice at worst doubles that edge's join rows)
-    val edges = cut(
+    val edges = graft.Caches.lazyBarrier(
       half.union(half.select(col("dst").as("src"), col("src").as("dst")))
         .union(nodes.select(col("src"), col("src").as("dst"))))
     // nodes is already the distinct node set — labels reuse it instead of
     // re-distincting the 3-way edge union
-    var labels = cut(nodes.select(col("src").as("node"))
-      .withColumn("label", col("node")))
+    var labels = graft.Caches.lazyBarrier(
+      nodes.select(col("src").as("node")).withColumn("label", col("node")))
     // Termination (r13): labels are converged IFF no remaining edge joins
     // two different labels. Labels start as node ids and only take mins of
     // labels within their component, so each component's min node m always
@@ -148,7 +138,7 @@ object Clusters {
             coalesce(col("j.jl"), col("p.label")).as("label"))
         d += 1
       }
-      val jumped = cut(cur)
+      val jumped = graft.Caches.lazyBarrier(cur)
       // the stability probe is also the action that materializes this
       // round's label checkpoint — one driver action per round, as before
       done = stable(jumped)

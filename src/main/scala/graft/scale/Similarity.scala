@@ -257,11 +257,9 @@ object Similarity {
         // codebook scoring pass itself stays amortized in the session pin.
         graft.Caches.persist(
           graft.Caches.sessionMemo(corpus.sparkSession,
-              s"ivfIndex:$mk:$idCol:$vecCol:$nLists") {
-            val f = graft.Caches.pinnedBarrier(rankedTop(2))
-            f.count() // materialize inside the memo
-            f
-          }.filter(col("crank") <= math.max(nProbe, 1)))
+              s"ivfIndex:$mk:$idCol:$vecCol:$nLists")(
+            graft.Caches.pinnedBarrier(rankedTop(2)))
+            .filter(col("crank") <= math.max(nProbe, 1)))
       case None =>
         graft.Caches.persist(rankedTop(math.max(nProbe, 1)))
     }

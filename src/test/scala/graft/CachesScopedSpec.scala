@@ -1,12 +1,15 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 /** `Caches.scoped` is the release domain of one batch body: it releases
   * exactly what the body registered, on success and on failure, and
-  * leaves frames registered outside it cached.
+  * leaves frames registered outside it cached. A barrier registers only
+  * its own RDD, whatever other threads persist meanwhile.
   */
 class CachesScopedSpec extends SparkSpec {
 
@@ -47,4 +50,51 @@ class CachesScopedSpec extends SparkSpec {
     assert(outside.storageLevel == StorageLevel.NONE,
       "release() still owns frames registered outside any scope")
   }
+
+  test("a lazyBarrier registers only its own RDD while another thread pins a frame") {
+    import CachesScopedSpec.{buildSideStarted, pinMade}
+    val sc = spark.sparkContext
+    // creating the barrier runs its broadcast build side (AQE): the UDF
+    // there holds that job open until the other thread has made its pin
+    val hold = udf { (id: Long) =>
+      buildSideStarted.countDown()
+      pinMade.await(60, TimeUnit.SECONDS)
+      id
+    }
+    val joined = spark.range(0, 1000).toDF("k").join(broadcast(
+      spark.range(0, 64, 1, 1).toDF("id").select(hold(col("id")).as("k"))), "k")
+    @volatile var barrierError: Throwable = null
+    val barrierThread = new Thread(() =>
+      try Caches.lazyBarrier(joined)
+      catch { case e: Throwable => barrierError = e })
+    barrierThread.start()
+    try {
+      assert(buildSideStarted.await(60, TimeUnit.SECONDS),
+        s"the barrier's build side never started: $barrierError")
+      // kept referenced: getPersistentRDDs holds its RDDs weakly
+      val pin = Caches.pinnedBarrier(spark.range(0, 100).toDF("id"))
+      val pinRdd = pin.queryExecution.logical.collectFirst {
+        case r: LogicalRDD => r.rdd
+      }.get
+      pinMade.countDown()
+      barrierThread.join(120000)
+      assert(!barrierThread.isAlive && barrierError == null,
+        s"the barrier did not finish cleanly: $barrierError")
+      Caches.release()
+      assert(sc.getPersistentRDDs.contains(pinRdd.id),
+        s"release() unpersisted another thread's pin: ${pinRdd.id}")
+      assert(pin.count() == 100)
+      pinRdd.unpersist(blocking = false)
+    } finally {
+      pinMade.countDown()
+      barrierThread.join(120000)
+    }
+  }
+}
+
+object CachesScopedSpec {
+  // reached from the UDF on executor threads of this JVM (local mode):
+  // a latch captured in the closure would be a serialized copy
+  val buildSideStarted = new CountDownLatch(1)
+  val pinMade = new CountDownLatch(1)
 }

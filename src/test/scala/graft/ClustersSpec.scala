@@ -52,41 +52,6 @@ class ClustersSpec extends SparkSpec {
       (7L, 7L, 2L, true), (8L, 7L, 2L, false)))
   }
 
-  test("reliable=true without a checkpoint dir fails fast") {
-    // declared (and run) before the test that sets the dir — a checkpoint
-    // dir can't be unset once set on the shared context. assume() makes a
-    // skipped precondition VISIBLE (canceled, not silently green) if any
-    // earlier-running code set a dir on the shared session.
-    assume(spark.sparkContext.getCheckpointDir.isEmpty,
-      "checkpoint dir already set on the shared context; fail-fast path not testable")
-    intercept[IllegalArgumentException] {
-      Clusters.connectedComponents(
-        Seq((1L, 2L)).toDF("doc_a", "doc_b"), "doc_a", "doc_b",
-        reliable = true)
-    }
-  }
-
-  test("reliable=true cuts lineage via durable checkpoint, same answer") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-    spark.sparkContext.setCheckpointDir(dir)
-    try {
-      val labels = Clusters.connectedComponents(
-          Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("doc_a", "doc_b"),
-          "doc_a", "doc_b", reliable = true)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      Caches.release()
-      assert(labels == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
-      // the durable form actually wrote checkpoint files
-      val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-        .filter(java.nio.file.Files.isRegularFile(_)).count()
-      assert(wrote > 0, s"expected checkpoint files under $dir")
-    } finally {
-      // later suites share the session: don't leave checkpoint garbage
-      // on disk (the dir setting itself can't be unset on a live context)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-    }
-  }
-
   test("matches brute-force components on a hashed pseudo-random graph") {
     // deterministic graph: 30 nodes, edge (i, (i*i*31+7) % 30) for i % 3 != 0
     val edges = (0L until 30L).filter(_ % 3 != 0)

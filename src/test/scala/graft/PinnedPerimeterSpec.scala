@@ -15,10 +15,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * The same source scan guards two more perimeters: sessions are built
   * only by `graft.Session`, and only entry points (Bench, Verify, the
   * curves, tools) read environment variables or system properties, so no
-  * operator grows a process-wide mode or debug switch. Two more keep the
-  * streaming batch bodies on their shared mechanisms: the batch-keyed
-  * overwrite lives only in the admission protocol, and no streaming code
-  * releases session-global caches or cuts lineage by hand.
+  * operator grows a process-wide mode or debug switch. Two more keep code
+  * on its shared mechanisms: the batch-keyed overwrite lives only in the
+  * admission protocol, no streaming code releases session-global caches,
+  * and no code outside `graft.Caches` cuts lineage by hand.
   */
 class PinnedPerimeterSpec extends AnyFunSuite {
 
@@ -97,12 +97,18 @@ class PinnedPerimeterSpec extends AnyFunSuite {
   }
 
   test("streaming code neither releases session-global caches nor checkpoints by hand") {
-    val found = mainSources.collect {
+    val releases = mainSources.collect {
       case (f, src) if f.startsWith("graft/streaming/") &&
-        (src.contains("Caches.release()") || src.contains(".localCheckpoint(")) => f
+        src.contains("Caches.release()") => f
     }
-    assert(found.isEmpty,
-      s"streaming batch bodies release through Caches.scoped and cut lineage " +
-        s"through Caches.lazyBarrier; found in $found")
+    assert(releases.isEmpty,
+      s"streaming batch bodies release through Caches.scoped; found in $releases")
+    val cuts = mainSources.collect {
+      case (f, src) if f != "graft/Caches.scala" &&
+        (src.contains(".localCheckpoint(") || src.contains(".checkpoint(")) => f
+    }
+    assert(cuts.isEmpty,
+      s"lineage is cut only through Caches.lazyBarrier or Caches.pinnedBarrier; " +
+        s"found in $cuts")
   }
 }

@@ -1,11 +1,13 @@
 package graft
 
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 /** Structural pins for the session-pinned frame machinery behind the
   * capstone prefix sharing (Caches.sessionMemo + pinnedBarrier): memo
-  * identity, release()-survival, and the end-to-end property that two
-  * capstone queries really do read the SAME materialized stage frames.
+  * identity, release()-survival, the builder as its own release scope,
+  * and the end-to-end property that two capstone queries really do read
+  * the SAME materialized stage frames.
   */
 class SessionMemoSpec extends SparkSpec {
 
@@ -40,11 +42,36 @@ class SessionMemoSpec extends SparkSpec {
     surviving.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
   }
 
+  test("a memo's pin over its builder's lazyBarrier survives release() before its first read") {
+    Caches.release()
+    val pin = Caches.sessionMemo(spark, "memo-spec-pin-over-barrier") {
+      val grouped = Caches.lazyBarrier(spark.range(0, 1000).toDF("id")
+        .groupBy((col("id") % 10).as("k")).agg(count(lit(1)).as("n")))
+      Caches.pinnedBarrier(grouped.as("a").join(grouped.as("b"), "k"))
+    }
+    Caches.release()
+    assert(pin.count() == 10, "the pin must not need its builder's barrier blocks")
+    pin.queryExecution.logical.collectFirst { case r: LogicalRDD => r.rdd }
+      .foreach(_.unpersist(blocking = false))
+  }
+
+  test("a memo that returns a driver value releases the frames its builder registered") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val n = Caches.sessionMemo(spark, "memo-spec-plain-value") {
+      Caches.persist(spark.range(0, 500).toDF("id")
+        .withColumn("sq", col("id") * col("id"))).count()
+    }
+    assert(n == 500L)
+    assert(sc.getPersistentRDDs.keySet.diff(before).isEmpty,
+      "the builder's persisted frame must be released when the builder returns")
+  }
+
   test("capstone queries share ONE pinned prefix: second build adds no new jobs-scale work") {
     graft.functions.Hashing.register(spark)
     val dir = "/root/testdata/sf0.001"
-    // first capstone build materializes the memoized chain (count() inside
-    // the memo); afterwards v4 and the audit must reference the SAME
+    // first capstone build materializes the memoized chain (its pins are
+    // eager); afterwards v4 and the audit must reference the SAME
     // barriered frames — pin via the stage-frame identity
     val s1 = graft.queries.ScaleQueries.corpusStages(spark, dir)
     val s2 = graft.queries.ScaleQueries.corpusStages(spark, dir)
