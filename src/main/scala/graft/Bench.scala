@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.functions._
 object Bench {
 
   /** Bench hygiene guard: java processes on this host that are NOT this
@@ -211,7 +210,7 @@ object Bench {
   def headlineLine(total: Double, nQueries: Int,
                    finalResults: Map[String, Double],
                    gcTotal: Double, sfDir: String,
-                   decodeJson: String, contention: String,
+                   contention: String,
                    breachNames: Seq[String], suspectNames: Seq[String],
                    failedNames: Seq[String], clean: Boolean,
                    pinnedBuildSec: Double, coldTotalSec: Double): String = {
@@ -233,8 +232,7 @@ object Bench {
       s""""gc_total_sec":${f"$gcTotal%.1f"},""" +
       s""""pinned_build_sec":${f"$pinnedBuildSec%.2f"},""" +
       s""""cold_total_sec":${f"$coldTotalSec%.1f"},""" +
-      s""""sf":"$sfDir",""" +
-      decodeJson + contention +
+      s""""sf":"$sfDir",""" + contention +
       s""","n_breaches":${breachNames.length},"ceiling_breaches":$breachJson,""" +
       s""""n_suspects":${suspectNames.length},""" +
       s""""contention_suspect_breaches":$suspectJson,"clean":$clean,""" +
@@ -422,67 +420,6 @@ object Bench {
           suspects += name
       }
 
-    // Decode-path micro-bench: the one-pass graft_proto_struct vs the
-    // 10-scan per-field composition over the SAME materialized wire
-    // bytes (fixture encode excluded from both arms), full-struct output
-    // through the noop sink. Surfaces the decode-once win as data.
-    graft.functions.Hashing.register(spark)
-    // Armored: a failure here must never zero the whole artifact — the
-    // per-query timings above are already measured, and one broken
-    // micro-bench stage (r5: an uncaught AnalysisException on a changed
-    // fixture encoding) should degrade to a stamped error, not rc=1 with
-    // no JSON line.
-    var decodeError: Option[String] = None
-    val decode = try {
-      import spark.implicits._
-      import graft.functions.ProtoWire._
-      val wire = graft.sources.Tables.events(spark, sfDir)
-        .select(col("event_id"), unix_micros(col("ts")).as("micros"), col("user_id"))
-        .as[(Long, Long, Long)]
-        .mapPartitions { it =>
-          it.map { case (id, micros, user) =>
-            (id, message(lenField(1, message(
-              stringField(1, id.toString),
-              stringField(2, s"corr-${id % 97}"),
-              stringField(3, s"svc-${id % 7}"),
-              timestampField(4, Math.floorDiv(micros, 1000000L),
-                (Math.floorMod(micros, 1000000L) * 1000L).toInt),
-              varintField(5, id % 3 + 1),
-              mapEntryField(6, "h1", s"v${id % 11}"),
-              stringField(7, s"tenant-${user % 50}"),
-              stringField(8, user.toString),
-              varintField(9, id % 5),
-              varintField(10, id % 5)))))
-          }
-        }.toDF("event_id", "value").persist()
-      wire.count() // materialize so neither arm pays the encode
-      def arm(decoder: org.apache.spark.sql.Column => org.apache.spark.sql.Column): Double = {
-        val t0 = System.nanoTime()
-        wire.select(col("event_id"), decoder(col("value")).as("m")).select("event_id", "m.*")
-          .write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      val onePass = math.min(arm(graft.io.KafkaIO.decodeEventMetadata),
-        arm(graft.io.KafkaIO.decodeEventMetadata))
-      val perField = math.min(arm(graft.io.KafkaIO.decodeEventMetadataPerField),
-        arm(graft.io.KafkaIO.decodeEventMetadataPerField))
-      // scan-only floor (cache read + noop write, zero decode): subtract
-      // from both arms for the pure-decode ratio
-      def floorOnce(): Double = {
-        val t0 = System.nanoTime()
-        wire.select(col("event_id"), length(col("value")).as("len"))
-          .write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      val scanFloor = math.min(floorOnce(), floorOnce())
-      wire.unpersist()
-      (onePass, perField, scanFloor)
-    } catch {
-      case t: Throwable =>
-        decodeError = Some(t.toString.replaceAll("[\"\\\\\n\r\t]", " ").take(300))
-        (-1.0, -1.0, -1.0)
-    }
-
     tick()
     val jvmsAfter = foreignJvms()
     val foreign = math.max(jvmsBefore, jvmsAfter)
@@ -551,11 +488,6 @@ object Bench {
       s""""start_delay_sec":${f"$startDelaySec%.1f"},""" +
       s""""headline_contended":$headlineContended,""" +
       s""""variance_reruns":${varianceQueries.size}"""
-    val decodeJson =
-      s""""decode_struct_sec":${f"${decode._1}%.3f"},""" +
-      s""""decode_perfield_sec":${f"${decode._2}%.3f"},""" +
-      s""""decode_floor_sec":${f"${decode._3}%.3f"},""" +
-      decodeError.map(e => s""""decode_error":"$e",""").getOrElse("")
     // pin-construction accounting (r13 verdict #1): session-memo builder
     // seconds per key — the cost min-of-runs excludes from every shipped
     // per-query number — plus each query's FIRST run, so warm totals
@@ -585,7 +517,7 @@ object Bench {
       s""""query_first_run":$qc,"cold_total_sec":${f"$coldTotalSec%.1f"},""" +
       s""""pinned_build_sec":${f"$pinnedBuildSec%.2f"},""" +
       s""""pinned_build":$pinnedJson,""" +
-      decodeJson + contention + s""","variance_queries":$vq,""" +
+      contention + s""","variance_queries":$vq,""" +
       s""""spreads":$spreads,"ceiling_breaches":$breaches,""" +
       s""""contention_suspect_breaches":$suspectJson,"clean":$clean}"""
     val fullPath = java.nio.file.Paths.get("target", "bench_full.json")
@@ -599,7 +531,7 @@ object Bench {
     // verdict's #2 directed keeping the line inside the driver's ~2000-char
     // tail budget after r12's line overran it and zeroed the PERF diff).
     println(headlineLine(total, finalResults.size, finalResults, gcTotal, sfDir,
-      decodeJson, contention, breachNames, suspects.toSeq.sorted, failedNames,
+      contention, breachNames, suspects.toSeq.sorted, failedNames,
       clean, pinnedBuildSec, coldTotalSec))
     if (foreign > 0)
       System.err.println(s"[bench] WARNING: $foreign concurrent java process(es) " +

@@ -128,17 +128,6 @@ object Hashing {
     "graft_nfc" -> (exprs => NfcExpr(exprs(0))),
     "graft_winnow" -> (exprs => WinnowExpr(exprs(0), exprs(1), exprs(2), exprs(3))),
     "graft_window_keys" -> (exprs => WindowKeysExpr(exprs(0), exprs(1), exprs(2))),
-    "graft_proto_string" -> (exprs => ProtoStringExpr(exprs(0), exprs(1))),
-    "graft_proto_long" -> (exprs => ProtoLongExpr(exprs(0), exprs(1))),
-    "graft_proto_timestamp" -> (exprs => ProtoTimestampExpr(exprs(0), exprs(1))),
-    "graft_proto_double" -> (exprs => ProtoDoubleExpr(exprs(0), exprs(1))),
-    "graft_proto_string_list" -> (exprs => ProtoStringListExpr(exprs(0), exprs(1))),
-    "graft_proto_string_map" -> (exprs => ProtoStringMapExpr(exprs(0), exprs(1))),
-    "graft_proto_bytes" -> (exprs => ProtoBytesExpr(exprs(0), exprs(1))),
-    "graft_proto_json_value_map" -> (exprs => ProtoJsonValueMapExpr(exprs(0), exprs(1))),
-    "graft_proto_long_map" -> (exprs => ProtoLongMapExpr(exprs(0), exprs(1))),
-    "graft_proto_struct" -> (exprs => ProtoEventMetadataExpr(exprs(0))),
-    "graft_proto_struct_safe" -> (exprs => ProtoEventMetadataSafeExpr(exprs(0))),
     "graft_proto_decode" -> (exprs => ProtoDecodeExpr(exprs(0), exprs(1))),
     "graft_proto_decode_safe" -> (exprs => ProtoDecodeSafeExpr(exprs(0), exprs(1))),
     "graft_proto_encode" -> (exprs => ProtoEncodeExpr(exprs(0), exprs(1))))
@@ -149,7 +138,7 @@ object Hashing {
     */
   def register(spark: SparkSession): Unit =
     // once per session: ~70 query builds call this inside the bench's
-    // timed region; re-registering 35 functions is only map inserts, but
+    // timed region; re-registering 23 functions is only map inserts, but
     // each replace also logs a WARN through log4j — memoizing removes
     // both the churn and the log spam
     graft.Caches.sessionMemo(spark, "hashing:registered") {

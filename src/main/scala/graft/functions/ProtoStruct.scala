@@ -8,9 +8,9 @@ import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Schema-driven ONE-PASS proto3 decode — the generic form of
-  * `graft_proto_struct`'s EventMetadata special case, equivalent in
-  * surface to the reference's decode-once `DynamicMessage` path
+/** Schema-driven ONE-PASS proto3 decode — the engine's only protobuf
+  * decoder, equivalent in surface to the reference's decode-once
+  * `DynamicMessage` path
   * (`config/KafkaConfig.java:107-114`): given a message descriptor, a
   * SINGLE forward scan of the wire bytes emits the whole Spark struct,
   * nested messages, maps, repeated fields, enums and `google.protobuf`
@@ -26,7 +26,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *     absent;
   *   - maps and repeated fields accumulate across the scan (map merge:
   *     last entry per key wins), empty when absent;
-  *   - unknown fields and wire types are skipped.
+  *   - unknown fields are skipped, and so is a field whose wire type does
+  *     not match its declared kind.
   *
   * The descriptor rides in the expression as a compact spec string (the
   * `graft_proto_decode(value, '<spec>')` SQL surface), parsed once at

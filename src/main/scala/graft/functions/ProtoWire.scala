@@ -1,29 +1,21 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{BinaryType, DataType, LongType, StringType, TimestampType}
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.catalyst.InternalRow
 
-/** Minimal proto3 wire-format reader — the real decode path for the
-  * reference's value format (protobuf over Kafka, SURVEY §1.2), built
-  * directly on the PUBLIC wire spec (protobuf.dev encoding docs: varint
-  * tags `(field_no << 3) | wire_type`, types 0=varint, 1=fixed64,
-  * 2=length-delimited, 5=fixed32). `spark-protobuf`/`protobuf-java` are
-  * not in this container, so instead of stubbing, the engine carries its
-  * own ~100-line scanner: enough to project scalar/nested fields out of
-  * every message in the reference's 5 proto files (strings, int32/64,
-  * bools, enums-as-varints, nested messages incl.
-  * `google.protobuf.Timestamp`).
+/** proto3 wire-format primitives, built directly on the PUBLIC wire spec
+  * (protobuf.dev encoding docs: varint tags `(field_no << 3) | wire_type`,
+  * types 0=varint, 1=fixed64, 2=length-delimited, 5=fixed32).
+  * `spark-protobuf`/`protobuf-java` are not on the classpath, so the
+  * engine carries its own codec:
+  *   - encoders for hand-built frames (fixtures, specs, benchmarks);
+  *   - the bounds-checked [[readVarint]] / [[scan]] primitives that
+  *     [[ProtoStruct.decodeMessage]] — the engine's ONE protobuf decoder,
+  *     descriptor-driven, behind `graft_proto_decode[_safe]` — runs on;
+  *   - `google.protobuf.Value` <-> JSON text, the §1.2 mapping of
+  *     `map<string, Value>` fields, both directions.
   *
-  * Semantics follow proto3: an absent field yields its default ("" / 0),
-  * unknown fields and wire types are skipped, and the LAST occurrence of
-  * a scalar field wins (proto3 merge rule). Field paths descend nested
-  * messages: `"1.4"` = field 4 inside the message at field 1 (e.g.
-  * `metadata.timestamp` on every event envelope).
-  *
-  * Scale: one forward scan per (row, path) with no allocation until the
-  * leaf — codegen'd via the same static-call pattern as the text kernels.
+  * A truncated varint or length, or an unknown wire type, throws
+  * IllegalArgumentException, which the `_safe` decode turns into NULL.
   * Compose with `KafkaIO.stripConfluentProtobufPrefix` for Confluent-
   * framed values.
   */
@@ -82,7 +74,7 @@ object ProtoWire {
   def message(fields: Array[Byte]*): Array[Byte] =
     fields.foldLeft(Array.emptyByteArray)(_ ++ _)
 
-  // ---- decode: one forward scan per path ----
+  // ---- decode primitives ----
 
   /** Reads a varint at `p`; returns the value and writes the next position
     * into `posOut(0)`.
@@ -140,175 +132,42 @@ object ProtoWire {
     found
   }
 
-  /** Descends `path` ("1.4" style); returns [kind, a, b] of the leaf span
-    * or null when any step is absent.
+  /** Walks the fields of [from, end) once, in wire order, calling
+    * `visit(fieldNo, wireType, a, b)`: a varint passes its value as `a`,
+    * every other wire type its payload span [a, b).
     */
-  private def resolve(bytes: Array[Byte], path: UTF8String): Array[Long] = {
-    val parts = path.toString.split('.')
-    var from = 0
-    var end = bytes.length
-    val out = new Array[Long](3)
-    var i = 0
-    while (i < parts.length) {
-      if (!scan(bytes, from, end, parts(i).toInt, out)) return null
-      if (i < parts.length - 1) {
-        require(out(0) == 2, s"path step ${parts(i)} is not a message")
-        from = out(1).toInt
-        end = out(2).toInt
-      }
-      i += 1
-    }
-    out
-  }
-
-  /** String/bytes field at `path` (proto3 default: empty string). */
-  def stringAtPath(bytes: Array[Byte], path: UTF8String): UTF8String = {
-    val span = resolve(bytes, path)
-    if (span == null) UTF8String.EMPTY_UTF8
-    else {
-      require(span(0) == 2, "field is not length-delimited")
-      UTF8String.fromBytes(bytes, span(1).toInt, (span(2) - span(1)).toInt)
-    }
-  }
-
-  /** Varint field (int32/int64/bool/enum) at `path` (proto3 default 0). */
-  def longAtPath(bytes: Array[Byte], path: UTF8String): Long = {
-    val span = resolve(bytes, path)
-    if (span == null) 0L
-    else {
-      require(span(0) == 0, "field is not a varint")
-      span(1)
-    }
-  }
-
-  /** `google.protobuf.Timestamp` message at `path` → epoch micros
-    * (proto3 default 0 = epoch).
-    */
-  def timestampMicrosAtPath(bytes: Array[Byte], path: UTF8String): Long = {
-    val span = resolve(bytes, path)
-    if (span == null) 0L
-    else {
-      require(span(0) == 2, "timestamp field is not a message")
-      val out = new Array[Long](3)
-      val from = span(1).toInt
-      val end = span(2).toInt
-      val secs = if (scan(bytes, from, end, 1, out)) out(1) else 0L
-      val nanos = if (scan(bytes, from, end, 2, out)) out(1) else 0L
-      secs * 1000000L + nanos / 1000L
-    }
-  }
-
-  /** Double field (wire type 1, IEEE-754 little-endian) at `path`
-    * (proto3 default 0.0).
-    */
-  def doubleAtPath(bytes: Array[Byte], path: UTF8String): Double = {
-    val span = resolve(bytes, path)
-    if (span == null) 0.0
-    else {
-      require(span(0) == 1, "field is not fixed64")
-      var bits = 0L
-      var i = 0
-      val from = span(1).toInt
-      while (i < 8) {
-        bits |= (bytes(from + i) & 0xffL) << (8 * i)
-        i += 1
-      }
-      java.lang.Double.longBitsToDouble(bits)
-    }
-  }
-
-  /** Bounds of the message holding the LAST path step, or null if absent:
-    * ((from, end), lastFieldNo).
-    */
-  private def parentBounds(bytes: Array[Byte], path: UTF8String): (Int, Int, Int) = {
-    val parts = path.toString.split('.')
-    var from = 0
-    var end = bytes.length
-    val out = new Array[Long](3)
-    var i = 0
-    while (i < parts.length - 1) {
-      if (!scan(bytes, from, end, parts(i).toInt, out)) return null
-      require(out(0) == 2, s"path step ${parts(i)} is not a message")
-      from = out(1).toInt
-      end = out(2).toInt
-      i += 1
-    }
-    (from, end, parts(parts.length - 1).toInt)
-  }
-
-  /** Collects the spans of EVERY occurrence of the last path step (the
-    * repeated-field read the scalar scan's last-wins rule hides).
-    */
-  private[functions] def scanAll(bytes: Array[Byte], from: Int, end: Int,
-                      fieldNo: Int): java.util.ArrayList[Array[Long]] = {
-    val hits = new java.util.ArrayList[Array[Long]]()
+  private def foreachField(bytes: Array[Byte], from: Int, end: Int)(
+      visit: (Int, Int, Long, Long) => Unit): Unit = {
     val pos = new Array[Int](1)
     var p = from
     while (p < end) {
       val tag = readVarint(bytes, p, end, pos); p = pos(0)
       val f = (tag >>> 3).toInt
-      val wt = (tag & 7).toInt
-      wt match {
+      (tag & 7).toInt match {
         case 0 =>
           val v = readVarint(bytes, p, end, pos); p = pos(0)
-          if (f == fieldNo) hits.add(Array(0L, v, 0L))
+          visit(f, 0, v, 0L)
         case 1 =>
           require(p + 8 <= end, "truncated fixed64")
-          if (f == fieldNo) hits.add(Array(1L, p.toLong, (p + 8).toLong))
-          p += 8
+          visit(f, 1, p.toLong, (p + 8).toLong); p += 8
         case 2 =>
           val len = readVarint(bytes, p, end, pos).toInt; p = pos(0)
           require(len >= 0 && len <= end - p, "truncated length-delimited field")
-          if (f == fieldNo) hits.add(Array(2L, p.toLong, (p + len).toLong))
-          p += len
+          visit(f, 2, p.toLong, (p + len).toLong); p += len
         case 5 =>
           require(p + 4 <= end, "truncated fixed32")
-          if (f == fieldNo) hits.add(Array(5L, p.toLong, (p + 4).toLong))
-          p += 4
-        case other =>
-          throw new IllegalArgumentException(s"unsupported wire type $other")
+          visit(f, 5, p.toLong, (p + 4).toLong); p += 4
+        case other => throw new IllegalArgumentException(s"unsupported wire type $other")
       }
     }
-    hits
   }
 
-  /** `repeated string` at `path` → array of strings (empty when absent). */
-  def stringListAtPath(bytes: Array[Byte], path: UTF8String): org.apache.spark.sql.catalyst.util.ArrayData = {
-    val pb = parentBounds(bytes, path)
-    if (pb == null) return new org.apache.spark.sql.catalyst.util.GenericArrayData(Array.empty[Any])
-    val hits = scanAll(bytes, pb._1, pb._2, pb._3)
-    val out = new Array[Any](hits.size())
-    var i = 0
-    while (i < hits.size()) {
-      val h = hits.get(i)
-      require(h(0) == 2, "repeated field is not length-delimited")
-      out(i) = UTF8String.fromBytes(bytes, h(1).toInt, (h(2) - h(1)).toInt)
-      i += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-  }
-
-  /** Raw length-delimited payload (bytes / embedded message) at `path`,
-    * or null when absent — the `google.protobuf.Any.value` reader.
-    */
-  def bytesAtPath(bytes: Array[Byte], path: UTF8String): Array[Byte] = {
-    val span = resolve(bytes, path)
-    if (span == null) null
-    else {
-      require(span(0) == 2, "field is not length-delimited")
-      java.util.Arrays.copyOfRange(bytes, span(1).toInt, span(2).toInt)
-    }
-  }
-
-  /** `google.protobuf.Value` (struct.proto) at [from, end) rendered as
-    * JSON text — the §1.2 mapping for `map<string, Value>` fields (the
-    * arbitrary-JSON case). Handles every Value kind: null_value(1),
-    * number_value(2), string_value(3), bool_value(4), struct_value(5),
-    * list_value(6), recursing through Struct.fields entries and
-    * ListValue.values.
-    */
-  /** [[valueToJson]] over a whole Value message — the public round-trip
-    * counterpart of [[jsonToValue]].
+  /** `google.protobuf.Value` (struct.proto) rendered as JSON text — the
+    * §1.2 mapping for `map<string, Value>` fields (the arbitrary-JSON
+    * case) and the public round-trip counterpart of [[jsonToValue]].
+    * Handles every Value kind: null_value(1), number_value(2),
+    * string_value(3), bool_value(4), struct_value(5), list_value(6),
+    * recursing through Struct.fields entries and ListValue.values.
     */
   def valueToJson(bytes: Array[Byte]): String = valueToJson(bytes, 0, bytes.length)
 
@@ -317,34 +176,17 @@ object ProtoWire {
 
   private def valueToJson(bytes: Array[Byte], from: Int, end: Int, depth: Int): String = {
     require(depth <= MaxValueDepth, s"Value nesting deeper than $MaxValueDepth")
-    val out = new Array[Long](3)
     // later-set kind wins (proto3 oneof merge): take the LAST present tag
     var kind = -1
     var a = 0L; var b = 0L
-    val pos = new Array[Int](1)
-    var p = from
-    while (p < end) {
-      val tag = readVarint(bytes, p, end, pos); p = pos(0)
-      val f = (tag >>> 3).toInt
-      val wt = (tag & 7).toInt
-      wt match {
-        case 0 =>
-          val v = readVarint(bytes, p, end, pos); p = pos(0)
-          if (f == 1 || f == 4) { kind = f; a = v }
-        case 1 =>
-          require(p + 8 <= end, "truncated fixed64")
-          if (f == 2) { kind = 2; a = p.toLong }
-          p += 8
-        case 2 =>
-          val len = readVarint(bytes, p, end, pos).toInt; p = pos(0)
-          require(len >= 0 && len <= end - p, "truncated length-delimited field")
-          if (f == 3 || f == 5 || f == 6) { kind = f; a = p.toLong; b = (p + len).toLong }
-          p += len
-        case 5 =>
-          require(p + 4 <= end, "truncated fixed32")
-          p += 4
-        case other => throw new IllegalArgumentException(s"wire type $other in Value")
+    foreachField(bytes, from, end) { (f, wt, x, y) =>
+      val hit = wt match {
+        case 0 => f == 1 || f == 4
+        case 1 => f == 2
+        case 2 => f == 3 || f == 5 || f == 6
+        case _ => false
       }
+      if (hit) { kind = f; a = x; b = y }
     }
     kind match {
       case -1 | 1 => "null"
@@ -358,29 +200,26 @@ object ProtoWire {
       case 3 => jsonQuote(new String(bytes, a.toInt, (b - a).toInt, "UTF-8"))
       case 4 => if (a != 0L) "true" else "false"
       case 5 => // Struct: repeated FieldsEntry {1: key, 2: Value}
-        val entries = scanAll(bytes, a.toInt, b.toInt, 1)
+        val out = new Array[Long](3)
         val sb = new java.lang.StringBuilder("{")
-        var i = 0
-        while (i < entries.size()) {
-          val h = entries.get(i)
-          val k = if (scan(bytes, h(1).toInt, h(2).toInt, 1, out) && out(0) == 2)
-            new String(bytes, out(1).toInt, (out(2) - out(1)).toInt, "UTF-8") else ""
-          val v = if (scan(bytes, h(1).toInt, h(2).toInt, 2, out) && out(0) == 2)
-            valueToJson(bytes, out(1).toInt, out(2).toInt, depth + 1) else "null"
-          if (i > 0) sb.append(',')
-          sb.append(jsonQuote(k)).append(':').append(v)
-          i += 1
+        foreachField(bytes, a.toInt, b.toInt) { (f, wt, x, y) =>
+          if (f == 1 && wt == 2) {
+            val k = if (scan(bytes, x.toInt, y.toInt, 1, out) && out(0) == 2)
+              new String(bytes, out(1).toInt, (out(2) - out(1)).toInt, "UTF-8") else ""
+            val v = if (scan(bytes, x.toInt, y.toInt, 2, out) && out(0) == 2)
+              valueToJson(bytes, out(1).toInt, out(2).toInt, depth + 1) else "null"
+            if (sb.length > 1) sb.append(',')
+            sb.append(jsonQuote(k)).append(':').append(v)
+          }
         }
         sb.append('}').toString
       case 6 => // ListValue: repeated Value
-        val vals = scanAll(bytes, a.toInt, b.toInt, 1)
         val sb = new java.lang.StringBuilder("[")
-        var i = 0
-        while (i < vals.size()) {
-          val h = vals.get(i)
-          if (i > 0) sb.append(',')
-          sb.append(valueToJson(bytes, h(1).toInt, h(2).toInt, depth + 1))
-          i += 1
+        foreachField(bytes, a.toInt, b.toInt) { (f, wt, x, y) =>
+          if (f == 1 && wt == 2) {
+            if (sb.length > 1) sb.append(',')
+            sb.append(valueToJson(bytes, x.toInt, y.toInt, depth + 1))
+          }
         }
         sb.append(']').toString
     }
@@ -557,421 +396,14 @@ object ProtoWire {
     sb.append('"').toString
   }
 
-  /** `map<string, google.protobuf.Value>` at `path` → map with values
-    * JSON-encoded as text (the EventSchemas §1.2 mapping).
+  /** The EventMetadata envelope of one wire frame as its 10-field row
+    * (`ProtoSchemas.eventMetadata` order), or null when the bytes are
+    * corrupt or carry no envelope: [[ProtoStruct.decodeSafe]] under the
+    * `ProtoSchemas.envelope` descriptor, for callers outside a Spark plan.
     */
-  def jsonValueMapAtPath(bytes: Array[Byte], path: UTF8String): org.apache.spark.sql.catalyst.util.MapData = {
-    val pb = parentBounds(bytes, path)
-    val entries = new java.util.LinkedHashMap[UTF8String, UTF8String]()
-    if (pb != null) {
-      val hits = scanAll(bytes, pb._1, pb._2, pb._3)
-      val out = new Array[Long](3)
-      var i = 0
-      while (i < hits.size()) {
-        val h = hits.get(i)
-        require(h(0) == 2, "map entry is not a message")
-        val k = if (scan(bytes, h(1).toInt, h(2).toInt, 1, out) && out(0) == 2)
-          UTF8String.fromBytes(bytes, out(1).toInt, (out(2) - out(1)).toInt)
-        else UTF8String.EMPTY_UTF8
-        val v = if (scan(bytes, h(1).toInt, h(2).toInt, 2, out) && out(0) == 2)
-          UTF8String.fromString(valueToJson(bytes, out(1).toInt, out(2).toInt))
-        else UTF8String.fromString("null")
-        entries.put(k, v)
-        i += 1
-      }
-    }
-    val ks = new Array[Any](entries.size())
-    val vs = new Array[Any](entries.size())
-    val it = entries.entrySet().iterator()
-    var i = 0
-    while (it.hasNext) {
-      val e = it.next(); ks(i) = e.getKey; vs(i) = e.getValue; i += 1
-    }
-    org.apache.spark.sql.catalyst.util.ArrayBasedMapData(ks, vs)
+  def eventMetadataStructSafe(bytes: Array[Byte]): InternalRow = {
+    val row = ProtoStruct.decodeSafe(bytes, graft.schema.ProtoSchemas.envelope)
+    if (row == null) null
+    else row.getStruct(0, graft.schema.ProtoSchemas.eventMetadata.length)
   }
-
-  /** `map<string, string>` at `path` (repeated `{1: key, 2: value}`
-    * entries) → Spark map (empty when absent; last entry per key wins,
-    * the proto3 map-merge rule).
-    */
-  def stringMapAtPath(bytes: Array[Byte], path: UTF8String): org.apache.spark.sql.catalyst.util.MapData = {
-    val pb = parentBounds(bytes, path)
-    val entries = new java.util.LinkedHashMap[UTF8String, UTF8String]()
-    if (pb != null) {
-      val hits = scanAll(bytes, pb._1, pb._2, pb._3)
-      val out = new Array[Long](3)
-      var i = 0
-      while (i < hits.size()) {
-        val h = hits.get(i)
-        require(h(0) == 2, "map entry is not a message")
-        val k = if (scan(bytes, h(1).toInt, h(2).toInt, 1, out) && out(0) == 2)
-          UTF8String.fromBytes(bytes, out(1).toInt, (out(2) - out(1)).toInt)
-        else UTF8String.EMPTY_UTF8
-        val v = if (scan(bytes, h(1).toInt, h(2).toInt, 2, out) && out(0) == 2)
-          UTF8String.fromBytes(bytes, out(1).toInt, (out(2) - out(1)).toInt)
-        else UTF8String.EMPTY_UTF8
-        entries.put(k, v)
-        i += 1
-      }
-    }
-    val ks = new Array[Any](entries.size())
-    val vs = new Array[Any](entries.size())
-    val it = entries.entrySet().iterator()
-    var i = 0
-    while (it.hasNext) {
-      val e = it.next(); ks(i) = e.getKey; vs(i) = e.getValue; i += 1
-    }
-    org.apache.spark.sql.catalyst.util.ArrayBasedMapData(ks, vs)
-  }
-
-  /** `map<string,int64>` at `path` (repeated `{1: key, 2: varint}`
-    * entries) → Spark map (empty when absent; last entry per key wins,
-    * the proto3 map-merge rule). Closes the §1.2 type surface: the
-    * usage-breakdown map, reference `commands.proto:149`.
-    */
-  def longMapAtPath(bytes: Array[Byte], path: UTF8String): org.apache.spark.sql.catalyst.util.MapData = {
-    val pb = parentBounds(bytes, path)
-    val entries = new java.util.LinkedHashMap[UTF8String, java.lang.Long]()
-    if (pb != null) {
-      val hits = scanAll(bytes, pb._1, pb._2, pb._3)
-      val out = new Array[Long](3)
-      var i = 0
-      while (i < hits.size()) {
-        val h = hits.get(i)
-        require(h(0) == 2, "map entry is not a message")
-        val k = if (scan(bytes, h(1).toInt, h(2).toInt, 1, out) && out(0) == 2)
-          UTF8String.fromBytes(bytes, out(1).toInt, (out(2) - out(1)).toInt)
-        else UTF8String.EMPTY_UTF8
-        val v: java.lang.Long = if (scan(bytes, h(1).toInt, h(2).toInt, 2, out) && out(0) == 0)
-          out(1) else 0L
-        entries.put(k, v)
-        i += 1
-      }
-    }
-    val ks = new Array[Any](entries.size())
-    val vs = new Array[Any](entries.size())
-    val it = entries.entrySet().iterator()
-    var i = 0
-    while (it.hasNext) {
-      val e = it.next(); ks(i) = e.getKey; vs(i) = e.getValue.longValue; i += 1
-    }
-    org.apache.spark.sql.catalyst.util.ArrayBasedMapData(ks, vs)
-  }
-
-  // ---- one-pass EventMetadata struct decode ----
-
-  /** Spark schema of the EventMetadata envelope (`common.proto:38-49`) —
-    * field order matches [[eventMetadataStruct]]'s row layout and the
-    * legacy per-field composition in `KafkaIO.decodeEventMetadata`.
-    */
-  val eventMetadataSchema: org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("event_id", StringType, nullable = false),
-      org.apache.spark.sql.types.StructField("correlation_id", StringType, nullable = false),
-      org.apache.spark.sql.types.StructField("source_service", StringType, nullable = false),
-      org.apache.spark.sql.types.StructField("timestamp", TimestampType, nullable = false),
-      org.apache.spark.sql.types.StructField("version", org.apache.spark.sql.types.IntegerType, nullable = false),
-      org.apache.spark.sql.types.StructField("headers",
-        org.apache.spark.sql.types.MapType(StringType, StringType, valueContainsNull = false), nullable = false),
-      org.apache.spark.sql.types.StructField("tenant_id", StringType, nullable = false),
-      org.apache.spark.sql.types.StructField("user_id", StringType, nullable = false),
-      org.apache.spark.sql.types.StructField("priority", StringType, nullable = false),
-      org.apache.spark.sql.types.StructField("retry_count", org.apache.spark.sql.types.IntegerType, nullable = false)))
-
-  private val priorityNames: Array[UTF8String] =
-    graft.operators.Envelope.priorities.map(UTF8String.fromString).toArray
-
-  /** Decodes the full EventMetadata envelope (field 1 of every reference
-    * event) in ONE forward scan of the value bytes — the decode-once model
-    * of the reference's `DynamicMessage` path
-    * (`service/BaseEventConsumer.java:115-131`). The per-field
-    * `graft_proto_*` composition re-parses the message once per projected
-    * field (~10× the necessary work at scale); this emits the whole struct
-    * from a single pass: one top-level scan to locate the metadata
-    * message, one scan of its body collecting all 10 fields (last-wins
-    * for scalars, accumulated entries for the headers map), plus one
-    * bounded sub-scan of the tiny Timestamp message.
-    *
-    * Absent fields get proto3 defaults ("" / 0 / epoch / empty map);
-    * an out-of-range priority enum falls back to index 0
-    * (PRIORITY_UNSPECIFIED), matching the legacy composition.
-    */
-  def eventMetadataStruct(bytes: Array[Byte]): org.apache.spark.sql.catalyst.InternalRow = {
-    val top = new Array[Long](3)
-    val row = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(10)
-    // proto3 defaults
-    row.update(0, UTF8String.EMPTY_UTF8)
-    row.update(1, UTF8String.EMPTY_UTF8)
-    row.update(2, UTF8String.EMPTY_UTF8)
-    row.setLong(3, 0L)
-    row.setInt(4, 0)
-    row.update(5, org.apache.spark.sql.catalyst.util.ArrayBasedMapData(Array.empty[Any], Array.empty[Any]))
-    row.update(6, UTF8String.EMPTY_UTF8)
-    row.update(7, UTF8String.EMPTY_UTF8)
-    row.update(8, priorityNames(0))
-    row.setInt(9, 0)
-    if (!scan(bytes, 0, bytes.length, 1, top) || top(0) != 2) return row
-    val from = top(1).toInt
-    val end = top(2).toInt
-    var tsFrom = -1; var tsEnd = -1
-    val headerKs = new java.util.LinkedHashMap[UTF8String, UTF8String]()
-    val out = new Array[Long](3)
-    val pos = new Array[Int](1)
-    var p = from
-    while (p < end) {
-      val tag = readVarint(bytes, p, end, pos); p = pos(0)
-      val f = (tag >>> 3).toInt
-      val wt = (tag & 7).toInt
-      wt match {
-        case 0 =>
-          val v = readVarint(bytes, p, end, pos); p = pos(0)
-          f match {
-            case 5  => row.setInt(4, v.toInt)
-            case 9  =>
-              val i = v.toInt
-              row.update(8, if (i >= 0 && i < priorityNames.length) priorityNames(i)
-                            else priorityNames(0))
-            case 10 => row.setInt(9, v.toInt)
-            case _  =>
-          }
-        case 1 =>
-          require(p + 8 <= end, "truncated fixed64")
-          p += 8
-        case 2 =>
-          val len = readVarint(bytes, p, end, pos).toInt; p = pos(0)
-          require(len >= 0 && len <= end - p, "truncated length-delimited field")
-          f match {
-            case 1 => row.update(0, UTF8String.fromBytes(bytes, p, len))
-            case 2 => row.update(1, UTF8String.fromBytes(bytes, p, len))
-            case 3 => row.update(2, UTF8String.fromBytes(bytes, p, len))
-            case 4 => tsFrom = p; tsEnd = p + len
-            case 6 =>
-              val k = if (scan(bytes, p, p + len, 1, out) && out(0) == 2)
-                UTF8String.fromBytes(bytes, out(1).toInt, (out(2) - out(1)).toInt)
-              else UTF8String.EMPTY_UTF8
-              val v = if (scan(bytes, p, p + len, 2, out) && out(0) == 2)
-                UTF8String.fromBytes(bytes, out(1).toInt, (out(2) - out(1)).toInt)
-              else UTF8String.EMPTY_UTF8
-              headerKs.put(k, v)
-            case 7 => row.update(6, UTF8String.fromBytes(bytes, p, len))
-            case 8 => row.update(7, UTF8String.fromBytes(bytes, p, len))
-            case _ =>
-          }
-          p += len
-        case 5 =>
-          require(p + 4 <= end, "truncated fixed32")
-          p += 4
-        case other =>
-          throw new IllegalArgumentException(s"unsupported wire type $other")
-      }
-    }
-    if (tsFrom >= 0) {
-      val secs = if (scan(bytes, tsFrom, tsEnd, 1, out) && out(0) == 0) out(1) else 0L
-      val nanos = if (scan(bytes, tsFrom, tsEnd, 2, out) && out(0) == 0) out(1) else 0L
-      row.setLong(3, secs * 1000000L + nanos / 1000L)
-    }
-    if (!headerKs.isEmpty) {
-      val ks = new Array[Any](headerKs.size())
-      val vs = new Array[Any](headerKs.size())
-      val it = headerKs.entrySet().iterator()
-      var i = 0
-      while (it.hasNext) {
-        val e = it.next(); ks(i) = e.getKey; vs(i) = e.getValue; i += 1
-      }
-      row.update(5, org.apache.spark.sql.catalyst.util.ArrayBasedMapData(ks, vs))
-    }
-    row
-  }
-
-  /** Poison-pill-tolerant [[eventMetadataStruct]]: corrupt wire bytes
-    * (truncated varint, bad length, unknown wire type) decode to NULL
-    * instead of killing the job — the reference's
-    * ErrorHandlingDeserializer contract (E7): one bad record routes to
-    * the DLQ, the pipeline survives. The strict form stays the default
-    * for trusted storage, where an exception IS the right answer.
-    */
-  def eventMetadataStructSafe(bytes: Array[Byte]): org.apache.spark.sql.catalyst.InternalRow =
-    try eventMetadataStruct(bytes)
-    catch { case _: IllegalArgumentException | _: ArrayIndexOutOfBoundsException => null }
-}
-
-/** `graft_proto_string(value, '1.2')`: UTF-8 string field at a wire path. */
-final case class ProtoStringExpr(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, StringType)
-  override def dataType: DataType = StringType
-  override def nullSafeEval(b: Any, p: Any): Any =
-    ProtoWire.stringAtPath(b.asInstanceOf[Array[Byte]], p.asInstanceOf[UTF8String])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (b, p) => s"graft.functions.ProtoWire.stringAtPath($b, $p)")
-  override def prettyName: String = "graft_proto_string"
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}
-
-/** `graft_proto_long(value, '1.5')`: varint field (int/bool/enum) at a wire path. */
-final case class ProtoLongExpr(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, StringType)
-  override def dataType: DataType = LongType
-  override def nullSafeEval(b: Any, p: Any): Any =
-    ProtoWire.longAtPath(b.asInstanceOf[Array[Byte]], p.asInstanceOf[UTF8String])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (b, p) => s"graft.functions.ProtoWire.longAtPath($b, $p)")
-  override def prettyName: String = "graft_proto_long"
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}
-
-/** `graft_proto_double(value, '2.7')`: fixed64 IEEE double at a wire path. */
-final case class ProtoDoubleExpr(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, StringType)
-  override def dataType: DataType = org.apache.spark.sql.types.DoubleType
-  override def nullSafeEval(b: Any, p: Any): Any =
-    ProtoWire.doubleAtPath(b.asInstanceOf[Array[Byte]], p.asInstanceOf[UTF8String])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (b, p) => s"graft.functions.ProtoWire.doubleAtPath($b, $p)")
-  override def prettyName: String = "graft_proto_double"
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}
-
-/** `graft_proto_string_list(value, '2.12')`: repeated string at a wire path. */
-final case class ProtoStringListExpr(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, StringType)
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(StringType, containsNull = false)
-  override def nullSafeEval(b: Any, p: Any): Any =
-    ProtoWire.stringListAtPath(b.asInstanceOf[Array[Byte]], p.asInstanceOf[UTF8String])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (b, p) => s"graft.functions.ProtoWire.stringListAtPath($b, $p)")
-  override def prettyName: String = "graft_proto_string_list"
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}
-
-/** `graft_proto_string_map(value, '1.6')`: map<string,string> at a wire path. */
-final case class ProtoStringMapExpr(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, StringType)
-  override def dataType: DataType =
-    org.apache.spark.sql.types.MapType(StringType, StringType, valueContainsNull = false)
-  override def nullSafeEval(b: Any, p: Any): Any =
-    ProtoWire.stringMapAtPath(b.asInstanceOf[Array[Byte]], p.asInstanceOf[UTF8String])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (b, p) => s"graft.functions.ProtoWire.stringMapAtPath($b, $p)")
-  override def prettyName: String = "graft_proto_string_map"
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}
-
-/** `graft_proto_bytes(value, '2.6.2')`: raw length-delimited payload
-  * (bytes / google.protobuf.Any.value) at a wire path, null when absent.
-  */
-final case class ProtoBytesExpr(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, StringType)
-  override def dataType: DataType = org.apache.spark.sql.types.BinaryType
-  override def nullSafeEval(b: Any, p: Any): Any =
-    ProtoWire.bytesAtPath(b.asInstanceOf[Array[Byte]], p.asInstanceOf[UTF8String])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (b, p) => s"graft.functions.ProtoWire.bytesAtPath($b, $p)")
-  override def prettyName: String = "graft_proto_bytes"
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}
-
-/** `graft_proto_json_value_map(value, '2.2')`: map<string,
-  * google.protobuf.Value> at a wire path, values rendered as JSON text.
-  */
-final case class ProtoJsonValueMapExpr(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, StringType)
-  override def dataType: DataType =
-    org.apache.spark.sql.types.MapType(StringType, StringType, valueContainsNull = false)
-  override def nullSafeEval(b: Any, p: Any): Any =
-    ProtoWire.jsonValueMapAtPath(b.asInstanceOf[Array[Byte]], p.asInstanceOf[UTF8String])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (b, p) => s"graft.functions.ProtoWire.jsonValueMapAtPath($b, $p)")
-  override def prettyName: String = "graft_proto_json_value_map"
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}
-
-/** `graft_proto_long_map(value, '2.3')`: map<string,int64> at a wire path
-  * (varint-valued map entries — the §1.2 usage-breakdown shape).
-  */
-final case class ProtoLongMapExpr(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, StringType)
-  override def dataType: DataType =
-    org.apache.spark.sql.types.MapType(StringType, LongType, valueContainsNull = false)
-  override def nullSafeEval(b: Any, p: Any): Any =
-    ProtoWire.longMapAtPath(b.asInstanceOf[Array[Byte]], p.asInstanceOf[UTF8String])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (b, p) => s"graft.functions.ProtoWire.longMapAtPath($b, $p)")
-  override def prettyName: String = "graft_proto_long_map"
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}
-
-/** `graft_proto_struct(value)`: the WHOLE EventMetadata envelope decoded
-  * in one pass over the value bytes (vs one re-parse per projected field
-  * in the `graft_proto_*` composition) — the decode-once model of the
-  * reference's `DynamicMessage` path (`service/BaseEventConsumer.java:115-131`).
-  */
-final case class ProtoEventMetadataExpr(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
-    with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = ProtoWire.eventMetadataSchema
-  override def nullSafeEval(b: Any): Any =
-    ProtoWire.eventMetadataStruct(b.asInstanceOf[Array[Byte]])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, b => s"graft.functions.ProtoWire.eventMetadataStruct($b)")
-  override def prettyName: String = "graft_proto_struct"
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** `graft_proto_struct_safe(value)`: [[ProtoEventMetadataExpr]] with the
-  * E7 poison-pill contract — corrupt bytes yield NULL (route to DLQ)
-  * instead of an exception.
-  */
-final case class ProtoEventMetadataSafeExpr(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
-    with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = ProtoWire.eventMetadataSchema
-  override def nullable: Boolean = true
-  override def nullSafeEval(b: Any): Any =
-    ProtoWire.eventMetadataStructSafe(b.asInstanceOf[Array[Byte]])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    // nullSafeCodeGen (not defineCodeGen): the call itself may return
-    // null on corrupt bytes, so isNull must be re-derived from the result
-    nullSafeCodeGen(ctx, ev, b => s"""
-      ${ev.value} = graft.functions.ProtoWire.eventMetadataStructSafe($b);
-      ${ev.isNull} = (${ev.value} == null);
-    """)
-  override def prettyName: String = "graft_proto_struct_safe"
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** `graft_proto_timestamp(value, '1.4')`: google.protobuf.Timestamp at a
-  * wire path, as a Spark TIMESTAMP (micros).
-  */
-final case class ProtoTimestampExpr(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, StringType)
-  override def dataType: DataType = TimestampType
-  override def nullSafeEval(b: Any, p: Any): Any =
-    ProtoWire.timestampMicrosAtPath(b.asInstanceOf[Array[Byte]], p.asInstanceOf[UTF8String])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (b, p) => s"graft.functions.ProtoWire.timestampMicrosAtPath($b, $p)")
-  override def prettyName: String = "graft_proto_timestamp"
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
 }

@@ -159,43 +159,16 @@ object KafkaIO {
       .otherwise(lit(null).cast("binary"))
   }
 
-  /** Projects the common `EventMetadata` envelope (field 1 of EVERY
+  /** Decodes the common `EventMetadata` envelope (field 1 of EVERY
     * reference event, `common.proto:38-49`) out of a bare-protobuf value
-    * column, using the engine's own wire reader
-    * ([[graft.functions.ProtoWire]] — `spark-protobuf` is absent in this
-    * container, so the decode path is real, not stubbed). Compose with
+    * column through the engine's one protobuf decoder: the
+    * [[graft.schema.ProtoSchemas.envelope]] descriptor, one pass over the
+    * bytes. proto3 presence applies: an absent envelope or `Timestamp`
+    * decodes to null, absent scalars to their defaults. Compose with
     * [[stripConfluentProtobufPrefix]] for Confluent-framed Kafka values.
-    * Full EventMetadata surface incl. the `headers` map (repeated
-    * map-entry collection). Sessions must call
-    * `graft.functions.Hashing.register` first.
+    * Sessions must call `graft.functions.Hashing.register` first.
     */
   def decodeEventMetadata(value: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    call_function("graft_proto_struct", value)
-
-  /** The per-field composition [[decodeEventMetadata]] replaced: 10
-    * independent `graft_proto_*` projections, each re-parsing the value
-    * bytes from the start (~10× the parse work of the one-pass
-    * `graft_proto_struct`). Kept as the spec cross-check that pins the
-    * one-pass decoder to the path-reader semantics (KafkaWireSpec), and
-    * as the à-la-carte form for projecting a single envelope field.
-    */
-  def decodeEventMetadataPerField(value: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    def s(p: String) = call_function("graft_proto_string", value, lit(p))
-    def l(p: String) = call_function("graft_proto_long", value, lit(p))
-    val priority = graft.operators.Envelope.priorities.zipWithIndex
-      .foldLeft(lit(graft.operators.Envelope.priorities.head)) {
-        case (acc, (name, i)) => when(l("1.9") === i.toLong, lit(name)).otherwise(acc)
-      }
-    struct(
-      s("1.1").as("event_id"),
-      s("1.2").as("correlation_id"),
-      s("1.3").as("source_service"),
-      call_function("graft_proto_timestamp", value, lit("1.4")).as("timestamp"),
-      l("1.5").cast("int").as("version"),
-      call_function("graft_proto_string_map", value, lit("1.6")).as("headers"),
-      s("1.7").as("tenant_id"),
-      s("1.8").as("user_id"),
-      priority.as("priority"),
-      l("1.10").cast("int").as("retry_count"))
-  }
+    graft.schema.ProtoSchemas.decode(value, graft.schema.ProtoSchemas.envelope)
+      .getField("metadata")
 }

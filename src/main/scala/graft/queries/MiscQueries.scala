@@ -1,7 +1,9 @@
 package graft.queries
 
 import graft.QueryDef
+import graft.functions.ProtoStruct
 import graft.operators._
+import graft.schema.ProtoSchemas
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -25,8 +27,8 @@ object MiscQueries {
     * are INPUT read from Kafka, and the operator under test is the DECODE
     * expression that runs on them. Re-encoding the fixture per run timed
     * the string-building mapPartitions encoder, not the decode path
-    * (Bench's decode micro-bench: one-pass decode 0.11 s vs ~1.0 s warm
-    * query time — the gap was fixture encode). The pinned frame is
+    * (a decode-only run over pre-encoded frames took 0.11 s against
+    * ~1.0 s of warm query time — the gap was fixture encode). The pinned frame is
     * byte-identical to the per-run synthesis; every decode still runs per
     * action. NOT used for f14/f15/f16, whose graft_proto_encode expression
     * is itself half of the codec pair under test.
@@ -43,7 +45,7 @@ object MiscQueries {
     // F11: protobuf wire round-trip, oracle-validated end to end. The
     // envelope is wire-ENCODED from the events fixture (typed
     // mapPartitions over graft.functions.ProtoWire — proto3 spec bytes),
-    // then DECODED back with the native graft_proto_* expressions; the
+    // then DECODED back through the envelope descriptor; the
     // DuckDB oracle computes the same scalars directly from the fixture,
     // so any wire corruption breaks the hash. This is the real decode
     // path for the reference's value format (spark-protobuf absent —
@@ -94,7 +96,8 @@ object MiscQueries {
 
     // F12: one-pass struct decode, oracle-validated over the FULL
     // EventMetadata surface (all 10 fields incl. two headers-map entries)
-    // plus the map<string,int64> usage-breakdown reader — the decode-once
+    // plus the map<string,int64> usage breakdown, both read by ONE
+    // descriptor in one scan of the value bytes — the decode-once
     // model of the reference's DynamicMessage path
     // (service/BaseEventConsumer.java:115-131). Same wire-encode fixture
     // discipline as f11; the DuckDB oracle recomputes every scalar from
@@ -130,9 +133,9 @@ object MiscQueries {
             }
           }.toDF("event_id", "value")
         }
-        wire.select(col("event_id"),
-            call_function("graft_proto_struct", col("value")).as("m"),
-            call_function("graft_proto_long_map", col("value"), lit("3")).as("usage"))
+        val desc = ProtoSchemas.envelope :+ ProtoStruct.PField(3, "usage", ProtoStruct.KLMap)
+        wire.select(col("event_id"), ProtoSchemas.decode(col("value"), desc).as("d"))
+          .select(col("event_id"), col("d.metadata").as("m"), col("d.usage").as("usage"))
           .select(col("event_id"),
             col("m.event_id").as("event_id_s"),
             col("m.correlation_id"),
@@ -165,7 +168,7 @@ object MiscQueries {
            |  user_id % 1000 AS usage_emit
            |FROM events ORDER BY event_id""".stripMargin
       },
-      doc = "One-pass graft_proto_struct decode + map<string,int64> reader, oracle-pinned"),
+      doc = "One-pass envelope + map<string,int64> decode under one descriptor, oracle-pinned"),
 
     // F13: schema-driven GENERIC one-pass decode (graft_proto_decode +
     // ProtoSchemas descriptors — the DynamicMessage-equivalent surface):
@@ -567,8 +570,9 @@ object MiscQueries {
       doc = "F16 wire-level schema evolution: v1 bytes + v2 reader (added field -> default), v2 bytes + v1 reader (unknown skipped), oracle-pinned"),
 
     // E7, proto arm: poison-pill tolerance on the WIRE decode path —
-    // every 50th value is truncated mid-message; graft_proto_struct_safe
-    // decodes it to NULL (DLQ-routable) instead of killing the job,
+    // every 50th value is truncated mid-message; the safe decode of the
+    // envelope descriptor (graft_proto_decode_safe) yields NULL for it
+    // (DLQ-routable) instead of killing the job,
     // mirroring e7_decode_tolerance's JSON arm and the reference's
     // ErrorHandlingDeserializer.
     "e7_proto_tolerance" -> QueryDef(
@@ -590,7 +594,8 @@ object MiscQueries {
           }.toDF("event_id", "value")
         }
         wire.select(col("event_id"),
-            call_function("graft_proto_struct_safe", col("value")).as("m"))
+            ProtoSchemas.decodeSafe(col("value"), ProtoSchemas.envelope)
+              .getField("metadata").as("m"))
           .withColumn("decode", when(col("m").isNull, "corrupt").otherwise("ok"))
           .groupBy("decode").agg(count(lit(1)).as("n"),
             max(when(col("decode") === "ok", col("m.tenant_id"))).as("max_tenant"))
@@ -602,7 +607,7 @@ object MiscQueries {
           |  MAX(CASE WHEN event_id % 50 <> 0
           |      THEN 'tenant-' || CAST(user_id % 50 AS VARCHAR) END) AS max_tenant
           |FROM events GROUP BY 1 ORDER BY decode""".stripMargin),
-      doc = "E7 proto arm: corrupt wire bytes decode to NULL via graft_proto_struct_safe"),
+      doc = "E7 proto arm: corrupt wire bytes decode to NULL via graft_proto_decode_safe"),
 
     // Skew mitigation: salted two-stage aggregation — result identical to
     // the direct groupBy (the oracle), shuffle shape bounded per salt.

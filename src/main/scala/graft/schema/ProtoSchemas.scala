@@ -11,12 +11,14 @@ import org.apache.spark.sql.functions.{call_function, lit}
   * `tenant_events.proto:18-70`, `auth_events.proto:38-102`,
   * `commands.proto:70-125`).
   *
-  * `ProtoSchemas.decode(value, subject)` decodes a whole event of that
-  * subject in ONE pass over the wire bytes
-  * (`functions/ProtoStruct.decodeMessage`); ProtoSchemasSpec pins each
+  * `ProtoSchemas.decode(value, descriptor)` decodes a message in ONE
+  * pass over the wire bytes (`functions/ProtoStruct.decodeMessage`, the
+  * engine's only protobuf decoder); a field projection is a descriptor
+  * that lists just that field. ProtoSchemasSpec pins each subject
   * descriptor's derived `StructType` equal to the corresponding
   * `EventSchemas` struct, so the declared schema system and the decoder
-  * structurally cannot drift.
+  * structurally cannot drift. This file is the only caller of the
+  * `graft_proto_*` SQL functions.
   */
 object ProtoSchemas {
 
@@ -45,6 +47,9 @@ object ProtoSchemas {
     PField(5, "version", KI32), PField(6, "headers", KSMap),
     PField(7, "tenant_id", KStr), PField(8, "user_id", KStr),
     PField(9, "priority", priority), PField(10, "retry_count", KI32))
+
+  /** Field 1 of every reference event: the EventMetadata envelope. */
+  val envelope: IndexedSeq[PField] = Vector(PField(1, "metadata", KMsg(eventMetadata)))
 
   /** common.proto:80-88. */
   val address: IndexedSeq[PField] = Vector(
@@ -163,8 +168,15 @@ object ProtoSchemas {
     * have `Hashing.register`ed, as with every graft_* function).
     */
   def decode(value: Column, descriptor: Seq[PField]): Column =
-    call_function("graft_proto_decode", value,
-      lit(render(descriptor)))
+    call_function("graft_proto_decode", value, lit(render(descriptor)))
+
+  /** Poison-pill-tolerant [[decode]]: corrupt wire bytes (truncated
+    * varint or length, unknown wire type) decode to NULL instead of
+    * failing the job — the reference's ErrorHandlingDeserializer contract
+    * (E7): one bad record routes to the DLQ and the pipeline survives.
+    */
+  def decodeSafe(value: Column, descriptor: Seq[PField]): Column =
+    call_function("graft_proto_decode_safe", value, lit(render(descriptor)))
 
   /** One-pass decode by registry subject name. */
   def decodeSubject(value: Column, subject: String): Column =

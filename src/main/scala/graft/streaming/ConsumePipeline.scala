@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.operators.{Dedup, Retry, Validation}
+import graft.schema.ProtoSchemas
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
@@ -81,14 +82,16 @@ object ConsumePipeline {
   }
 
   /** Kafka-shaped (topic, value BINARY) records → the flat envelope frame
-    * the pipeline operators key on, via the ONE-PASS wire decode
-    * (`graft_proto_struct`): event_id_s/ts/tenant/user/priority/
-    * retry_count from the EventMetadata envelope, headers surfaced as the
-    * JSON `props` payload. This is the §3.2 consume path from RAW bytes
-    * up, matching the reference's deserialize-then-validate order
-    * (`service/BaseEventConsumer.java:53-105`). Compose with
-    * `KafkaIO.stripConfluentProtobufPrefix` upstream for registry-framed
-    * values.
+    * the pipeline operators key on, via the ONE-PASS wire decode of the
+    * `ProtoSchemas.envelope` descriptor: event_id_s/ts/tenant/user/
+    * priority/retry_count from the EventMetadata envelope, headers
+    * surfaced as the JSON `props` payload. This is the §3.2 consume path
+    * from RAW bytes up, matching the reference's deserialize-then-validate
+    * order (`service/BaseEventConsumer.java:53-105`). proto3 presence
+    * applies: an envelope without a `Timestamp` gets a null `ts`, which
+    * no watermark drops, so the event reaches the sinks like any other
+    * valid one. Compose with `KafkaIO.stripConfluentProtobufPrefix`
+    * upstream for registry-framed values.
     */
   def fromWire(kafka: DataFrame): DataFrame = {
     graft.functions.Hashing.register(kafka.sparkSession)
@@ -96,8 +99,8 @@ object ConsumePipeline {
     // props -> the invalid branch (DLQ) — one poison pill cannot kill the
     // stream (E7, the reference's ErrorHandlingDeserializer contract)
     kafka
-      .withColumn("m", org.apache.spark.sql.functions.call_function(
-        "graft_proto_struct_safe", org.apache.spark.sql.functions.col("value")))
+      .withColumn("m", ProtoSchemas.decodeSafe(col("value"), ProtoSchemas.envelope)
+        .getField("metadata"))
       .withColumn("event_id_s", col("m.event_id"))
       .withColumn("ts", col("m.timestamp"))
       .withColumn("correlation_id", col("m.correlation_id"))

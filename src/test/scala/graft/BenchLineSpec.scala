@@ -9,8 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * task #2). headlineLine is size-capped by construction; this spec pins
   * the WORST case — every registry query present, 20 ceiling breaches and
   * 8 contention suspects drawn from the LONGEST registry names, 20 more
-  * long-named queries failed, slowest slots also landing on long names,
-  * decode error present — under 1500 chars, leaving ≥500 chars of
+  * long-named queries failed, slowest slots also landing on long names —
+  * under 1500 chars, leaving ≥500 chars of
   * headroom for the harness epilogue. A failed query is counted, never
   * timed.
   */
@@ -26,11 +26,6 @@ class BenchLineSpec extends AnyFunSuite {
       longest.take(12).map(_ -> 999.999).toMap -- failed // longest names = slowest
     val breaches = longest.take(20).sorted
     val suspects = longest.take(8).sorted
-    val decodeJson =
-      """"decode_struct_sec":99.158,"decode_perfield_sec":99.469,""" +
-      """"decode_floor_sec":99.056,""" +
-      ""","decode_error":"org.apache.spark.sql.AnalysisException: """ +
-      ("x" * 90) + "\","
     val contention =
       """"foreign_jvms":12,"load1":131.06,"load1_before":133.85,""" +
       """"load1_max":133.18,"foreign_cores_max":31.441,""" +
@@ -39,7 +34,7 @@ class BenchLineSpec extends AnyFunSuite {
     val line = Bench.headlineLine(
       total = 99999.99, nQueries = names.size, finalResults = finalResults,
       gcTotal = 999.9, sfDir = "/root/testdata/sf0.1",
-      decodeJson = decodeJson, contention = contention,
+      contention = contention,
       breachNames = breaches, suspectNames = suspects, failedNames = failed,
       clean = false, pinnedBuildSec = 999.99, coldTotalSec = 9999.9)
     assert(line.startsWith("{") && line.endsWith("}"), "line must be one JSON object")
@@ -55,7 +50,6 @@ class BenchLineSpec extends AnyFunSuite {
       total = 1.0, nQueries = 2,
       finalResults = Map("q1_pricing" -> 0.5, "zz" -> 0.5),
       gcTotal = 0.1, sfDir = "/x",
-      decodeJson = """"decode_struct_sec":0.1,"decode_perfield_sec":0.2,"decode_floor_sec":0.0,""",
       contention = """"foreign_jvms":0,"variance_reruns":0""",
       breachNames = Seq.empty, suspectNames = Seq.empty, failedNames = Seq.empty,
       clean = true, pinnedBuildSec = 3.21, coldTotalSec = 12.3)
@@ -86,7 +80,7 @@ class BenchLineSpec extends AnyFunSuite {
     val total = finalResults.values.sum
     val line = Bench.headlineLine(
       total = total, nQueries = finalResults.size, finalResults = finalResults,
-      gcTotal = 0.0, sfDir = "/x", decodeJson = "", contention = "\"foreign_jvms\":0",
+      gcTotal = 0.0, sfDir = "/x", contention = "\"foreign_jvms\":0",
       breachNames = Seq.empty, suspectNames = Seq.empty, failedNames = failed,
       clean = true, pinnedBuildSec = 0.0, coldTotalSec = total)
     assert(line.contains("\"n_queries\":1,\"failed_queries\":1"), line)

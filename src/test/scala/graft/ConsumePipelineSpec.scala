@@ -100,6 +100,40 @@ class ConsumePipelineSpec extends SparkSpec {
     assert(dlq.select("error_message").as[String].collect().toSet == Set("Invalid event"))
   }
 
+  test("startFromWire: an envelope without a Timestamp lands exactly once, in processed") {
+    import spark.implicits._
+    import graft.functions.ProtoWire._
+    implicit val sqlCtx = spark.sqlContext
+    val out = java.nio.file.Files.createTempDirectory("consume-no-ts").toString
+
+    // Validation checks only the id and the payload, so an event with no
+    // event time is valid: proto3 presence decodes its ts to null, which
+    // the dedup watermark never counts as late
+    def wire(id: String, minute: Option[Int]): Array[Byte] =
+      message(lenField(1, message(Seq(stringField(1, id)) ++
+        minute.map(m => timestampField(4, 1704103200L + m * 60L, 0)) ++
+        Seq(mapEntryField(6, "k", id), stringField(7, "t-1")): _*)))
+
+    val input = MemoryStream[(String, Array[Byte])]
+    val q = ConsumePipeline.startFromWire(
+      input.toDF().toDF("topic", "value"), out,
+      ConsumePipeline.Config(dedupTtl = "2 hours"), availableNow = false)
+    try {
+      Seq(wire("with-ts", Some(10)), wire("no-ts", None), wire("with-ts-2", Some(20)))
+        .foreach { frame =>
+          input.addData(("nnipa.events.click.recorded", frame))
+          q.processAllAvailable()
+        }
+    } finally q.stop()
+
+    def ids(sink: String): Seq[String] =
+      spark.read.parquet(s"$out/$sink").select("event_id_s").as[String].collect().sorted.toSeq
+    assert(ids("processed") == Seq("no-ts", "with-ts", "with-ts-2"))
+    assert(ids("dlq").isEmpty && ids("retry").isEmpty)
+    assert(spark.read.parquet(s"$out/processed").filter(col("event_id_s") === "no-ts")
+      .select("ts").head().isNullAt(0))
+  }
+
   test("invalid events route to DLQ, failures honor retry-vs-DLQ split") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext

@@ -87,6 +87,35 @@ class ProtoSchemasSpec extends SparkSpec {
     assert(row.getAs[Map[String, String]](11) == Map("k1" -> "a", "k2" -> "b"))
     assert(row.getAs[scala.collection.Seq[String]](12).toSeq == Seq("feat-a", "feat-b"))
     assert(row.getString(13) == "")  // absent no-presence scalar -> proto3 default
+
+    // a second frame: contact info with an e-mail, no envelope timestamp
+    val other = message(
+      lenField(1, stringField(1, "ev-2")),
+      lenField(2, message(
+        stringField(1, "t-1"), stringField(2, "Acme"), stringField(3, "acme.io"),
+        varintField(4, 2), varintField(5, 4), varintField(6, 3), varintField(8, 1),
+        timestampField(9, 1700000000L, 0),
+        lenField(10, message(
+          stringField(1, "a@acme.io"),
+          lenField(5, message(
+            stringField(2, "Berlin"), doubleField(6, 52.52), doubleField(7, 13.4))))),
+        mapEntryField(11, "theme", "dark"),
+        lenField(12, "sso".getBytes("UTF-8")),
+        lenField(12, "audit".getBytes("UTF-8")))))
+    val t = Seq(Tuple1(other)).toDF("value")
+      .select(ProtoSchemas.decodeSubject(col("value"), "nnipa.events.tenant.created-value").as("e"))
+      .select("e.tenant.*").head()
+    assert(t.getAs[String]("organization_type") == "ORGANIZATION_TYPE_CORPORATION")
+    assert(t.getAs[String]("subscription_tier") == "TIER_ENTERPRISE")
+    assert(t.getAs[String]("isolation_strategy") == "ISOLATION_DATABASE_ISOLATION")
+    assert(t.getAs[java.sql.Timestamp]("created_at").getTime == 1700000000000L)
+    val c = t.getStruct(t.fieldIndex("contact_info"))
+    assert(c.getAs[String]("email") == "a@acme.io")
+    val a = c.getStruct(c.fieldIndex("address"))
+    assert(a.getAs[String]("city") == "Berlin" && a.getAs[Double]("latitude") == 52.52)
+    assert(a.getAs[Double]("longitude") == 13.4)
+    assert(t.getAs[Map[String, String]]("settings") == Map("theme" -> "dark"))
+    assert(t.getAs[scala.collection.Seq[String]]("enabled_features").toSeq == Seq("sso", "audit"))
   }
 
   test("presence semantics: absent message/timestamp/Any null, scalars default") {
@@ -133,9 +162,55 @@ class ProtoSchemasSpec extends SparkSpec {
     assert(row.getAs[Array[Byte]](2).sameElements(payload))
     assert(row.isNullAt(3), "absent Any must be null")
     assert(row.getAs[Map[String, String]](4) == Map("ip" -> "10.0.0.1"))
+
+    // a second frame: no envelope, Any.value holding a nested message
+    val packed = stringField(1, "payload")
+    val bare = message(lenField(2, message(
+      stringField(3, "UPDATE"),
+      lenField(6, stringField(1, "type.example.com/Old") ++ lenField(2, packed)))))
+    val e = Seq(Tuple1(bare)).toDF("value")
+      .select(ProtoSchemas.decodeSubject(col("value"),
+        "nnipa.commands.audit.log-value").as("e"))
+      .select(col("e.metadata"), col("e.entry.old_value"), col("e.entry.new_value"))
+      .head()
+    assert(e.isNullAt(0), "absent envelope must be null")
+    assert(e.getStruct(1).getAs[String]("type_url") == "type.example.com/Old")
+    assert(e.getStruct(1).getAs[Array[Byte]]("value").sameElements(packed))
+    assert(e.isNullAt(2), "absent Any must be null")
   }
 
-  test("generic decoder == the dedicated EventMetadata one-pass on the envelope") {
+  test("tenant.updated renders google.protobuf.Value fields as JSON") {
+    graft.functions.Hashing.register(spark)
+    // Value kinds: string, number, bool, null, nested struct, list
+    val strVal = stringField(3, "hello")
+    val numVal = doubleField(2, 42.0)
+    val boolVal = varintField(4, 1)
+    val nullVal = varintField(1, 0)
+    val listVal = lenField(6, lenField(1, strVal) ++ lenField(1, numVal))
+    val structVal = lenField(5,
+      lenField(1, stringField(1, "inner") ++ lenField(2, boolVal)))
+    def entry(k: String, value: Array[Byte]) =
+      lenField(2, stringField(1, k) ++ lenField(2, value))
+    val bytes = message(lenField(2, message(
+      stringField(1, "t-9"),
+      entry("s", strVal), entry("n", numVal), entry("b", boolVal),
+      entry("z", nullVal), entry("l", listVal), entry("o", structVal),
+      stringField(3, "admin"))))
+    val row = Seq(Tuple1(bytes)).toDF("value")
+      .select(ProtoSchemas.decodeSubject(col("value"),
+        "nnipa.events.tenant.updated-value").as("e"))
+      .select("e.update.*").head()
+    val cf = row.getAs[Map[String, String]]("changed_fields")
+    assert(cf("s") == "\"hello\"")
+    assert(cf("n") == "42")
+    assert(cf("b") == "true")
+    assert(cf("z") == "null")
+    assert(cf("l") == "[\"hello\",42]")
+    assert(cf("o") == "{\"inner\":true}")
+    assert(row.getAs[String]("updated_by") == "admin")
+  }
+
+  test("KafkaIO.decodeEventMetadata == ProtoSchemas.decodeSubject(...).metadata") {
     graft.functions.Hashing.register(spark)
     val shapes = Seq(
       tenantCreatedBytes,
@@ -144,38 +219,43 @@ class ProtoSchemasSpec extends SparkSpec {
         stringField(1, "ev-z"), stringField(2, "corr"), stringField(3, "svc"),
         timestampField(4, 77L, 1000), varintField(5, 2),
         mapEntryField(6, "h", "v"), stringField(7, "t"), stringField(8, "u"),
-        varintField(9, 4), varintField(10, 2)))))
-    val df = shapes.map(Tuple1(_)).toDF("value")
-    val rows = df.select(
-        ProtoSchemas.decode(col("value"), ProtoSchemas.tenantCreated.take(1))
-          .getField("metadata").as("generic"),
-        graft.io.KafkaIO.decodeEventMetadata(col("value")).as("dedicated"))
+        varintField(9, 4), varintField(10, 2)))),
+      // no envelope at all: both sides read null
+      message(lenField(2, message(stringField(1, "t-only")))))
+    val rows = shapes.map(Tuple1(_)).toDF("value").select(
+        ProtoSchemas.decodeSubject(col("value"), "nnipa.events.tenant.created-value")
+          .getField("metadata").as("subject"),
+        graft.io.KafkaIO.decodeEventMetadata(col("value")).as("envelope"))
       .collect()
-    rows.foreach { r =>
-      val (g, d) = (r.getStruct(0), r.getStruct(1))
-      if (g == null) {
-        // dedicated decoder has no presence concept: absent metadata ->
-        // all-default struct; the generic decoder reports null. Check the
-        // defaults line up instead.
-        assert(d.getAs[String]("event_id") == "")
-      } else {
-        // same field order by construction — compare field by field. One
-        // deliberate difference: the generic decoder follows proto3
-        // presence (absent Timestamp -> null); the dedicated envelope
-        // decoder emits the epoch default. Where generic is null,
-        // dedicated must hold exactly that default.
-        ProtoWire.eventMetadataSchema.fieldNames.zipWithIndex.foreach {
-          case (name, i) =>
-            val gv = g.get(g.fieldIndex(name))
-            if (name == "timestamp" && gv == null)
-              assert(d.getAs[java.sql.Timestamp](i).getTime == 0L,
-                s"dedicated decoder must default an absent timestamp to epoch")
-            else
-              assert(gv == d.get(i),
-                s"field $name diverged: $gv vs ${d.get(i)}")
-        }
-      }
+    assert(rows.length == shapes.length)
+    rows.foreach(r => assert(r.get(0) == r.get(1), s"envelope decodes diverged: $r"))
+    assert(rows(1).getStruct(0).isNullAt(3), "absent Timestamp is null on both sides")
+    assert(rows(3).isNullAt(0))
+  }
+
+  test("one protobuf decoder: the registered graft_proto_* functions are decode, decode_safe, encode") {
+    val proto = graft.functions.Hashing.nativeFunctions.map(_._1)
+      .filter(_.startsWith("graft_proto_"))
+    assert(proto.sorted ==
+      Seq("graft_proto_decode", "graft_proto_decode_safe", "graft_proto_encode"))
+  }
+
+  test("one protobuf decoder: no src/main file but ProtoSchemas calls a graft_proto_* function") {
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), s"run from the repo root: $root")
+    val call = """call_function\(\s*"graft_proto_""".r
+    val callers = Seq.newBuilder[String]
+    val it = java.nio.file.Files.walk(root).iterator()
+    while (it.hasNext) {
+      val p = it.next()
+      val rel = root.relativize(p).toString
+      if (rel.endsWith(".scala") && rel != "graft/schema/ProtoSchemas.scala" &&
+          call.findFirstIn(new String(java.nio.file.Files.readAllBytes(p), "UTF-8")).isDefined)
+        callers += rel
     }
+    assert(callers.result().isEmpty,
+      "decode through graft.schema.ProtoSchemas, not a direct graft_proto_* call: " +
+        callers.result().mkString(", "))
   }
 
   test("schema evolution at the WIRE level: old/new descriptors interoperate") {

@@ -1,14 +1,18 @@
 package graft
 
+import graft.functions.ProtoStruct._
 import graft.functions.ProtoWire
 import graft.io.KafkaIO
+import graft.schema.ProtoSchemas
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
-/** functions/ProtoWire — proto3 wire-format reader, built from the public
-  * encoding spec. Round-trips hand-encoded reference messages
-  * (EventMetadata + TenantCreatedEvent shapes, common.proto:38-49 /
-  * tenant_events.proto:18-37) through the native decode expressions,
-  * including the Confluent protobuf framing.
+/** functions/ProtoWire — proto3 wire-format encoders and primitives, built
+  * from the public encoding spec. Round-trips hand-encoded reference
+  * messages (EventMetadata + TenantCreatedEvent shapes,
+  * common.proto:38-49 / tenant_events.proto:18-37) through the one
+  * descriptor-driven decoder, including the Confluent protobuf framing; a
+  * single-field read is a descriptor that lists just that field.
   */
 class ProtoWireSpec extends SparkSpec {
 
@@ -39,12 +43,13 @@ class ProtoWireSpec extends SparkSpec {
 
   test("decodes every scalar envelope + payload field from the wire bytes") {
     val df = Seq(Tuple1(tenantCreated("ev-1"))).toDF("value")
+    val payload = Vector(PField(2, "t", KMsg(Vector(
+      PField(1, "tenant_id", KStr), PField(2, "name", KStr),
+      PField(4, "org_type", KI64), PField(8, "is_active", KI64)))))
     val row = df.select(
         KafkaIO.decodeEventMetadata(col("value")).as("m"),
-        call_function("graft_proto_string", col("value"), lit("2.1")).as("tenant_id"),
-        call_function("graft_proto_string", col("value"), lit("2.2")).as("name"),
-        call_function("graft_proto_long", col("value"), lit("2.4")).as("org_type"),
-        call_function("graft_proto_long", col("value"), lit("2.8")).as("is_active"))
+        ProtoSchemas.decode(col("value"), payload).as("d"))
+      .select("m", "d.t.tenant_id", "d.t.name", "d.t.org_type", "d.t.is_active")
       .head()
     val m = row.getStruct(0)
     assert(m.getAs[String]("event_id") == "ev-1")
@@ -105,12 +110,13 @@ class ProtoWireSpec extends SparkSpec {
     val bytes = message(
       lenField(1, metadataBytes("ev-m", "t-1", "u-1", 2, 0, 10L, 0)),
       lenField(2, tenantData))
+    val payload = Vector(PField(2, "t", KMsg(Vector(
+      PField(11, "settings", KSMap), PField(12, "features", KRStr),
+      PField(20, "price", KF64), PField(99, "absent", KRStr)))))
     val row = Seq(Tuple1(bytes)).toDF("value").select(
         KafkaIO.decodeEventMetadata(col("value")).as("m"),
-        call_function("graft_proto_string_map", col("value"), lit("2.11")).as("settings"),
-        call_function("graft_proto_string_list", col("value"), lit("2.12")).as("features"),
-        call_function("graft_proto_double", col("value"), lit("2.20")).as("price"),
-        call_function("graft_proto_string_list", col("value"), lit("2.99")).as("absent"))
+        ProtoSchemas.decode(col("value"), payload).as("d"))
+      .select("m", "d.t.settings", "d.t.features", "d.t.price", "d.t.absent")
       .head()
     assert(row.getStruct(0).getAs[Map[String, String]]("headers") ==
       Map("h1" -> "v1", "h2" -> "v2"))
@@ -127,18 +133,17 @@ class ProtoWireSpec extends SparkSpec {
       longMapEntryField(3, "ingest", 300L),           // multi-byte varint
       longMapEntryField(3, "emit", 0L),
       longMapEntryField(3, "ingest", Long.MaxValue))  // map merge: last wins
-    val row = Seq(Tuple1(bytes)).toDF("value").select(
-        call_function("graft_proto_long_map", col("value"), lit("3")).as("usage"),
-        call_function("graft_proto_long_map", col("value"), lit("9")).as("absent"))
+    val row = Seq(Tuple1(bytes)).toDF("value")
+      .select(ProtoSchemas.decode(col("value"),
+        Vector(PField(3, "usage", KLMap), PField(9, "absent", KLMap))).as("d"))
+      .select("d.usage", "d.absent")
       .head()
     assert(row.getAs[Map[String, Long]](0) ==
       Map("ingest" -> Long.MaxValue, "emit" -> 0L))
     assert(row.getAs[Map[String, Long]](1).isEmpty)
   }
 
-  test("one-pass graft_proto_struct == the per-field composition, field by field") {
-    // the decode-once path must be indistinguishable from 10 independent
-    // path reads on every envelope shape: full, sparse, duplicated, noisy
+  test("the envelope decodes to its expected values on every shape: full, sparse, duplicated, noisy") {
     val shapes = Seq(
       tenantCreated("ev-a"),
       message(lenField(1, stringField(1, "only-id"))),
@@ -147,12 +152,25 @@ class ProtoWireSpec extends SparkSpec {
       message(varintField(99, 7),
         lenField(1, metadataBytes("ev-d", "t-3", "u-3", 7, 1, 5L, 1000)),  // enum out of range
         lenField(50, "junk".getBytes("UTF-8"))))
-    val df = shapes.map(Tuple1(_)).toDF("value")
-    val rows = df.select(
-        KafkaIO.decodeEventMetadata(col("value")).as("one_pass"),
-        KafkaIO.decodeEventMetadataPerField(col("value")).as("per_field"))
+    val rows = shapes.zipWithIndex.map { case (b, i) => (i, b) }.toDF("i", "value")
+      .select(col("i"), KafkaIO.decodeEventMetadata(col("value")).as("m"))
+      .select(col("m.event_id"), col("m.correlation_id"), col("m.source_service"),
+        unix_micros(col("m.timestamp")), col("m.version"), col("m.headers"),
+        col("m.tenant_id"), col("m.user_id"), col("m.priority"), col("m.retry_count"))
       .collect()
-    rows.foreach { r => assert(r.getStruct(0) == r.getStruct(1)) }
+    val headers = Map("h1" -> "v1", "h2" -> "v2")
+    assert(rows.toSeq == Seq(
+      Row("ev-a", "corr-ev-a", "tenant-service", 1704103200500000L, 1, headers,
+        "t-42", "u-7", "PRIORITY_HIGH", 2),
+      // proto3 presence: the absent Timestamp is null, scalars default
+      Row("only-id", "", "", null, 0, Map.empty[String, String],
+        "", "", "PRIORITY_UNSPECIFIED", 0),
+      // a repeated envelope: the later message replaces the earlier one
+      Row("ev-c", "corr-ev-c", "tenant-service", 2000000000999999L, 1, headers,
+        "t-2", "u-2", "PRIORITY_CRITICAL", 9),
+      // unknown fields skipped; an out-of-range enum reads as value 0
+      Row("ev-d", "corr-ev-d", "tenant-service", 5000001L, 1, headers,
+        "t-3", "u-3", "PRIORITY_UNSPECIFIED", 1)))
   }
 
   test("poison pills: corrupt bytes throw on the strict path, NULL on the safe path") {
@@ -162,16 +180,19 @@ class ProtoWireSpec extends SparkSpec {
       good.take(2),                                // truncated varint/length
       Array[Byte](0x0f, 0x01),                     // unknown wire type 7
       message(lenField(1, stringField(1, "x"))).dropRight(1))
-    // strict decoder: every corruption is an exception, never garbage
+    // strict decoder (graft_proto_decode): every corruption is an
+    // exception, never garbage
     corrupt.foreach { bad =>
-      intercept[Exception](ProtoWire.eventMetadataStruct(bad))
+      intercept[Exception](Seq(Tuple1(bad)).toDF("value")
+        .select(KafkaIO.decodeEventMetadata(col("value"))).collect())
     }
     // safe decoder: NULL (DLQ-routable), pipeline survives; good bytes
     // decode identically to the strict path
     val df = (corrupt :+ good).zipWithIndex.map { case (b, i) => (i.toLong, b) }
       .toDF("i", "value")
     val rows = df.select(col("i"),
-        call_function("graft_proto_struct_safe", col("value")).as("m"))
+        ProtoSchemas.decodeSafe(col("value"), ProtoSchemas.envelope)
+          .getField("metadata").as("m"))
       .orderBy("i").collect()
     assert(rows.take(corrupt.length).forall(_.isNullAt(1)))
     assert(rows.last.getStruct(1).getAs[String]("event_id") == "ev-ok")
@@ -180,9 +201,9 @@ class ProtoWireSpec extends SparkSpec {
   test("varint encode/decode round-trips multi-byte values") {
     val big = message(varintField(3, 300L), varintField(4, Long.MaxValue))
     val df = Seq(Tuple1(big)).toDF("value")
-    val row = df.select(
-      call_function("graft_proto_long", col("value"), lit("3")),
-      call_function("graft_proto_long", col("value"), lit("4"))).head()
+    val row = df.select(ProtoSchemas.decode(col("value"),
+        Vector(PField(3, "a", KI64), PField(4, "b", KI64))).as("d"))
+      .select("d.a", "d.b").head()
     assert(row.getLong(0) == 300L && row.getLong(1) == Long.MaxValue)
   }
 

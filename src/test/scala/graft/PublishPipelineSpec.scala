@@ -2,6 +2,7 @@ package graft
 
 import graft.observe.MetricsObserver
 import graft.operators.Envelope
+import graft.schema.ProtoSchemas
 import graft.streaming.PublishPipeline
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -65,7 +66,8 @@ class PublishPipelineSpec extends SparkSpec {
     val rec = PublishPipeline.toKafkaRecordsProto(
       Envelope.withEnvelope(base), PublishPipeline.TenantBased)
     val got = graft.streaming.ConsumePipeline.fromWire(rec.select("topic", "value"))
-      .withColumn("m", call_function("graft_proto_struct_safe", col("value")))
+      .withColumn("m", ProtoSchemas.decodeSafe(col("value"), ProtoSchemas.envelope)
+        .getField("metadata"))
       .select(col("event_id_s"), element_at(col("m.headers"), "event.props").as("p"))
       .orderBy("event_id_s")
       .collect()
