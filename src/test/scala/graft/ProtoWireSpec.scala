@@ -143,7 +143,7 @@ class ProtoWireSpec extends SparkSpec {
     assert(row.getAs[Map[String, Long]](1).isEmpty)
   }
 
-  test("the envelope decodes to its expected values on every shape: full, sparse, duplicated, noisy") {
+  test("the envelope decodes to its expected values: full, sparse, duplicated, noisy") {
     val shapes = Seq(
       tenantCreated("ev-a"),
       message(lenField(1, stringField(1, "only-id"))),
