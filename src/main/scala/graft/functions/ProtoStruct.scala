@@ -172,24 +172,40 @@ object ProtoStruct {
     case KTs | KMsg(_) | KBytes | KAny => null
   }
 
-  /** Decodes `[from, end)` as a message with `fields` in ONE forward
-    * scan (nested messages recurse over their spans only).
+  /** A message descriptor prepared for decoding, once per descriptor
+    * and shared by every row: the field-number → slot table, the default
+    * row, enum names as `UTF8String`s and the nested messages' layouts.
+    * The default values are immutable, so rows may share them.
+    */
+  final class Layout(val fields: IndexedSeq[PField]) extends Serializable {
+    val maxNo: Int = fields.foldLeft(0)((m, f) => math.max(m, f.no))
+    val slot: Array[Int] = {
+      val a = Array.fill(maxNo + 1)(-1)
+      fields.indices.foreach(i => a(fields(i).no) = i)
+      a
+    }
+    val defaults: Array[Any] = fields.map(f => defaultFor(f.kind)).toArray
+    val enumNames: Array[Array[UTF8String]] = fields.map(_.kind match {
+      case KEnum(vs) => vs.map(UTF8String.fromString).toArray
+      case _ => null
+    }).toArray
+    val nested: Array[Layout] = fields.map(_.kind match {
+      case KMsg(sub) => new Layout(sub)
+      case _ => null
+    }).toArray
+  }
+
+  /** Decodes `[from, end)` as a message laid out by `layout` in ONE
+    * forward scan (nested messages recurse over their spans only).
     */
   def decodeMessage(bytes: Array[Byte], from: Int, end: Int,
-                    fields: IndexedSeq[PField]): InternalRow = {
+                    layout: Layout): InternalRow = {
+    val fields = layout.fields
     val n = fields.length
-    val row = new GenericInternalRow(n)
-    var maxNo = 0
+    val row = new GenericInternalRow(layout.defaults.clone())
+    val maxNo = layout.maxNo
+    val slot = layout.slot
     var i = 0
-    while (i < n) {
-      row.update(i, defaultFor(fields(i).kind))
-      if (fields(i).no > maxNo) maxNo = fields(i).no
-      i += 1
-    }
-    val slot = new Array[Int](maxNo + 1)
-    java.util.Arrays.fill(slot, -1)
-    i = 0
-    while (i < n) { slot(fields(i).no) = i; i += 1 }
 
     // lazily-allocated accumulators for map/repeated fields
     var maps: Array[java.util.LinkedHashMap[UTF8String, Any]] = null
@@ -220,10 +236,10 @@ object ProtoStruct {
             case KI64 => row.update(idx, v)
             case KI32 => row.update(idx, v.toInt)
             case KBool => row.update(idx, v != 0L)
-            case KEnum(vs) =>
+            case KEnum(_) =>
+              val names = layout.enumNames(idx)
               val e = v.toInt
-              row.update(idx, UTF8String.fromString(
-                if (e >= 0 && e < vs.length) vs(e) else vs.head))
+              row.update(idx, if (e >= 0 && e < names.length) names(e) else names(0))
             case _ => // type mismatch on the wire: skip (unknown-field rule)
           }
         case 1 =>
@@ -246,8 +262,8 @@ object ProtoStruct {
               val secs = if (ProtoWire.scan(bytes, p, p + len, 1, out) && out(0) == 0) out(1) else 0L
               val nanos = if (ProtoWire.scan(bytes, p, p + len, 2, out) && out(0) == 0) out(1) else 0L
               row.update(idx, secs * 1000000L + nanos / 1000L)
-            case KMsg(sub) =>
-              row.update(idx, decodeMessage(bytes, p, p + len, sub))
+            case KMsg(_) =>
+              row.update(idx, decodeMessage(bytes, p, p + len, layout.nested(idx)))
             case KAny =>
               val any = new GenericInternalRow(2)
               any.update(0,
@@ -314,14 +330,14 @@ object ProtoStruct {
   }
 
   /** Entry point referenced by both eval paths. */
-  def decode(bytes: Array[Byte], fields: IndexedSeq[PField]): InternalRow =
-    decodeMessage(bytes, 0, bytes.length, fields)
+  def decode(bytes: Array[Byte], layout: Layout): InternalRow =
+    decodeMessage(bytes, 0, bytes.length, layout)
 
   /** Poison-pill-tolerant [[decode]]: corrupt bytes → NULL, not an
     * exception (E7 / ErrorHandlingDeserializer contract).
     */
-  def decodeSafe(bytes: Array[Byte], fields: IndexedSeq[PField]): InternalRow =
-    try decode(bytes, fields)
+  def decodeSafe(bytes: Array[Byte], layout: Layout): InternalRow =
+    try decode(bytes, layout)
     catch { case _: IllegalArgumentException | _: ArrayIndexOutOfBoundsException => null }
 
   // ---- the descriptor-driven encoder (the publish side) ----
@@ -467,21 +483,21 @@ final case class ProtoDecodeExpr(left: Expression, right: Expression)
     extends BinaryExpression with ImplicitCastInputTypes {
   override def inputTypes: Seq[DataType] = Seq(BinaryType, StringType)
 
-  @transient private lazy val fields: IndexedSeq[ProtoStruct.PField] = {
+  @transient private lazy val layout: ProtoStruct.Layout = {
     require(right.foldable, "graft_proto_decode spec must be a literal")
-    ProtoStruct.parse(right.eval().asInstanceOf[UTF8String].toString)
+    new ProtoStruct.Layout(
+      ProtoStruct.parse(right.eval().asInstanceOf[UTF8String].toString))
   }
 
-  override def dataType: DataType = ProtoStruct.structOf(fields)
+  override def dataType: DataType = ProtoStruct.structOf(layout.fields)
 
   override def nullSafeEval(b: Any, _spec: Any): Any =
-    ProtoStruct.decode(b.asInstanceOf[Array[Byte]], fields)
+    ProtoStruct.decode(b.asInstanceOf[Array[Byte]], layout)
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    // embed the PARSED descriptor once; the generated loop never touches
+    // embed the PREPARED layout once; the generated loop never touches
     // the spec string again
-    val ref = ctx.addReferenceObj("protoFields", fields,
-      "scala.collection.immutable.IndexedSeq")
+    val ref = ctx.addReferenceObj("protoLayout", layout)
     defineCodeGen(ctx, ev, (b, _) => s"graft.functions.ProtoStruct.decode($b, $ref)")
   }
 
@@ -534,20 +550,20 @@ final case class ProtoDecodeSafeExpr(left: Expression, right: Expression)
     extends BinaryExpression with ImplicitCastInputTypes {
   override def inputTypes: Seq[DataType] = Seq(BinaryType, StringType)
 
-  @transient private lazy val fields: IndexedSeq[ProtoStruct.PField] = {
+  @transient private lazy val layout: ProtoStruct.Layout = {
     require(right.foldable, "graft_proto_decode_safe spec must be a literal")
-    ProtoStruct.parse(right.eval().asInstanceOf[UTF8String].toString)
+    new ProtoStruct.Layout(
+      ProtoStruct.parse(right.eval().asInstanceOf[UTF8String].toString))
   }
 
-  override def dataType: DataType = ProtoStruct.structOf(fields)
+  override def dataType: DataType = ProtoStruct.structOf(layout.fields)
   override def nullable: Boolean = true
 
   override def nullSafeEval(b: Any, _spec: Any): Any =
-    ProtoStruct.decodeSafe(b.asInstanceOf[Array[Byte]], fields)
+    ProtoStruct.decodeSafe(b.asInstanceOf[Array[Byte]], layout)
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("protoFields", fields,
-      "scala.collection.immutable.IndexedSeq")
+    val ref = ctx.addReferenceObj("protoLayout", layout)
     // nullSafeCodeGen: the call may return null on corrupt bytes
     nullSafeCodeGen(ctx, ev, (b, _) => s"""
       ${ev.value} = graft.functions.ProtoStruct.decodeSafe($b, $ref);

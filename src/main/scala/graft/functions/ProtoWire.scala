@@ -396,13 +396,16 @@ object ProtoWire {
     sb.append('"').toString
   }
 
+  private lazy val envelopeLayout =
+    new ProtoStruct.Layout(graft.schema.ProtoSchemas.envelope)
+
   /** The EventMetadata envelope of one wire frame as its 10-field row
     * (`ProtoSchemas.eventMetadata` order), or null when the bytes are
     * corrupt or carry no envelope: [[ProtoStruct.decodeSafe]] under the
     * `ProtoSchemas.envelope` descriptor, for callers outside a Spark plan.
     */
   def eventMetadataStructSafe(bytes: Array[Byte]): InternalRow = {
-    val row = ProtoStruct.decodeSafe(bytes, graft.schema.ProtoSchemas.envelope)
+    val row = ProtoStruct.decodeSafe(bytes, envelopeLayout)
     if (row == null) null
     else row.getStruct(0, graft.schema.ProtoSchemas.eventMetadata.length)
   }

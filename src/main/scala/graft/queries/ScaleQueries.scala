@@ -363,16 +363,6 @@ object ScaleQueries {
       s"(x, y) -> x + y) >= 0 " +
       s"THEN (1 << ($r - 1 - d)) ELSE 0 END)) AS INT)"
 
-  /** Banded sign buckets (= Similarity.signBands): band j quantizes dims
-    * [j*bitsPerBand, (j+1)*bitsPerBand).
-    */
-  private def sqlSignBands(v: String, bands: Int, bitsPerBand: Int): String =
-    (0 until bands).map { j =>
-      (0 until bitsPerBand).map { d =>
-        s"(CASE WHEN $v[${j * bitsPerBand + d + 1}] >= 0 THEN ${1 << (bitsPerBand - 1 - d)} ELSE 0 END)"
-      }.mkString("(", " + ", ")")
-    }.mkString("[", ", ", "]")
-
   /** word n-gram shingles of `text` (= TextOps.shingles). */
   private def sqlShinglesN(n: Int): String =
     "list_distinct(list_transform(" +
@@ -391,6 +381,26 @@ object ScaleQueries {
       |  UNION ALL
       |  SELECT doc_id + 200000, text || ' near duplicate suffix marker', source
       |  FROM documents WHERE doc_id % 20 = 0)""".stripMargin
+
+  /** A pair detector scored against planted truth: one row of
+    * (n_truth, n_pred, tp, precision, recall, f1) from (doc_a, doc_b)
+    * `pred` and `truth` frames. F1 via the 2·TP/(P+T) identity over exact
+    * BIGINT counts, so the row is hash-checkable.
+    */
+  private def pairScores(pred: DataFrame, truth: DataFrame): DataFrame = {
+    val tp = pred.join(truth, Seq("doc_a", "doc_b"), "left_semi")
+    pred.agg(count(lit(1)).as("n_pred"))
+      .crossJoin(broadcast(truth.agg(count(lit(1)).as("n_truth"))))
+      .crossJoin(broadcast(tp.agg(count(lit(1)).as("tp"))))
+      .select(col("n_truth"), col("n_pred"), col("tp"),
+        when(col("n_pred") === 0, lit(null).cast("double")).otherwise(
+          round(col("tp").cast("double") / col("n_pred").cast("double"), 6))
+          .as("precision"),
+        round(col("tp").cast("double") / col("n_truth").cast("double"), 6)
+          .as("recall"),
+        round(lit(2.0) * col("tp").cast("double") /
+          (col("n_pred") + col("n_truth")).cast("double"), 6).as("f1"))
+  }
 
   // ---- v9 incremental-capstone shared helpers -------------------------
 
@@ -6096,30 +6106,7 @@ object ScaleQueries {
         val ph = graft.Caches.lazyBarrier(
           Multimodal.perceptualHashPng(media).toDF())
         // hot (band, v) buckets suppressed — oracle replays via qband
-        val bands = MediaDedup.capBandBuckets(
-          ph.select(col("doc_id"), explode(array(
-            struct(lit(0).as("band"), col("b0").as("v")),
-            struct(lit(1).as("band"), col("b1").as("v")),
-            struct(lit(2).as("band"), col("b2").as("v")),
-            struct(lit(3).as("band"), col("b3").as("v")))).as("e"))
-          .select(col("doc_id"), col("e.band").as("band"), col("e.v").as("v")),
-          maxBucket = 64)
-        val cand = bands.as("a").join(bands.as("b"),
-            col("a.band") === col("b.band") && col("a.v") === col("b.v") &&
-              col("a.doc_id") < col("b.doc_id"))
-          .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-          .distinct()
-        cand
-          .join(ph.select(col("doc_id").as("doc_a"), col("b0").as("a0"),
-            col("b1").as("a1"), col("b2").as("a2"), col("b3").as("a3")), Seq("doc_a"))
-          .join(ph.select(col("doc_id").as("doc_b"), col("b0").as("x0"),
-            col("b1").as("x1"), col("b2").as("x2"), col("b3").as("x3")), Seq("doc_b"))
-          .withColumn("hamming", expr(
-            "CAST(bit_count(a0 ^ x0) + bit_count(a1 ^ x1) + " +
-              "bit_count(a2 ^ x2) + bit_count(a3 ^ x3) AS INT)"))
-          .filter(col("hamming") <= 8)
-          .select(col("doc_a"), col("doc_b"), col("hamming"))
-          .orderBy("doc_a", "doc_b")
+        MediaDedup.pairs(ph, maxHamming = 8).orderBy("doc_a", "doc_b")
       },
       oracle = Some {
         val ctes = mmPhashCtes(
@@ -7657,21 +7644,7 @@ object ScaleQueries {
         // fused-verify band join (rows carry the full fingerprint), hot
         // buckets suppressed — a silent/flat clip is the audio analog of
         // a blank image: one shared fingerprint bucket
-        val b = MediaDedup.capBandBuckets(MediaDedup.bandRows(fp), maxBucket = 64)
-        val l = b.select(col("doc_id").as("doc_a"), col("band"), col("v"),
-          col("b0").as("a0"), col("b1").as("a1"), col("b2").as("a2"),
-          col("b3").as("a3"))
-        val r = b.select(col("doc_id").as("doc_b"), col("band"), col("v"),
-          col("b0").as("x0"), col("b1").as("x1"), col("b2").as("x2"),
-          col("b3").as("x3"))
-        l.join(r, Seq("band", "v"))
-          .filter(col("doc_a") < col("doc_b"))
-          .withColumn("hamming", expr(
-            "CAST(bit_count(a0 ^ x0) + bit_count(a1 ^ x1) + " +
-              "bit_count(a2 ^ x2) + bit_count(a3 ^ x3) AS INT)"))
-          .filter(col("hamming") <= 8)
-          .select("doc_a", "doc_b", "hamming").distinct()
-          .orderBy("doc_a", "doc_b")
+        MediaDedup.pairs(fp, maxHamming = 8).orderBy("doc_a", "doc_b")
       },
       oracle = Some(
         s"""WITH ${audioFpCtes(
@@ -7722,33 +7695,11 @@ object ScaleQueries {
         val rs = graft.Caches.lazyBarrier(AudioDedup.fingerprintsWav(
           pinnedMedia(s, "wavResampled500k", dir)(
             AudioDedup.mediaWavPlantedResampled(ids, shift = 500000L))).toDF())
-        val ham = "CAST(bit_count(a0 ^ x0) + bit_count(a1 ^ x1) + " +
-          "bit_count(a2 ^ x2) + bit_count(a3 ^ x3) AS INT)"
-        val ib = MediaDedup.capBandBuckets(MediaDedup.bandRows(orig), 64)
-          .select(col("doc_id").as("doc_a"), col("band"), col("v"),
-            col("b0").as("a0"), col("b1").as("a1"), col("b2").as("a2"),
-            col("b3").as("a3"))
-        val pb = MediaDedup.bandRows(rs)
-          .select(col("doc_id").as("doc_b"), col("band"), col("v"),
-            col("b0").as("x0"), col("b1").as("x1"), col("b2").as("x2"),
-            col("b3").as("x3"))
-        val pred = graft.Caches.lazyBarrier(ib.join(pb, Seq("band", "v"))
-          .filter(expr(ham) <= 8)
-          .select("doc_a", "doc_b").distinct())
-        val truth = docs(s, dir).select(col("doc_id").as("doc_a"),
-          (col("doc_id") + 500000).as("doc_b"))
-        val tp = pred.join(truth, Seq("doc_a", "doc_b"), "left_semi")
-        pred.agg(count(lit(1)).as("n_pred"))
-          .crossJoin(broadcast(truth.agg(count(lit(1)).as("n_truth"))))
-          .crossJoin(broadcast(tp.agg(count(lit(1)).as("tp"))))
-          .select(col("n_truth"), col("n_pred"), col("tp"),
-            when(col("n_pred") === 0, lit(null).cast("double")).otherwise(
-              round(col("tp").cast("double") / col("n_pred").cast("double"), 6))
-              .as("precision"),
-            round(col("tp").cast("double") / col("n_truth").cast("double"), 6)
-              .as("recall"),
-            round(lit(2.0) * col("tp").cast("double") /
-              (col("n_pred") + col("n_truth")).cast("double"), 6).as("f1"))
+        val pred = graft.Caches.lazyBarrier(MediaDedup.crossPairs(
+            MediaDedup.bandRows(orig), rs, maxHamming = 8)
+          .select("doc_a", "doc_b"))
+        pairScores(pred, docs(s, dir).select(col("doc_id").as("doc_a"),
+          (col("doc_id") + 500000).as("doc_b")))
       },
       oracle = Some {
         def sfun(k: String): String =
@@ -8021,33 +7972,11 @@ object ScaleQueries {
             .union(AudioDedup.mediaWavPlanted(ids, shift = 500000L,
               edit = 100, stereo = true)))
         val fp = AudioDedup.fingerprintsWav(media).toDF()
-        val b = MediaDedup.capBandBuckets(MediaDedup.bandRows(fp), maxBucket = 64)
-        val l = b.select(col("doc_id").as("doc_a"), col("band"), col("v"),
-          col("b0").as("a0"), col("b1").as("a1"), col("b2").as("a2"),
-          col("b3").as("a3"))
-        val r = b.select(col("doc_id").as("doc_b"), col("band"), col("v"),
-          col("b0").as("x0"), col("b1").as("x1"), col("b2").as("x2"),
-          col("b3").as("x3"))
         // barrier: the prediction set feeds both the count and the TP join
-        val pred = graft.Caches.lazyBarrier(l.join(r, Seq("band", "v"))
-          .filter(col("doc_a") < col("doc_b"))
-          .filter(expr("CAST(bit_count(a0 ^ x0) + bit_count(a1 ^ x1) + " +
-            "bit_count(a2 ^ x2) + bit_count(a3 ^ x3) AS INT)") <= 8)
-          .select("doc_a", "doc_b").distinct())
-        val truth = docs(s, dir)
-          .select(col("doc_id").as("doc_a"), (col("doc_id") + 500000).as("doc_b"))
-        val tp = pred.join(truth, Seq("doc_a", "doc_b"), "left_semi")
-        pred.agg(count(lit(1)).as("n_pred"))
-          .crossJoin(broadcast(truth.agg(count(lit(1)).as("n_truth"))))
-          .crossJoin(broadcast(tp.agg(count(lit(1)).as("tp"))))
-          .select(col("n_truth"), col("n_pred"), col("tp"),
-            when(col("n_pred") === 0, lit(null).cast("double")).otherwise(
-              round(col("tp").cast("double") / col("n_pred").cast("double"), 6))
-              .as("precision"),
-            round(col("tp").cast("double") / col("n_truth").cast("double"), 6)
-              .as("recall"),
-            round(lit(2.0) * col("tp").cast("double") /
-              (col("n_pred") + col("n_truth")).cast("double"), 6).as("f1"))
+        val pred = graft.Caches.lazyBarrier(
+          MediaDedup.pairs(fp, maxHamming = 8).select("doc_a", "doc_b"))
+        pairScores(pred, docs(s, dir)
+          .select(col("doc_id").as("doc_a"), (col("doc_id") + 500000).as("doc_b")))
       },
       oracle = Some(
         s"""WITH ${audioFpCtes(
@@ -8100,20 +8029,7 @@ object ScaleQueries {
             .union(AudioDedup.mediaWavPlanted(ids, shift = 500000L,
               edit = 100, stereo = true)))
         val fp = AudioDedup.fingerprintsWav(media).toDF()
-        val b = MediaDedup.capBandBuckets(MediaDedup.bandRows(fp), maxBucket = 64)
-        val l = b.select(col("doc_id").as("doc_a"), col("band"), col("v"),
-          col("b0").as("a0"), col("b1").as("a1"), col("b2").as("a2"),
-          col("b3").as("a3"))
-        val r = b.select(col("doc_id").as("doc_b"), col("band"), col("v"),
-          col("b0").as("x0"), col("b1").as("x1"), col("b2").as("x2"),
-          col("b3").as("x3"))
-        val pairs = l.join(r, Seq("band", "v"))
-          .filter(col("doc_a") < col("doc_b"))
-          .withColumn("hamming", expr(
-            "CAST(bit_count(a0 ^ x0) + bit_count(a1 ^ x1) + " +
-              "bit_count(a2 ^ x2) + bit_count(a3 ^ x3) AS INT)"))
-          .filter(col("hamming") <= 8)
-          .select("doc_a", "doc_b", "hamming").distinct()
+        val pairs = MediaDedup.pairs(fp, maxHamming = 8)
           .withColumn("is_tp", (col("doc_b") - col("doc_a") === 500000L))
         // tiny (hamming, is_tp) histogram, then each threshold reads it
         val hist = pairs.groupBy("hamming", "is_tp").agg(count(lit(1)).as("n"))
@@ -8212,18 +8128,7 @@ object ScaleQueries {
               shift = 900000L - 5000011L))
           graft.Caches.pinnedBarrier(AudioDedup.fingerprintsWav(media).toDF())
         }
-        val b = MediaDedup.capBandBuckets(MediaDedup.bandRows(fp), maxBucket = 64)
-        val l = b.select(col("doc_id").as("doc_a"), col("band"), col("v"),
-          col("b0").as("a0"), col("b1").as("a1"), col("b2").as("a2"),
-          col("b3").as("a3"))
-        val r = b.select(col("doc_id").as("doc_b"), col("band"), col("v"),
-          col("b0").as("x0"), col("b1").as("x1"), col("b2").as("x2"),
-          col("b3").as("x3"))
-        val audEdges = l.join(r, Seq("band", "v"))
-          .filter(col("doc_a") < col("doc_b"))
-          .filter(expr("CAST(bit_count(a0 ^ x0) + bit_count(a1 ^ x1) + " +
-            "bit_count(a2 ^ x2) + bit_count(a3 ^ x3) AS INT)") <= 2)
-          .select("doc_a", "doc_b").distinct()
+        val audEdges = MediaDedup.pairs(fp, maxHamming = 2).select("doc_a", "doc_b")
         // digest classes: text never shuffles — the window runs over
         // (pair_id, sha256) only
         val txtClusters = caps
@@ -8535,15 +8440,11 @@ object ScaleQueries {
         val ph = graft.Caches.lazyBarrier(
           Multimodal.perceptualHashPng(media).toDF())
         val firstHit = top
-          .join(ph.select(col("doc_id").as("pair_id"), col("b0").as("x0"),
-            col("b1").as("x1"), col("b2").as("x2"), col("b3").as("x3")),
-            Seq("pair_id"))
+          .join(ph.withColumnRenamed("doc_id", "pair_id").as("x"), Seq("pair_id"))
           .join(ph.filter(col("doc_id") >= 2000000L)
-            .select((col("doc_id") - 2000000L).as("qid"), col("b0").as("a0"),
-              col("b1").as("a1"), col("b2").as("a2"), col("b3").as("a3")),
+            .withColumn("qid", col("doc_id") - 2000000L).drop("doc_id").as("a"),
             Seq("qid"))
-          .filter(expr("CAST(bit_count(a0 ^ x0) + bit_count(a1 ^ x1) + " +
-            "bit_count(a2 ^ x2) + bit_count(a3 ^ x3) AS INT)") <= 8)
+          .filter(MediaDedup.hamming("a", "x") <= 8)
           .groupBy("qid").agg(min("rank").as("first_hit"))
         val hb = firstHit.groupBy("first_hit").agg(count(lit(1)).as("nh"))
         val nq = d.filter(col("doc_id") % 20 === 5)
@@ -10072,31 +9973,8 @@ object ScaleQueries {
         val ph = graft.Caches.lazyBarrier(
           Multimodal.perceptualHashPng(media).toDF())
         // hot (band, v) buckets suppressed before the self-join — the cap
-        // the oracle's qband CTE replays (MediaDedup.capBandBuckets doc)
-        val bands = MediaDedup.capBandBuckets(
-          ph.select(col("doc_id"), explode(array(
-            struct(lit(0).as("band"), col("b0").as("v")),
-            struct(lit(1).as("band"), col("b1").as("v")),
-            struct(lit(2).as("band"), col("b2").as("v")),
-            struct(lit(3).as("band"), col("b3").as("v")))).as("e"))
-          .select(col("doc_id"), col("e.band").as("band"), col("e.v").as("v")),
-          maxBucket = 64)
-        val cand = bands.as("a").join(bands.as("b"),
-            col("a.band") === col("b.band") && col("a.v") === col("b.v") &&
-              col("a.doc_id") < col("b.doc_id"))
-          .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-          .distinct()
-        cand
-          .join(ph.select(col("doc_id").as("doc_a"), col("b0").as("a0"),
-            col("b1").as("a1"), col("b2").as("a2"), col("b3").as("a3")), Seq("doc_a"))
-          .join(ph.select(col("doc_id").as("doc_b"), col("b0").as("x0"),
-            col("b1").as("x1"), col("b2").as("x2"), col("b3").as("x3")), Seq("doc_b"))
-          .withColumn("hamming", expr(
-            "CAST(bit_count(a0 ^ x0) + bit_count(a1 ^ x1) + " +
-              "bit_count(a2 ^ x2) + bit_count(a3 ^ x3) AS INT)"))
-          .filter(col("hamming") <= 8)
-          .select(col("doc_a"), col("doc_b"), col("hamming"))
-          .orderBy("doc_a", "doc_b")
+        // the oracle's qband CTE replays
+        MediaDedup.pairs(ph, maxHamming = 8).orderBy("doc_a", "doc_b")
       },
       oracle = Some(
         s"""WITH $mmPhashPairCtes
@@ -10127,32 +10005,12 @@ object ScaleQueries {
           ids.mapPartitions(wrap(0L, 0))
             .union(ids.mapPartitions(wrap(500000L, 40))))
         val ph = Multimodal.perceptualHashPng(media).toDF()
-        // capped like phashDuplicates — the oracle's qband CTE replays it
-        val b = MediaDedup.capBandBuckets(MediaDedup.bandRows(ph), maxBucket = 64)
-        val l = b.select(col("doc_id").as("doc_a"), col("band"), col("v"),
-          col("b0").as("a0"), col("b1").as("a1"), col("b2").as("a2"), col("b3").as("a3"))
-        val r = b.select(col("doc_id").as("doc_b"), col("band"), col("v"),
-          col("b0").as("x0"), col("b1").as("x1"), col("b2").as("x2"), col("b3").as("x3"))
+        // capped like phashDuplicates — the oracle's qband CTE replays it;
         // barrier: the prediction set feeds both the count and the TP join
-        val pred = graft.Caches.lazyBarrier(l.join(r, Seq("band", "v"))
-          .filter(col("doc_a") < col("doc_b"))
-          .filter(expr("CAST(bit_count(a0 ^ x0) + bit_count(a1 ^ x1) + " +
-            "bit_count(a2 ^ x2) + bit_count(a3 ^ x3) AS INT)") <= 8)
-          .select("doc_a", "doc_b").distinct())
-        val truth = docs(s, dir)
-          .select(col("doc_id").as("doc_a"), (col("doc_id") + 500000).as("doc_b"))
-        val tp = pred.join(truth, Seq("doc_a", "doc_b"), "left_semi")
-        pred.agg(count(lit(1)).as("n_pred"))
-          .crossJoin(broadcast(truth.agg(count(lit(1)).as("n_truth"))))
-          .crossJoin(broadcast(tp.agg(count(lit(1)).as("tp"))))
-          .select(col("n_truth"), col("n_pred"), col("tp"),
-            when(col("n_pred") === 0, lit(null).cast("double")).otherwise(
-              round(col("tp").cast("double") / col("n_pred").cast("double"), 6))
-              .as("precision"),
-            round(col("tp").cast("double") / col("n_truth").cast("double"), 6)
-              .as("recall"),
-            round(lit(2.0) * col("tp").cast("double") /
-              (col("n_pred") + col("n_truth")).cast("double"), 6).as("f1"))
+        val pred = graft.Caches.lazyBarrier(
+          MediaDedup.pairs(ph, maxHamming = 8).select("doc_a", "doc_b"))
+        pairScores(pred, docs(s, dir)
+          .select(col("doc_id").as("doc_a"), (col("doc_id") + 500000).as("doc_b")))
       },
       oracle = Some(
         s"""WITH $mmPhashPairCtes,
@@ -10299,20 +10157,8 @@ object ScaleQueries {
           NearDup.jaccardPairs(corpus, "doc_id", "source",
               shingleN = 3, threshold = 0.5)
             .select("doc_a", "doc_b"))
-        val truth = docs(s, dir).filter(col("doc_id") % 20 === 0)
-          .select(col("doc_id").as("doc_a"), (col("doc_id") + 200000).as("doc_b"))
-        val tp = pred.join(truth, Seq("doc_a", "doc_b"), "left_semi")
-        pred.agg(count(lit(1)).as("n_pred"))
-          .crossJoin(broadcast(truth.agg(count(lit(1)).as("n_truth"))))
-          .crossJoin(broadcast(tp.agg(count(lit(1)).as("tp"))))
-          .select(col("n_truth"), col("n_pred"), col("tp"),
-            when(col("n_pred") === 0, lit(null).cast("double")).otherwise(
-              round(col("tp").cast("double") / col("n_pred").cast("double"), 6))
-              .as("precision"),
-            round(col("tp").cast("double") / col("n_truth").cast("double"), 6)
-              .as("recall"),
-            round(lit(2.0) * col("tp").cast("double") /
-              (col("n_pred") + col("n_truth")).cast("double"), 6).as("f1"))
+        pairScores(pred, docs(s, dir).filter(col("doc_id") % 20 === 0)
+          .select(col("doc_id").as("doc_a"), (col("doc_id") + 200000).as("doc_b")))
       },
       oracle = Some(
         s"""WITH $sqlNearDupDocs,

@@ -27,11 +27,12 @@ import org.apache.spark.sql.functions._
   * scaling multiplies both sides of every comparison).
   *
   * The 64 bits pack as four 16-bit bands in the [[MediaDedup]] layout
-  * (doc_id, b0..b3), so the ENTIRE image machinery applies unchanged:
+  * (doc_id, b0..b3), so the one band-hash kernel applies unchanged:
   * [[MediaDedup.bandRows]] is the persisted index schema,
-  * [[MediaDedup.phashDuplicates]] the intra-set dedup (hot-bucket
-  * capped), [[MediaDedup.admitAgainst]] the admission probe (index-side
-  * cap, recounted after [[Deletion.purge]]), and
+  * [[MediaDedup.pairs]] / [[MediaDedup.phashDuplicates]] the intra-set
+  * dedup (hot-bucket capped), [[MediaDedup.crossPairs]] /
+  * [[MediaDedup.admitAgainst]] the admission probe (index-side cap,
+  * recounted after [[Deletion.purge]]), and
   * [[graft.streaming.StreamingAudioAdmission]] the streaming twin.
   *
   * 100 TB posture: decode stays inside mapPartitions (payload bytes

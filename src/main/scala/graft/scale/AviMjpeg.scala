@@ -416,7 +416,7 @@ object AviMjpeg {
   }
 
   /** Uniform-stride keyframe sampling + per-frame aHash: position p of k
-    * maps to frame ⌊p·nf/k⌋ (the [[Multimodal.sampleFrames]] stride), the
+    * maps to frame ⌊p·nf/k⌋ (the [[Multimodal.sampleFramesParsed]] stride), the
     * sampled frame entropy-decodes through the JPEG decoder, and its
     * 64-bit aHash ships as four 16-bit bands — the per-video signature
     * the dedup join blocks on. Only ≤ k frames per video ever decode,
@@ -447,10 +447,28 @@ object AviMjpeg {
     }
   }
 
+  /** Keyframe hashes melted to band rows, CARRYING the full four-band
+    * hash (the [[MediaDedup.bandRows]] fused-verify trick): one row per
+    * (video, pos, band). This is the persisted video-admission index
+    * schema — the band-0 rows double as the per-(video, pos) hash table,
+    * so the index needs no second file.
+    */
+  def videoBandRows(fph: DataFrame): DataFrame =
+    MediaDedup.bandRows(fph, Seq("video_id", "pos"))
+
+  /** The hot-bucket-qualified (video_id, pos, band, v) blocking rows of
+    * [[videoDupPairs]], exposed so a session-pinned fixture can
+    * checkpoint them once (melt + cap window are deterministic in the
+    * hash frame) and feed [[videoDupPairsQualified]] per run.
+    */
+  def qualifiedVideoBands(fph: DataFrame, maxBucket: Int = 64): DataFrame =
+    HotBuckets.cap(videoBandRows(fph).select("video_id", "pos", "band", "v"),
+      Seq("pos", "band", "v"), maxBucket)
+
   /** Video near-dup from keyframe hashes: candidates share an exact
     * (pos, band, v) key — temporal alignment is part of the blocking key,
     * so the join stays linear for the aligned-clone class — then verify
-    * per aligned position (Hamming over the four bands) and keep pairs
+    * per aligned position ([[MediaDedup.hamming]]) and keep pairs
     * where ≥ `minMatch` positions agree within `maxHamming`. Only ints
     * cross the exchanges; payloads never do.
     *
@@ -465,39 +483,6 @@ object AviMjpeg {
     * band half the corpus shares carries no discriminative signal anyway;
     * pairs whose every key is hot are the documented recall cost.
     */
-  /** Keyframe hashes melted to band rows, CARRYING the full four-band
-    * hash (the [[MediaDedup.bandRows]] fused-verify trick): one row per
-    * (video, pos, band). This is the persisted video-admission index
-    * schema — the band-0 rows double as the per-(video, pos) hash table,
-    * so the index needs no second file.
-    */
-  def videoBandRows(fph: DataFrame): DataFrame =
-    fph.select(col("video_id"), col("pos"), explode(array(
-        struct(lit(0).as("band"), col("b0").as("v")),
-        struct(lit(1).as("band"), col("b1").as("v")),
-        struct(lit(2).as("band"), col("b2").as("v")),
-        struct(lit(3).as("band"), col("b3").as("v")))).as("e"),
-      col("b0"), col("b1"), col("b2"), col("b3"))
-      .select(col("video_id"), col("pos"),
-        col("e.band").as("band"), col("e.v").as("v"),
-        col("b0"), col("b1"), col("b2"), col("b3"))
-
-  /** The hot-bucket-qualified (video_id, pos, band, v) blocking rows of
-    * [[videoDupPairs]], exposed so a session-pinned fixture can
-    * checkpoint them once (melt + cap window are deterministic in the
-    * hash frame) and feed [[videoDupPairsQualified]] per run.
-    */
-  def qualifiedVideoBands(fph: DataFrame, maxBucket: Int = 64): DataFrame = {
-    val bands = fph.select(col("video_id"), col("pos"), explode(array(
-        struct(lit(0).as("band"), col("b0").as("v")),
-        struct(lit(1).as("band"), col("b1").as("v")),
-        struct(lit(2).as("band"), col("b2").as("v")),
-        struct(lit(3).as("band"), col("b3").as("v")))).as("e"))
-      .select(col("video_id"), col("pos"),
-        col("e.band").as("band"), col("e.v").as("v"))
-    HotBuckets.cap(bands, Seq("pos", "band", "v"), maxBucket)
-  }
-
   def videoDupPairs(fph: DataFrame, maxHamming: Int = 8,
                     minMatch: Int = 2, maxBucket: Int = 64): DataFrame =
     videoDupPairsQualified(qualifiedVideoBands(fph, maxBucket), fph,
@@ -512,14 +497,9 @@ object AviMjpeg {
           col("a.v") === col("b.v") && col("a.video_id") < col("b.video_id"))
       .select(col("a.video_id").as("video_a"), col("b.video_id").as("video_b"))
       .distinct()
-    val ha = fph.select(col("video_id").as("video_a"), col("pos"),
-      col("b0").as("a0"), col("b1").as("a1"), col("b2").as("a2"), col("b3").as("a3"))
-    val hb = fph.select(col("video_id").as("video_b"), col("pos"),
-      col("b0").as("x0"), col("b1").as("x1"), col("b2").as("x2"), col("b3").as("x3"))
-    cand.join(ha, Seq("video_a")).join(hb, Seq("video_b", "pos"))
-      .withColumn("ham", expr(
-        "CAST(bit_count(a0 ^ x0) + bit_count(a1 ^ x1) + " +
-          "bit_count(a2 ^ x2) + bit_count(a3 ^ x3) AS INT)"))
+    cand.join(fph.withColumnRenamed("video_id", "video_a").as("a"), Seq("video_a"))
+      .join(fph.withColumnRenamed("video_id", "video_b").as("b"), Seq("video_b", "pos"))
+      .withColumn("ham", MediaDedup.hamming("a", "b"))
       .groupBy("video_a", "video_b")
       .agg(sum(when(col("ham") <= maxHamming, 1).otherwise(0)).cast("int").as("n_match"),
         max(col("ham")).as("max_ham"))
@@ -583,14 +563,9 @@ object AviMjpeg {
     */
   def videoDupPairsOffset(fph: DataFrame, maxHamming: Int = 8,
                           minMatch: Int = 2, maxBucket: Int = 64): DataFrame = {
-    val bands = fph.select(col("video_id"), col("pos"), explode(array(
-        struct(lit(0).as("band"), col("b0").as("v")),
-        struct(lit(1).as("band"), col("b1").as("v")),
-        struct(lit(2).as("band"), col("b2").as("v")),
-        struct(lit(3).as("band"), col("b3").as("v")))).as("e"))
-      .select(col("video_id"), col("pos"),
-        col("e.band").as("band"), col("e.v").as("v"))
-    val qualified = HotBuckets.cap(bands, Seq("band", "v"), maxBucket)
+    val qualified = HotBuckets.cap(
+      videoBandRows(fph).select("video_id", "pos", "band", "v"),
+      Seq("band", "v"), maxBucket)
     val votes = qualified.as("a").join(qualified.as("b"),
         col("a.band") === col("b.band") && col("a.v") === col("b.v") &&
           col("a.video_id") < col("b.video_id"))
@@ -604,19 +579,17 @@ object AviMjpeg {
           .orderBy(col("n_votes").desc, abs(col("off")), col("off"))))
       .filter(col("rk") === 1)
       .select(col("video_a"), col("video_b"), col("off"))
-    val ha = fph.select(col("video_id").as("video_a"), col("pos").as("fa"),
-      col("b0").as("a0"), col("b1").as("a1"), col("b2").as("a2"), col("b3").as("a3"))
-    val hb = fph.select(col("video_id").as("video_b"), col("pos").as("fb"),
-      col("b0").as("x0"), col("b1").as("x1"), col("b2").as("x2"), col("b3").as("x3"))
+    val ha = fph.withColumnRenamed("video_id", "video_a")
+      .withColumnRenamed("pos", "fa").as("a")
+    val hb = fph.withColumnRenamed("video_id", "video_b")
+      .withColumnRenamed("pos", "fb").as("b")
     // the alignment is an EQUI-join: fb = fa − off is precomputed so the
     // planner hashes on (video_b, fb) instead of exploding nfa×nfb rows
     // per pair and post-filtering
     best.join(ha, Seq("video_a"))
       .withColumn("fb", col("fa") - col("off"))
       .join(hb, Seq("video_b", "fb"))
-      .withColumn("ham", expr(
-        "CAST(bit_count(a0 ^ x0) + bit_count(a1 ^ x1) + " +
-          "bit_count(a2 ^ x2) + bit_count(a3 ^ x3) AS INT)"))
+      .withColumn("ham", MediaDedup.hamming("a", "b"))
       .groupBy("video_a", "video_b", "off")
       .agg(count(lit(1)).cast("int").as("n_aligned"),
         sum(when(col("ham") <= maxHamming, 1).otherwise(0)).cast("int").as("n_match"))
@@ -758,15 +731,11 @@ object AviMjpeg {
       .join(idxQualified.select(col("video_id").as("ivid"),
         col("pos"), col("band"), col("v")), Seq("pos", "band", "v"))
       .select("bvid", "ivid").distinct()
-    val bh = batchFph.select(col("video_id").as("bvid"), col("pos"),
-      col("b0").as("a0"), col("b1").as("a1"), col("b2").as("a2"), col("b3").as("a3"))
-    val ih = index.filter(col("band") === 0)
-      .select(col("video_id").as("ivid"), col("pos"),
-        col("b0").as("x0"), col("b1").as("x1"), col("b2").as("x2"), col("b3").as("x3"))
+    val bh = batchFph.withColumnRenamed("video_id", "bvid").as("a")
+    val ih = index.filter(col("band") === 0).drop("band", "v")
+      .withColumnRenamed("video_id", "ivid").as("b")
     val dup = cand.join(bh, Seq("bvid")).join(ih, Seq("ivid", "pos"))
-      .withColumn("ham", expr(
-        "CAST(bit_count(a0 ^ x0) + bit_count(a1 ^ x1) + " +
-          "bit_count(a2 ^ x2) + bit_count(a3 ^ x3) AS INT)"))
+      .withColumn("ham", MediaDedup.hamming("a", "b"))
       .groupBy("bvid", "ivid")
       .agg(sum(when(col("ham") <= maxHamming, 1).otherwise(0)).as("n_match"))
       .filter(col("n_match") >= minMatch)

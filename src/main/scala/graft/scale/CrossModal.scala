@@ -12,8 +12,8 @@ import org.apache.spark.sql.functions._
   * rather than silently drop.
   *
   * Both modality clusterings reuse the engine's single-modal machinery:
-  * images via aHash band blocking + Hamming verify over REAL decoded
-  * pixels ([[MediaDedup]] layout) resolved by
+  * images via the band-hash kernel's capped pair join over REAL decoded
+  * pixels ([[MediaDedup.pairs]]) resolved by
   * [[Clusters.connectedComponents]]; captions via MinHash LSH band
   * candidates + signature agreement ([[NearDup]]) resolved the same way.
   * The joint class is the (img_cluster, txt_cluster) composite; the
@@ -42,30 +42,11 @@ object CrossModal {
                 maxBucket: Int = 64): DataFrame = {
     val phB = graft.Caches.persist(ph)
 
-    // image edges: exact 16-bit band agreement blocks, Hamming verifies —
-    // the MediaDedup.bandRows fused-verify layout (band rows carry the
-    // FULL hash, so ONE bucket join verifies in place; a candidates-then-
-    // re-entry spelling costs two more hash joins and a wider distinct).
-    // Hot (band, v) buckets are suppressed before the self-join
-    // (MediaDedup.capBandBuckets — blank/flat images share one aHash
-    // band, the degenerate-content quadratic the video cap measured)
-    val bands = MediaDedup.capBandBuckets(
-      phB.select(col("doc_id"), explode(array(
-        struct(lit(0).as("band"), col("b0").as("v")),
-        struct(lit(1).as("band"), col("b1").as("v")),
-        struct(lit(2).as("band"), col("b2").as("v")),
-        struct(lit(3).as("band"), col("b3").as("v")))).as("e"),
-      col("b0"), col("b1"), col("b2"), col("b3"))
-      .select(col("doc_id"), col("e.band").as("band"), col("e.v").as("v"),
-        col("b0"), col("b1"), col("b2"), col("b3")), maxBucket)
-    val imgEdges = bands.as("a").join(bands.as("b"),
-        col("a.band") === col("b.band") && col("a.v") === col("b.v") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .filter(expr(
-        "CAST(bit_count(a.b0 ^ b.b0) + bit_count(a.b1 ^ b.b1) + " +
-          "bit_count(a.b2 ^ b.b2) + bit_count(a.b3 ^ b.b3) AS INT)") <= maxHamming)
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
+    // image edges: the capped fused-verify band self-join
+    // (MediaDedup.pairs — blank/flat images share one aHash band, the
+    // degenerate-content quadratic the cap suppresses)
+    val imgEdges = MediaDedup.pairs(phB, maxHamming, maxBucket)
+      .select("doc_a", "doc_b")
 
     // caption edges: LSH band candidates + MinHash signature agreement.
     // The bucket table feeds both sides of the self-join — withSignatures

@@ -26,10 +26,12 @@ import org.apache.spark.sql.functions._
   * dedup, captions from AVI '01tx' or MP4 tx3g) operate on true
   * demuxed-and-decoded frames from either container.
   * What is NOT claimed (needs codec libraries this container lacks):
-  * inter-coded video codecs (H.26x), progressive/arithmetic JPEG —
-  * [[decodeOne]] remains the clearly marked byte-derived stand-in for
-  * those, with the partition-batched typed plumbing (the Scala analog of
-  * `mapInPandas` batch UDFs) real and tested either way.
+  * inter-coded video codecs (H.26x) and progressive/arithmetic JPEG;
+  * every operator here decodes the real container or payload
+  * ([[decodeHeaders]], [[sampleFramesParsed]], [[resizePngThumb]],
+  * [[audioFrameEnergyPcm]], [[perceptualHashPng]]) in the
+  * partition-batched typed shape (the Scala analog of `mapInPandas`
+  * batch UDFs).
   *
   * At 100 TB: payloads stay columnar in parquet, the decode runs once per
   * partition with per-partition codec initialization (the expensive part the
@@ -41,80 +43,14 @@ object Multimodal {
   /** A media row: opaque payload + routing metadata. */
   final case class MediaRecord(doc_id: Long, media_type: String, payload: Array[Byte])
 
-  /** Extracted metadata (decode-stub output). */
+  /** Extracted container metadata ([[decodeHeaders]] output). */
   final case class MediaMeta(doc_id: Long, media_type: String, byte_len: Long,
                              width: Int, height: Int, n_frames: Int)
 
-  /** STUB decoder: deterministic pseudo-dimensions derived from the payload
-    * bytes. A real build swaps `decodeOne` for the codec call; the
-    * partition-iterator shape (one codec init per partition) is the part
-    * that matters for scale.
-    */
-  private def decodeOne(r: MediaRecord): MediaMeta = {
-    val len = r.payload.length.toLong
-    val first = if (r.payload.nonEmpty) r.payload(0) & 0xff else 0
-    MediaMeta(r.doc_id, r.media_type, len,
-      width = (len % 640).toInt,
-      height = ((len * 7) % 480).toInt,
-      n_frames = first % 16)
-  }
-
-  /** Partition-batched decode: the per-partition prefix is where a real
-    * implementation initializes its codec once.
-    */
-  def decodeMeta(ds: Dataset[MediaRecord]): Dataset[MediaMeta] = {
-    import ds.sparkSession.implicits._
-    ds.mapPartitions { it =>
-      // codec init would go here (once per partition, not per record)
-      it.map(decodeOne)
-    }
-  }
-
-  /** One sampled frame: the decode-stub digest stands in for the frame
-    * tensor a real codec would return.
+  /** One sampled frame: the digest of the demuxed body at a frame index
+    * ([[sampleFramesParsed]] output).
     */
   final case class FrameSample(doc_id: Long, frame_idx: Int, frame_digest: String)
-
-  /** Uniform-stride frame sampling, the video-side analog of [[decodeMeta]]:
-    * up to `target` frames per media row at indices floor(i·n_frames/k),
-    * k = min(target, n_frames). Index selection is pure arithmetic; the
-    * per-frame "extraction" is the stub digest of (payload, index), and the
-    * partition iterator is where a real build seeks/decodes — one codec
-    * (and one digest instance) per partition, not per frame. Frame fan-out
-    * is bounded at `target` rows per media row, so output size is
-    * predictable at any corpus scale.
-    */
-  def sampleFrames(ds: Dataset[MediaRecord], target: Int): Dataset[FrameSample] = {
-    import ds.sparkSession.implicits._
-    ds.mapPartitions { it =>
-      val md = java.security.MessageDigest.getInstance("SHA-256")
-      it.flatMap { r =>
-        val m = decodeOne(r)
-        val k = math.min(target, m.n_frames)
-        if (k <= 0) Iterator.empty
-        else (0 until k).map(i => i * m.n_frames / k).distinct.iterator.map { idx =>
-          md.reset()
-          md.update(r.payload)
-          md.update(s"#$idx".getBytes("UTF-8"))
-          FrameSample(r.doc_id, idx, md.digest().map("%02x".format(_)).mkString)
-        }
-      }
-    }
-  }
-
-  /** Builds a deterministic media frame from the documents fixture: the
-    * UTF-8 text bytes play the role of the opaque payload.
-    */
-  def mediaFromDocuments(docs: DataFrame): Dataset[MediaRecord] = {
-    import docs.sparkSession.implicits._
-    docs.select(
-        col("doc_id"),
-        when(col("doc_id") % 3 === 0, "image")
-          .when(col("doc_id") % 3 === 1, "audio")
-          .otherwise("video").as("media_type"),
-        encode(col("text"), "UTF-8").as("payload"))
-      .as[MediaRecord]
-  }
 
   // ------------------------------------------------------------------
   // Real container headers: the fixture text is wrapped in byte-exact
@@ -462,9 +398,11 @@ object Multimodal {
     * for WAV, mvhd duration for MP4), the frame "content" digested is the
     * DEMUXED body ([[extractBody]]), not the container bytes — so the
     * digest is a deterministic function of the media content an oracle
-    * can replay. Same uniform-stride index selection and bounded fan-out
-    * as [[sampleFrames]]; rows whose container fails to parse or demux
-    * are skipped (poison-tolerant).
+    * can replay. Uniform-stride index selection: up to `target` frames
+    * per media row at indices floor(i·n_frames/k), k = min(target,
+    * n_frames), so frame fan-out is bounded at `target` rows per media
+    * row at any corpus scale; rows whose container fails to parse or
+    * demux are skipped (poison-tolerant).
     */
   def sampleFramesParsed(ds: Dataset[MediaRecord], target: Int): Dataset[FrameSample] = {
     import ds.sparkSession.implicits._
@@ -493,7 +431,8 @@ object Multimodal {
   /** Real header decode over container-framed payloads: media_type is the
     * SNIFFED container (png/jpeg/wav/mp4), width/height/n_frames are the
     * parsed header fields (for wav: sample rate / channels / sample
-    * frames). Same partition-batched typed shape as [[decodeMeta]].
+    * frames). Partition-batched: the per-partition prefix is where a
+    * codec would initialize once.
     */
   def decodeHeaders(ds: Dataset[MediaRecord]): Dataset[MediaMeta] = {
     import ds.sparkSession.implicits._
@@ -747,131 +686,19 @@ object Multimodal {
     } catch { case _: Throwable => None }
   }
 
-  /** 64-bit aHash-style perceptual fingerprint, packed as FOUR 16-bit
-    * bands (LSH-ready). The stub "image" is the payload resampled to an
-    * 8×8 grid of byte-mean cells over equal slices; bit i = cell mean >
-    * global mean — the real average-hash algorithm over fake pixels. All
-    * arithmetic is integer (floor divisions), so the DuckDB oracle
-    * replays it exactly. Rows shorter than 64 bytes are skipped (no
-    * empty cells, no div-by-zero). Same typed mapPartitions shape as
-    * [[decodeMeta]]. (The PNG-pixel form below, [[perceptualHashPng]],
-    * is the real-image path; this byte-slice form remains for opaque
-    * payloads where no decoder applies.)
-    */
-  /** Stub resize: the payload resampled to a `side`×`side` grid of
-    * byte-mean cells (same integer grid arithmetic as [[perceptualHash]])
-    * emitted as a hex thumbnail — the downsample a real build replaces
-    * with a codec resize, with the partition-batched shape and the
-    * deterministic output contract already in place. Hex (not raw
-    * binary) so the DuckDB oracle can re-derive it byte-for-byte.
+  /** A resized image as a hex thumbnail ([[resizePngThumb]] output). Hex
+    * (not raw binary) so the DuckDB oracle can re-derive it byte-for-byte.
     */
   final case class Thumb(doc_id: Long, side: Int, thumb_hex: String)
 
-  def resizeThumb(ds: Dataset[MediaRecord], side: Int): Dataset[Thumb] = {
-    import ds.sparkSession.implicits._
-    val cells = side * side
-    ds.mapPartitions { it =>
-      it.flatMap { r =>
-        val b = r.payload
-        val n = b.length
-        if (n < cells) Iterator.empty
-        else {
-          val sb = new java.lang.StringBuilder(cells * 2)
-          var c = 0
-          while (c < cells) {
-            val lo = c * n / cells
-            val hi = (c + 1) * n / cells
-            var s = 0L
-            var j = lo
-            while (j < hi) { s += (b(j) & 0xff); j += 1 }
-            val m = (s / (hi - lo)).toInt
-            sb.append(f"$m%02x")
-            c += 1
-          }
-          Iterator.single(Thumb(r.doc_id, side, sb.toString))
-        }
-      }
-    }
-  }
-
-  /** Stub audio feature-extract: payload bytes read as centered PCM
-    * samples, per-frame energy = Σ(sample−128)² over fixed 64-sample
-    * frames (trailing partial frame dropped) — all integer, so the
-    * oracle replays it. A real build swaps the byte reads for decoded
-    * PCM; the frame loop, silence threshold, and per-partition batching
-    * stand.
-    */
+  /** Per-clip frame energies ([[audioFrameEnergyPcm]] output). */
   final case class AudioFrames(doc_id: Long, n_frames: Int, max_energy: Long,
                                max_frame: Int, silence_frames: Int)
 
-  def audioFrameEnergy(ds: Dataset[MediaRecord], frameLen: Int = 64,
-                       silenceBelow: Long = 100000L): Dataset[AudioFrames] = {
-    import ds.sparkSession.implicits._
-    ds.mapPartitions { it =>
-      it.flatMap { r =>
-        val b = r.payload
-        val nf = b.length / frameLen
-        if (nf == 0) Iterator.empty
-        else {
-          var maxE = -1L
-          var maxI = 0
-          var silent = 0
-          var f = 0
-          while (f < nf) {
-            var e = 0L
-            var j = f * frameLen
-            val end = j + frameLen
-            while (j < end) {
-              val d = (b(j) & 0xff) - 128L
-              e += d * d
-              j += 1
-            }
-            if (e > maxE) { maxE = e; maxI = f }
-            if (e < silenceBelow) silent += 1
-            f += 1
-          }
-          Iterator.single(AudioFrames(r.doc_id, nf, maxE, maxI, silent))
-        }
-      }
-    }
-  }
-
+  /** A 64-bit perceptual hash packed as FOUR 16-bit bands
+    * ([[perceptualHashPng]] output, the [[MediaDedup]] layout).
+    */
   final case class PHash(doc_id: Long, b0: Int, b1: Int, b2: Int, b3: Int)
-
-  def perceptualHash(ds: Dataset[MediaRecord]): Dataset[PHash] = {
-    import ds.sparkSession.implicits._
-    ds.mapPartitions { it =>
-      it.flatMap { r =>
-        val b = r.payload
-        val n = b.length
-        if (n < 64) Iterator.empty
-        else {
-          var tot = 0L
-          var i = 0
-          while (i < n) { tot += (b(i) & 0xff); i += 1 }
-          val gm = tot / n
-          val bits = new Array[Int](64)
-          var c = 0
-          while (c < 64) {
-            val lo = c * n / 64
-            val hi = (c + 1) * n / 64
-            var s = 0L
-            var j = lo
-            while (j < hi) { s += (b(j) & 0xff); j += 1 }
-            bits(c) = if (s / (hi - lo) > gm) 1 else 0
-            c += 1
-          }
-          def band(k: Int): Int = {
-            var v = 0
-            var j = 0
-            while (j < 16) { v |= bits(16 * k + j) << j; j += 1 }
-            v
-          }
-          Iterator.single(PHash(r.doc_id, band(0), band(1), band(2), band(3)))
-        }
-      }
-    }
-  }
 
   // --- planted real-content generators + true-pixel/sample operators ---
 

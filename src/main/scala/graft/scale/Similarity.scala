@@ -344,7 +344,6 @@ object Similarity {
     */
   final case class VectorBandPlan(bands: Int, bitsPerBand: Int) {
     require(bands > 0 && bitsPerBand > 0)
-    def totalBits: Int = bands * bitsPerBand
     /** Candidate probability of a pair at cosine `c` under this plan:
       * 1 − (1 − p^r)^b with p the per-hyperplane collision probability —
       * the SRP S-curve (Charikar 2002), the vector-space analog of

@@ -120,13 +120,6 @@ object TextOps {
 
   def stopwordRatio(text: Column): Column = stopwordRatioOf(tokens(text))
 
-  /** Mean token length. */
-  def meanTokenLen(text: Column): Column = {
-    val toks = tokens(text)
-    aggregate(toks, lit(0L), (acc, t) => acc + length(t)).cast("double") /
-      size(toks).cast("double")
-  }
-
   /** Digit-character ratio — one vectorized regex pass per document
     * (`regexp_count`), not a per-character interpreted `rlike` over an
     * exploded char array.
@@ -306,8 +299,6 @@ object TextOps {
 
   def langScoreOf(toks: Column, lang: String): Column =
     size(filter(toks, t => t.isin(langMarkers(lang): _*)))
-
-  def langScore(text: Column, lang: String): Column = langScoreOf(tokens(text), lang)
 
   /** Predicted language from a token column: max marker score, ties broken
     * alphabetically (fold keeps the earlier language unless strictly

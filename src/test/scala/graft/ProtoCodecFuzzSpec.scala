@@ -112,7 +112,7 @@ class ProtoCodecFuzzSpec extends AnyFunSuite {
     row.update(0, ArrayBasedMapData(
       Array[Any](UTF8String.fromString("k")), Array[Any](null)))
     val bytes = ProtoStruct.encodeMessage(row, fields)
-    val back = ProtoStruct.decode(bytes, fields)
+    val back = ProtoStruct.decode(bytes, new Layout(fields))
     assert(back.getMap(0).valueArray().getUTF8String(0).toString == "null")
   }
 
@@ -123,7 +123,7 @@ class ProtoCodecFuzzSpec extends AnyFunSuite {
       val fields = genFields(2)(p, Seed(9000L + i)).getOrElse(sys.error("gen"))
       val row = genRow(fields)(p, Seed(77000L + i)).getOrElse(sys.error("gen"))
       val bytes1 = ProtoStruct.encodeMessage(row, fields)
-      val row2 = ProtoStruct.decode(bytes1, fields)
+      val row2 = ProtoStruct.decode(bytes1, new Layout(fields))
       val bytes2 = ProtoStruct.encodeMessage(row2, fields)
       assert(bytes2.sameElements(bytes1),
         s"idempotence broke at seed $i:\nfields=${ProtoStruct.render(fields)}")

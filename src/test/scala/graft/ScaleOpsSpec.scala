@@ -1,6 +1,6 @@
 package graft
 
-import graft.scale.{Multimodal, NearDup, Similarity, TextOps}
+import graft.scale.{NearDup, Similarity, TextOps}
 import org.apache.spark.sql.functions._
 
 /** Sanity properties for the scale/ operators (the oracle queries check
@@ -564,16 +564,5 @@ class ScaleOpsSpec extends SparkSpec {
       // share a list with their own centroid assignment
       assert(pairs.select(countDistinct("list_id")).head.getLong(0) >= 1)
     } finally pairs.unpersist()
-  }
-
-  test("multimodal decode stub: typed mapPartitions yields deterministic meta") {
-    import spark.implicits._
-    val docs = Seq((6L, "hello world", "en", "s", 11L))
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val meta = Multimodal.decodeMeta(Multimodal.mediaFromDocuments(docs)).collect()
-    assert(meta.length == 1)
-    val m = meta(0)
-    assert(m.media_type == "image" && m.byte_len == 11L &&
-      m.width == 11 && m.height == 77 && m.n_frames == 'h'.toInt % 16)
   }
 }
