@@ -18,8 +18,15 @@ import org.apache.spark.sql.Row
   *
   *   - idempotency state lives *in* the engine:
   *     `withWatermark(ts, ttl).dropDuplicatesWithinWatermark(keys)` — RocksDB
-  *     state store at scale, horizon = the reference's 3600 s Redis TTL
-  *     (W4), no per-record remote round-trip;
+  *     state store at scale, no per-record remote round-trip (W4). A
+  *     duplicate within `ttl` of its key's first event time is always
+  *     dropped. A key leaves state at the end of the first data batch
+  *     whose watermark (the latest event time of the batches before it,
+  *     minus `ttl`) passes `ts + ttl`, so a redelivery in that batch is
+  *     still dropped and only a later one is admitted. The query runs no
+  *     eviction-only micro-batches (see [[start]]): an idle stream keeps
+  *     its last state until data arrives, and an `availableNow` run leaves
+  *     the keys that expire in its last batch for the next run to evict;
   *   - the manual ack is the checkpoint commit: a micro-batch that fails
   *     reprocesses from the last committed offsets, and the idempotent
   *     dedup + deterministic routing make the replay recompute the same
@@ -126,6 +133,16 @@ object ConsumePipeline {
     *
     * `availableNow = true` gives the bounded backfill/replay trigger
     * (Trigger.AvailableNow — the §3.3 replay job shape).
+    *
+    * The query runs with `spark.sql.streaming.noDataMicroBatches.enabled`
+    * off. By default Spark follows every batch that moves the watermark
+    * with a batch of no input, only to evict expired state; the dedup
+    * emits no rows on eviction, so that batch would cost three empty
+    * appends, a barrier and a state and log version for nothing. Expired
+    * keys leave state at the end of the next data batch instead (see the
+    * object doc). `StreamExecution` clones the session when it is built,
+    * so the setting is scoped to `start()`: the caller's value is restored
+    * (or unset) when it returns or throws.
     */
   def start(envelopedStream: DataFrame, outDir: String, cfg: Config = Config(),
             failurePredicate: org.apache.spark.sql.Column = lit(false),
@@ -144,6 +161,12 @@ object ConsumePipeline {
           routed.retry.write.mode("append").parquet(s"$outDir/retry")
         }
       }
-    (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
+    val conf = envelopedStream.sparkSession.conf
+    val before = conf.getAll.get(NoDataBatches)
+    conf.set(NoDataBatches, "false")
+    try (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
+    finally before.fold(conf.unset(NoDataBatches))(conf.set(NoDataBatches, _))
   }
+
+  private val NoDataBatches = "spark.sql.streaming.noDataMicroBatches.enabled"
 }

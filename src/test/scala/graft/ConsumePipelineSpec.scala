@@ -19,7 +19,12 @@ case class Ev(event_id: Long, ts: Timestamp, user_id: Long,
 class ConsumePipelineSpec extends SparkSpec {
 
   private def mkEv(id: Long, minute: Int, etype: String = "click"): Ev =
-    Ev(id, Timestamp.valueOf(f"2024-01-01 10:$minute%02d:00"), id % 10, etype, 1.0, """{"k":1}""")
+    evAt(id, f"10:$minute%02d", etype)
+
+  private def evAt(id: Long, hhmm: String, etype: String = "click"): Ev =
+    Ev(id, Timestamp.valueOf(s"2024-01-01 $hhmm:00"), id % 10, etype, 1.0, """{"k":1}""")
+
+  private val NoDataBatches = "spark.sql.streaming.noDataMicroBatches.enabled"
 
   test("streaming dedup across micro-batches matches batch keep-first") {
     import spark.implicits._
@@ -216,5 +221,83 @@ class ConsumePipelineSpec extends SparkSpec {
       .collect().toSeq == Seq(1L))
     assert(spark.sparkContext.getPersistentRDDs.keySet == before,
       "a failed batch must still release its barrier's blocks")
+  }
+
+  test("runs no eviction-only micro-batch: every batch has input rows") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val out = java.nio.file.Files.createTempDirectory("consume-nodata").toString
+
+    val input = MemoryStream[Ev]
+    // 13:00 moves the watermark past 10:00 + 1 h, so id 1 has expired;
+    // Spark's default would follow with a batch of no input to evict it
+    input.addData(evAt(1, "10:00"), evAt(2, "13:00"))
+    val q = ConsumePipeline.start(Envelope.withEnvelope(input.toDF()), out,
+      ConsumePipeline.Config(dedupTtl = "1 hour"))
+    try q.awaitTermination() finally q.stop()
+
+    val batches = q.recentProgress.map(p => p.batchId -> p.numInputRows).toSeq
+    assert(batches.nonEmpty && batches.forall(_._2 > 0),
+      s"every micro-batch must carry input (batch -> rows): $batches")
+    assert(spark.read.parquet(s"$out/processed").count() == 2L)
+  }
+
+  test("post-TTL redelivery: admitted only after the batch that evicts its key") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val out = java.nio.file.Files.createTempDirectory("consume-post-ttl").toString
+
+    val input = MemoryStream[Ev]
+    val q = ConsumePipeline.start(Envelope.withEnvelope(input.toDF()), out,
+      ConsumePipeline.Config(dedupTtl = "1 hour"), availableNow = false)
+    try {
+      // 13:00 moves the watermark to 12:00, past id 1's 11:00 expiry: the
+      // 13:01 batch still drops id 1 and evicts it at its end, so the
+      // 13:02 copy is the one admitted. The pauses leave an idle engine
+      // the time to run an eviction-only batch, which would admit 13:01
+      Seq(evAt(1, "10:00"), evAt(2, "13:00"), evAt(1, "13:01"), evAt(1, "13:02"))
+        .foreach { ev =>
+          input.addData(ev)
+          q.processAllAvailable()
+          Thread.sleep(500)
+        }
+    } finally q.stop()
+
+    val admitted = spark.read.parquet(s"$out/processed")
+      .select("event_id", "ts").as[(Long, Timestamp)].collect().toSeq
+      .groupBy(_._1).map { case (id, rows) => id -> rows.map(_._2).sortBy(_.getTime) }
+    def at(hhmm: String): Timestamp = evAt(0, hhmm).ts
+    assert(admitted == Map(1L -> Seq(at("10:00"), at("13:02")), 2L -> Seq(at("13:00"))))
+    // no copy within the TTL of an admitted one is ever admitted
+    assert(admitted.values.forall(ts => ts.zip(ts.drop(1)).forall { case (a, b) =>
+      b.getTime - a.getTime > 3600L * 1000L }), s"within-TTL copy admitted: $admitted")
+  }
+
+  test("start restores the caller's no-data-batch setting: unset, true, throw") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val conf = spark.conf
+    def setting: Option[String] = conf.getAll.get(NoDataBatches)
+    def run(out: String): Unit = {
+      val q = ConsumePipeline.start(
+        Envelope.withEnvelope(MemoryStream[Ev].toDF()), out, availableNow = false)
+      q.stop()
+    }
+    val callers = setting
+    try {
+      conf.unset(NoDataBatches)
+      run(java.nio.file.Files.createTempDirectory("consume-conf-unset").toString)
+      assert(setting.isEmpty, "an unset caller setting must stay unset")
+
+      conf.set(NoDataBatches, "true")
+      run(java.nio.file.Files.createTempDirectory("consume-conf-true").toString)
+      assert(setting == Some("true"))
+
+      // the checkpoint would sit under a regular file, so start() throws
+      conf.unset(NoDataBatches)
+      val file = java.nio.file.Files.createTempFile("consume-conf-fail", "")
+      intercept[Exception](run(file.toString))
+      assert(setting.isEmpty, "a start that throws must still restore the caller's setting")
+    } finally callers.fold(conf.unset(NoDataBatches))(conf.set(NoDataBatches, _))
   }
 }

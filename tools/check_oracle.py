@@ -4,13 +4,15 @@
 Runs after `sbt "runMain graft.Verify <sfDir> <outDir>"`: loads each query's
 Spark parquet output, runs the corresponding oracle SQL in DuckDB over the
 same fixture dir, and compares (columns sorted by name, rows sorted, exact
-values). Usage:
+values). Each PASS line carries the oracle's DuckDB seconds, and the ten
+slowest oracles are listed after the tally. Usage:
 
     python3 tools/check_oracle.py /root/testdata/sf0.01 /tmp/verify_out
 """
 import json
 import math
 import sys
+import time
 from pathlib import Path
 
 import duckdb
@@ -71,6 +73,7 @@ def main(sf_dir: str, out_dir: str) -> int:
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     oracle = json.loads((Path(out_dir) / "oracle_sql.json").read_text())
     n_pass = n_fail = 0
+    secs = {}
     for name, sql in sorted(oracle.items()):
         spark_path = Path(out_dir) / name
         if not spark_path.exists():
@@ -79,7 +82,10 @@ def main(sf_dir: str, out_dir: str) -> int:
             continue
         try:
             got = canon(pd.read_parquet(spark_path))
-            want = canon(con.execute(sql).df())
+            t0 = time.perf_counter()
+            want = con.execute(sql).df()
+            secs[name] = time.perf_counter() - t0
+            want = canon(want)
         except Exception as e:  # noqa: BLE001
             print(f"FAIL {name}: {type(e).__name__}: {e}")
             n_fail += 1
@@ -113,9 +119,13 @@ def main(sf_dir: str, out_dir: str) -> int:
             print(f"FAIL {name}: row {i} col {c}: spark={g!r} duckdb={w!r}")
             n_fail += 1
         else:
-            print(f"PASS {name} ({len(got)} rows)")
+            print(f"PASS {name} ({len(got)} rows, {secs[name]:.2f} s)")
             n_pass += 1
     print(f"\n{n_pass} pass / {n_fail} fail")
+    if secs:
+        print("slowest oracles (DuckDB s):")
+        for name, s in sorted(secs.items(), key=lambda kv: -kv[1])[:10]:
+            print(f"  {s:8.2f}  {name}")
     return 1 if n_fail else 0
 
 
