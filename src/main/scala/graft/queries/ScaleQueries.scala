@@ -203,7 +203,7 @@ object ScaleQueries {
       s"list_transform(generate_series(1, len($a)), i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE))), " +
       s"(x, y) -> x + y)"
 
-  /** round(cosine, 6) of two DuckDB list expressions (= Similarity.cosine). */
+  /** round(cosine, 6) of two DuckDB list expressions (= Similarity.score). */
   private def sqlCosine(a: String, b: String): String =
     s"ROUND(${sqlDot(a, b)} / (sqrt(${sqlDot(a, a)}) * sqrt(${sqlDot(b, b)})), 6)"
 
@@ -272,12 +272,8 @@ object ScaleQueries {
         e.select(col("vec_id").as("neighbor_id"), col("embedding").as("nv"),
           col("label").as("nlabel")))
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("score", round(Similarity.cosine(col("qv"), col("nv")), 6))
-    val nn = pairs.withColumn("rank", row_number().over(
-        Window.partitionBy("query_id")
-          .orderBy(col("score").desc, col("neighbor_id"))))
-      .filter(col("rank") <= 5)
-    nn.groupBy("query_id", "qlabel", "nlabel")
+      .withColumn("score", Similarity.score(col("qv"), col("nv")))
+    Similarity.topK(pairs, 5).groupBy("query_id", "qlabel", "nlabel")
       .agg(count(lit(1)).as("v"))
       .withColumn("pr", row_number().over(
         Window.partitionBy("query_id")
@@ -2163,8 +2159,7 @@ object ScaleQueries {
             col("embedding").as("avec"))
         val scored = e.crossJoin(broadcast(anchors))
           .filter(col("vec_id") =!= col("aid"))
-          .withColumn("cos",
-            round(Similarity.cosine(col("embedding"), col("avec")), 6))
+          .withColumn("cos", Similarity.score(col("embedding"), col("avec")))
         val wPos = Window.partitionBy("aid")
           .orderBy(col("cos").desc, col("vec_id"))
         val pos = scored.filter(col("label") === col("albl"))
@@ -4548,34 +4543,16 @@ object ScaleQueries {
         // pairs-based kill (larger id dies) from pinned frames — the
         // same collision+verify rule admitAgainstVectors applies
         def vecKills(p: DataFrame, sd: DataFrame): DataFrame =
-          p.as("l").join(p.as("r"),
-              col("l.band_idx") === col("r.band_idx") &&
-              col("l.bucket") === col("r.bucket") &&
-              col("l.id") < col("r.id"))
-            .select(col("l.id").as("id_a"), col("r.id").as("id_b")).distinct()
-            .join(sd.select(col("id").as("id_a"), col("v").as("av"),
-              col("n").as("an")), "id_a")
-            .join(sd.select(col("id").as("id_b"), col("v").as("bv"),
-              col("n").as("bn")), "id_b")
-            .filter(round(Similarity.dot(col("av"), col("bv")) /
-              (col("an") * col("bn")), 6) >= 0.99d)
+          Similarity.postingPairs(p, sd, 0.99d)
             .select(col("id_b").as("vec_id")).distinct()
         // probe: any band collision vs the tombstone-masked index at
         // cosine ≥ θ — admitAgainstVectors' is_dup rule over the pinned
         // posting/side frames (the index side never re-runs the kernel)
-        val vIdxKill = vPost1
-          .select(col("id").as("b_id"), col("band_idx"), col("bucket"))
-          .join(graft.Caches.sessionMemo(s, s"v9vpost0p:$dir")(
-              graft.Caches.pinnedBarrier(Deletion.purge(vPost0, vTomb, "id")))
-              .select(col("id").as("c_id"), col("band_idx"), col("bucket")),
-            Seq("band_idx", "bucket"))
-          .select("b_id", "c_id").distinct()
-          .join(vSide1.select(col("id").as("b_id"), col("v").as("bv"),
-            col("n").as("bn")), "b_id")
-          .join(vSide0.select(col("id").as("c_id"), col("v").as("cv"),
-            col("n").as("cn")), "c_id")
-          .filter(round(Similarity.dot(col("bv"), col("cv")) /
-            (col("bn") * col("cn")), 6) >= 0.99d)
+        val vIdxKill = Similarity.postingMatches(vPost1, vSide1,
+            graft.Caches.sessionMemo(s, s"v9vpost0p:$dir")(
+              graft.Caches.pinnedBarrier(Deletion.purge(vPost0, vTomb, "id"))),
+            vSide0)
+          .filter(col("score") >= 0.99d)
           .select(col("b_id").as("vec_id")).distinct()
         val vAdmInc = vShard1.select("vec_id")
           .join(vecKills(vPost1, vSide1).withColumn("ik", lit(true)),
@@ -5335,9 +5312,7 @@ object ScaleQueries {
         val plan = Similarity.vectorBandPlanAuto(n)
         // truth needs no pair join: the planted pair is (id, id+100000)
         val truth = e.select(col("vec_id"),
-            round(Similarity.dot(col("embedding"), mutate) /
-              (Similarity.norm(col("embedding")) * Similarity.norm(mutate)), 6)
-              .as("c"))
+            Similarity.score(col("embedding"), mutate).as("c"))
           .filter(col("c") >= 0.99)
         val detected = Similarity.srpBandedNearDupPairs(corpus,
             "vec_id", "embedding", threshold = 0.99, plan)
@@ -9601,10 +9576,8 @@ object ScaleQueries {
             Seq("query_id"))
           .join(e.select(col("vec_id").as("neighbor_id"), col("embedding").as("nv")),
             Seq("neighbor_id"))
-          .withColumn("score", round(Similarity.cosine(col("qv"), col("nv")), 6))
-        val w = Window.partitionBy("query_id")
-          .orderBy(col("score").desc, col("neighbor_id"))
-        ex.withColumn("rank", row_number().over(w)).filter(col("rank") <= 3)
+          .withColumn("score", Similarity.score(col("qv"), col("nv")))
+        Similarity.topK(ex, 3)
           .select(col("query_id"), col("neighbor_id"), col("score"),
             col("coarse_rank"), col("rank"))
           .orderBy("query_id", "rank")

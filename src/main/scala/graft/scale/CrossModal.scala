@@ -48,30 +48,14 @@ object CrossModal {
     val imgEdges = MediaDedup.pairs(phB, maxHamming, maxBucket)
       .select("doc_a", "doc_b")
 
-    // caption edges: LSH band candidates + MinHash signature agreement.
-    // The bucket table feeds both sides of the self-join — withSignatures
-    // already barriers the signature subtree (Caches.lazyBarrier), so
-    // both sides read the checkpoint instead of re-running the
-    // shingle+MinHash pass. Hot (band_idx, band_hash) buckets suppressed
-    // (NearDup.capBuckets — boilerplate-identical captions collide in
-    // every band, the text twin of the blank-image pathology).
-    val sigs = NearDup.withSignatures(captions)
-    val buckets = NearDup.capBuckets(sigs.select(col(idCol).as("doc"),
-      col("minhash_sig").as("sig"),
-      posexplode(col("bands")).as(Seq("band_idx", "band_hash"))), maxBucket)
-    // agreement filters BEFORE the dedup: the collision rows carry both
-    // signature arrays, so deduplicating first would move 2×K longs per
-    // row through the distinct exchange — filter on the join output
-    // (cheap per row), then distinct over bare id pairs
-    val txtEdges = buckets.as("l").join(buckets.as("r"),
-        col("l.band_idx") === col("r.band_idx") &&
-        col("l.band_hash") === col("r.band_hash") &&
-        col("l.doc") < col("r.doc"))
-      .filter(aggregate(zip_with(col("l.sig"), col("r.sig"),
-        (x, y) => when(x === y, 1).otherwise(0)), lit(0),
-        (acc, v) => acc + v) >= minSigMatches)
-      .select(col("l.doc").as("doc_a"), col("r.doc").as("doc_b"))
-      .distinct()
+    // caption edges: verified LSH pairs (NearDup.lshDupPairs — capped
+    // band self-join, signature agreement filtered before the distinct).
+    // withSignatures barriers the signature subtree (Caches.lazyBarrier),
+    // so both join sides read the checkpoint instead of re-running the
+    // shingle+MinHash pass; the cap suppresses boilerplate-identical
+    // captions, the text twin of the blank-image pathology.
+    val txtEdges = NearDup.lshDupPairs(NearDup.withSignatures(captions),
+      idCol, minSigMatches, maxBucket)
 
     pairDedupFromEdges(captions.select(col(idCol).as("pair_id")),
       imgEdges, txtEdges)

@@ -108,8 +108,35 @@ object NearDup {
     * partitions on the same key the join shuffles on, so the exchange is
     * shared. Deterministic — the DuckDB oracles replay the cap exactly.
     */
-  private[scale] def capBuckets(buckets: DataFrame, maxBucket: Int): DataFrame =
+  private def capBuckets(buckets: DataFrame, maxBucket: Int): DataFrame =
     HotBuckets.cap(buckets, Seq("band_idx", "band_hash"), maxBucket)
+
+  /** The one LSH bucket self-join: (doc[, sig], band_idx, band_hash)
+    * bucket rows, capped ([[capBuckets]]), joined on the bucket with
+    * l.doc < r.doc. `withSig` carries the MinHash signature through the
+    * join for [[verified]] (the cap window partitions on the join key, so
+    * the qualification rides the exchange the self-join needs anyway).
+    */
+  private def bucketPairs(withSigs: DataFrame, idCol: String, maxBucket: Int,
+                          withSig: Boolean): DataFrame = {
+    val sig = if (withSig) Seq(col("minhash_sig").as("sig")) else Nil
+    val buckets = capBuckets(withSigs.select((col(idCol).as("doc") +: sig) :+
+      posexplode(col("bands")).as(Seq("band_idx", "band_hash")): _*), maxBucket)
+    buckets.as("l").join(buckets.as("r"),
+        col("l.band_idx") === col("r.band_idx") &&
+        col("l.band_hash") === col("r.band_hash") &&
+        col("l.doc") < col("r.doc"))
+  }
+
+  /** [[bucketPairs]] collision rows whose signatures agree in at least
+    * `minSigMatches` of K positions, verified per collision row.
+    */
+  private def verified(withSigs: DataFrame, idCol: String, minSigMatches: Int,
+                       maxBucket: Int): DataFrame =
+    bucketPairs(withSigs, idCol, maxBucket, withSig = true)
+      .withColumn("m", aggregate(zip_with(col("l.sig"), col("r.sig"),
+        (x, y) => when(x === y, 1).otherwise(0)), lit(0), (acc, v) => acc + v))
+      .filter(col("m") >= minSigMatches)
 
   /** LSH candidate pairs: documents sharing any (band index, band hash)
     * bucket, deduplicated, a < b. The join is a shuffle on the band hash,
@@ -117,16 +144,10 @@ object NearDup {
     * linear in corpus size even on boilerplate-degenerate content.
     */
   def lshCandidates(withSigs: DataFrame, idCol: String,
-                    maxBucket: Int = 64): DataFrame = {
-    val buckets = capBuckets(withSigs.select(col(idCol).as("doc"),
-        posexplode(col("bands")).as(Seq("band_idx", "band_hash"))), maxBucket)
-    buckets.as("l").join(buckets.as("r"),
-        col("l.band_idx") === col("r.band_idx") &&
-        col("l.band_hash") === col("r.band_hash") &&
-        col("l.doc") < col("r.doc"))
+                    maxBucket: Int = 64): DataFrame =
+    bucketPairs(withSigs, idCol, maxBucket, withSig = false)
       .select(col("l.doc").as("doc_a"), col("r.doc").as("doc_b"))
       .distinct()
-  }
 
   /** Doc ids on the losing (larger-id) side of any LSH near-dup pair, in
     * ONE self-join: the band-bucket join carries both signatures, so the
@@ -140,22 +161,9 @@ object NearDup {
     * replaces three narrow ones over the full signature table.
     */
   def lshDuplicates(withSigs: DataFrame, idCol: String,
-                    minSigMatches: Int, maxBucket: Int = 64): DataFrame = {
-    // the cap window partitions on the join key, so the qualification
-    // rides the same exchange the self-join needs anyway (sig payload
-    // included — it crossed that exchange before the cap existed too)
-    val buckets = capBuckets(withSigs.select(col(idCol).as("doc"),
-      col("minhash_sig").as("sig"),
-      posexplode(col("bands")).as(Seq("band_idx", "band_hash"))), maxBucket)
-    buckets.as("l").join(buckets.as("r"),
-        col("l.band_idx") === col("r.band_idx") &&
-        col("l.band_hash") === col("r.band_hash") &&
-        col("l.doc") < col("r.doc"))
-      .withColumn("m", aggregate(zip_with(col("l.sig"), col("r.sig"),
-        (x, y) => when(x === y, 1).otherwise(0)), lit(0), (acc, v) => acc + v))
-      .filter(col("m") >= minSigMatches)
+                    minSigMatches: Int, maxBucket: Int = 64): DataFrame =
+    verified(withSigs, idCol, minSigMatches, maxBucket)
       .select(col("r.doc").as(idCol)).distinct()
-  }
 
   /** Verified LSH near-dup PAIRS (doc_a < doc_b, distinct) — the pair
     * form of [[lshDuplicates]] (same fused one-join plan, same cap, same
@@ -165,19 +173,9 @@ object NearDup {
     * equivalence oracles of the v9 capstone.
     */
   def lshDupPairs(withSigs: DataFrame, idCol: String,
-                  minSigMatches: Int, maxBucket: Int = 64): DataFrame = {
-    val buckets = capBuckets(withSigs.select(col(idCol).as("doc"),
-      col("minhash_sig").as("sig"),
-      posexplode(col("bands")).as(Seq("band_idx", "band_hash"))), maxBucket)
-    buckets.as("l").join(buckets.as("r"),
-        col("l.band_idx") === col("r.band_idx") &&
-        col("l.band_hash") === col("r.band_hash") &&
-        col("l.doc") < col("r.doc"))
-      .withColumn("m", aggregate(zip_with(col("l.sig"), col("r.sig"),
-        (x, y) => when(x === y, 1).otherwise(0)), lit(0), (acc, v) => acc + v))
-      .filter(col("m") >= minSigMatches)
+                  minSigMatches: Int, maxBucket: Int = 64): DataFrame =
+    verified(withSigs, idCol, minSigMatches, maxBucket)
       .select(col("l.doc").as("doc_a"), col("r.doc").as("doc_b")).distinct()
-  }
 
   /** Exact n-gram-Jaccard near-dup pairs via an inverted shingle index:
     * explode shingles, self-join on (block, shingle), count co-occurrences,

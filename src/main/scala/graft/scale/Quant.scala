@@ -99,16 +99,13 @@ object Quant {
       .withColumn("qn", sqrt(intDot(col("q"), col("q")).cast("double")))
     val cents = c.filter(col("id") < nLists)
       .select(col("id").as("cent_id"), col("v").as("cv"), col("n").as("cn"))
-    val cw = Window.partitionBy("id").orderBy(col("cscore").desc, col("cent_id"))
     // persisted: the assignment feeds membership AND (nProbe > 1) probes —
     // and the float vectors are DROPPED here, so everything downstream
     // moves quantized bytes only
     val top = graft.Caches.persist(
-      c.crossJoin(broadcast(cents))
-        .withColumn("cscore",
-          round(Similarity.dot(col("v"), col("cv")) / (col("n") * col("cn")), 6))
-        .withColumn("crank", row_number().over(cw))
-        .filter(col("crank") <= math.max(nProbe, 1))
+      Similarity.topK(c.crossJoin(broadcast(cents))
+          .withColumn("cscore", Similarity.score(col("v"), col("n"), col("cv"), col("cn"))),
+          math.max(nProbe, 1), by = "id", tie = "cent_id", scoreCol = "cscore", rank = "crank")
         .select(col("id"), col("q"), col("qn"), col("cent_id"), col("crank")))
     val assigned = top.filter(col("crank") === 1)
       .select(col("id"), col("q"), col("qn"), col("cent_id").as("list_id"))
@@ -118,10 +115,7 @@ object Quant {
       .filter(col("query_id") =!= col("id"))
       .withColumn("qscore",
         round(intDot(col("qq"), col("q")).cast("double") / (col("pqn") * col("qn")), 6))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("qscore").desc, col("id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    Similarity.topK(scored, k, tie = "id", scoreCol = "qscore")
       .select(col("query_id"), col("list_id"), col("id").as("neighbor_id"),
         col("qscore"), col("rank"))
   }
@@ -150,10 +144,7 @@ object Quant {
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("qscore",
         round(intDot(col("qq"), col("cq")).cast("double") / (col("qn") * col("cn")), 6))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("qscore").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    Similarity.topK(scored, k, scoreCol = "qscore")
       .select("query_id", "neighbor_id", "qscore", "rank")
   }
 

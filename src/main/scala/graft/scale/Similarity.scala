@@ -9,6 +9,18 @@ import org.apache.spark.sql.functions._
   * the correctness baseline, sign-quantized bucketing (an SRP-LSH variant)
   * and KMeans-centroid IVF as the 100 TB paths.
   *
+  * This object is the one vector-similarity kernel: every rounded cosine,
+  * banded-posting join and top-k rank in the engine goes through it —
+  * batch queries, the streaming admission twin and the int8 IVF alike:
+  *   - [[score]] — the cosine v·w / (|v|·|w|), rounded to 6 decimals;
+  *   - [[postingPairs]] — the one (band_idx, bucket) posting self-join,
+  *     ids deduplicated before the vectors join back and verify;
+  *   - [[postingMatches]] — the one cross-probe of a probe's postings
+  *     against an index's, scored;
+  *   - [[topK]] — the one rank over (score desc, neighbor).
+  * The search and dedup entry points below are compositions of these,
+  * over pre-built [[vectorPostings]] / [[vectorSide]] frames where banded.
+  *
   * Dot products run through the native codegen'd `graft_dot_f` expression
   * (one fused loop) with the same left-fold double-accumulation order as
   * DuckDB's `list_reduce`, so scores compare bit-identical before
@@ -35,7 +47,60 @@ object Similarity {
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
-  def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
+  /** The rounded cosine of vectors `v`, `w` with norms `n`, `m`: rounded
+    * to 6 decimals so verdicts and orderings are reproducible across
+    * engines and identical between the batch and streaming forms.
+    */
+  def score(v: Column, n: Column, w: Column, m: Column): Column =
+    round(dot(v, w) / (n * m), 6)
+
+  /** [[score]] with both norms computed in place. */
+  def score(v: Column, w: Column): Column = score(v, norm(v), w, norm(w))
+
+  /** The top-k rank: rows of `scored` numbered per `by` in (`scoreCol`
+    * desc, `tie`) order into `rank`, first `k` kept.
+    */
+  def topK(scored: DataFrame, k: Int, by: String = "query_id",
+           tie: String = "neighbor_id", scoreCol: String = "score",
+           rank: String = "rank"): DataFrame =
+    scored.withColumn(rank, row_number().over(
+        Window.partitionBy(by).orderBy(col(scoreCol).desc, col(tie))))
+      .filter(col(rank) <= k)
+
+  /** Verified near-duplicate pairs of one posting set: the (band_idx,
+    * bucket) self-join over [[vectorPostings]] rows, `id_a < id_b`, ids
+    * deduplicated first (ints through the exchange), then both vectors
+    * joined back from the [[vectorSide]] frame `side` and scored.
+    * (id_a, id_b, score) with score ≥ `threshold`.
+    */
+  def postingPairs(posts: DataFrame, side: DataFrame, threshold: Double): DataFrame =
+    posts.as("l").join(posts.as("r"),
+        col("l.band_idx") === col("r.band_idx") &&
+        col("l.bucket") === col("r.bucket") &&
+        col("l.id") < col("r.id"))
+      .select(col("l.id").as("id_a"), col("r.id").as("id_b"))
+      .distinct()
+      .join(side.select(col("id").as("id_a"), col("v").as("va"), col("n").as("na")), "id_a")
+      .join(side.select(col("id").as("id_b"), col("v").as("vb"), col("n").as("nb")), "id_b")
+      .withColumn("score", score(col("va"), col("na"), col("vb"), col("nb")))
+      .filter(col("score") >= threshold)
+      .select("id_a", "id_b", "score")
+
+  /** Scored cross-probe: every (probe id, index id) pair sharing ANY
+    * (band_idx, bucket) posting, deduplicated on ids, then scored on the
+    * vectors joined back from the two [[vectorSide]] frames. (b_id, c_id,
+    * score), unthresholded. Wrap a side in `broadcast` to broadcast it.
+    */
+  def postingMatches(probePosts: DataFrame, probeSide: DataFrame,
+                     idxPosts: DataFrame, idxSide: DataFrame): DataFrame =
+    probePosts.select(col("id").as("b_id"), col("band_idx"), col("bucket"))
+      .join(idxPosts.select(col("id").as("c_id"), col("band_idx"), col("bucket")),
+        Seq("band_idx", "bucket"))
+      .select("b_id", "c_id").distinct()
+      .join(probeSide.select(col("id").as("b_id"), col("v").as("bv"), col("n").as("bn")), "b_id")
+      .join(idxSide.select(col("id").as("c_id"), col("v").as("cv"), col("n").as("cn")), "c_id")
+      .select(col("b_id"), col("c_id"),
+        score(col("bv"), col("bn"), col("cv"), col("cn")).as("score"))
 
   /** Default sign-bucket width: 2^8 = 256 buckets. Within-bucket work is
     * O(N²/2^bits), so `bits` must grow with the corpus — see [[bitsFor]].
@@ -94,13 +159,9 @@ object Similarity {
     Hashing.register(corpus.sparkSession)
     val q = withNorm(queries, idCol, vecCol, "query_id", "qv", "qn")
     val c = withNorm(corpus, idCol, vecCol, "neighbor_id", "cv", "cn")
-    val scored = broadcast(q).crossJoin(c)
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("score", round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), 6))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("score").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topK(broadcast(q).crossJoin(c)
+        .filter(col("query_id") =!= col("neighbor_id"))
+        .withColumn("score", score(col("qv"), col("qn"), col("cv"), col("cn"))), k)
       .select("query_id", "neighbor_id", "score", "rank")
   }
 
@@ -115,8 +176,7 @@ object Similarity {
       norm(col(vecCol)).as("n"), signBucket(col(vecCol), bits).as("bucket"))
     b.as("l").join(b.as("r"),
         col("l.bucket") === col("r.bucket") && col("l.id") < col("r.id"))
-      .withColumn("score",
-        round(dot(col("l.v"), col("r.v")) / (col("l.n") * col("r.n")), 6))
+      .withColumn("score", score(col("l.v"), col("l.n"), col("r.v"), col("r.n")))
       .filter(col("score") >= threshold)
       .select(col("l.id").as("vec_a"), col("r.id").as("vec_b"), col("score"))
   }
@@ -141,8 +201,7 @@ object Similarity {
     val cents = c.filter(col("id") < nLists)
       .select(col("id").as("cent_id"), col("v").as("cv"), col("n").as("cn"))
     val cscored = c.crossJoin(broadcast(cents))
-      .withColumn("cscore",
-        round(dot(col("v"), col("cv")) / (col("n") * col("cn")), 6))
+      .withColumn("cscore", score(col("v"), col("n"), col("cv"), col("cn")))
     // nearest-centroid pick as a hash-agg max_by on (cscore, -cent_id) —
     // lexicographic struct order == the old window's ORDER BY cscore DESC,
     // cent_id ASC. The crossJoin leaves each id's nLists rows inside one
@@ -161,8 +220,7 @@ object Similarity {
           col("r.cent_id").as("list_id")))
     assigned.as("l").join(assigned.as("r"),
         col("l.list_id") === col("r.list_id") && col("l.id") < col("r.id"))
-      .withColumn("score",
-        round(dot(col("l.v"), col("r.v")) / (col("l.n") * col("r.n")), 6))
+      .withColumn("score", score(col("l.v"), col("l.n"), col("r.v"), col("r.n")))
       .filter(col("score") >= threshold)
       .select(col("l.list_id").as("list_id"),
         col("l.id").as("vec_a"), col("r.id").as("vec_b"), col("score"))
@@ -175,17 +233,12 @@ object Similarity {
     * top-k. Each corpus vector lives in exactly one list, so a (query,
     * neighbor) pair joins at most once even under multi-probe.
     */
-  private def probeTopK(probes: DataFrame, assigned: DataFrame, k: Int): DataFrame = {
-    val scored = probes.join(assigned, "list_id")
-      .filter(col("query_id") =!= col("id"))
-      .withColumn("score", round(dot(col("qv"), col("v")) / (col("qn") * col("n")), 6))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("score").desc, col("id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+  private def probeTopK(probes: DataFrame, assigned: DataFrame, k: Int): DataFrame =
+    topK(probes.join(assigned, "list_id")
+        .filter(col("query_id") =!= col("id"))
+        .withColumn("score", score(col("qv"), col("qn"), col("v"), col("n"))), k, tie = "id")
       .select(col("query_id"), col("list_id"), col("id").as("neighbor_id"),
         col("score"), col("rank"))
-  }
 
   private def selfProbes(assigned: DataFrame): DataFrame =
     assigned.select(col("id").as("query_id"), col("v").as("qv"),
@@ -228,12 +281,9 @@ object Similarity {
       val c = withNorm(corpus, idCol, vecCol, "id", "v", "n")
       val cents = c.filter(col("id") < nLists)
         .select(col("id").as("cent_id"), col("v").as("cv"), col("n").as("cn"))
-      val cscored = c.crossJoin(broadcast(cents))
-        .withColumn("cscore",
-          round(dot(col("v"), col("cv")) / (col("n") * col("cn")), 6))
-      val cw = Window.partitionBy("id").orderBy(col("cscore").desc, col("cent_id"))
-      cscored.withColumn("crank", row_number().over(cw))
-        .filter(col("crank") <= maxRank)
+      topK(c.crossJoin(broadcast(cents))
+          .withColumn("cscore", score(col("v"), col("n"), col("cv"), col("cn"))),
+          maxRank, by = "id", tie = "cent_id", scoreCol = "cscore", rank = "crank")
         .select(col("id"), col("v"), col("n"), col("cent_id"), col("crank"))
     }
     // The ranked assignment feeds the membership side AND (for nProbe > 1)
@@ -289,13 +339,9 @@ object Similarity {
       norm(col(vecCol)).as("qn"), signBucket(col(vecCol), bits).as("bucket"))
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
       norm(col(vecCol)).as("cn"), signBucket(col(vecCol), bits).as("bucket"))
-    val scored = broadcast(q).join(c, "bucket")
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("score", round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), 6))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("score").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topK(broadcast(q).join(c, "bucket")
+        .filter(col("query_id") =!= col("neighbor_id"))
+        .withColumn("score", score(col("qv"), col("qn"), col("cv"), col("cn"))), k)
       .select("query_id", "bucket", "neighbor_id", "score", "rank")
   }
 
@@ -307,31 +353,24 @@ object Similarity {
     */
   def bandedTopK(queries: DataFrame, corpus: DataFrame,
                  idCol: String, vecCol: String, k: Int,
-                 bands: Int = 4, bitsPerBand: Int = 4): DataFrame = {
+                 bands: Int = 4, bitsPerBand: Int = 4): DataFrame =
+    postingTopK(queries, corpus, idCol, vecCol, k, _.select(col(idCol).as("id"),
+      posexplode(signBands(col(vecCol), bands, bitsPerBand)).as(Seq("band_idx", "bucket"))))
+
+  /** Banded top-k over the postings `posts` builds for each side: the
+    * query side is bounded, so its postings and vectors broadcast; a
+    * (query, neighbor) pair colliding in several bands is scored once
+    * ([[postingMatches]]), self-matches dropped, then ranked.
+    */
+  private def postingTopK(queries: DataFrame, corpus: DataFrame,
+                          idCol: String, vecCol: String, k: Int,
+                          posts: DataFrame => DataFrame): DataFrame = {
     Hashing.register(corpus.sparkSession)
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-      norm(col(vecCol)).as("qn"), signBands(col(vecCol), bands, bitsPerBand).as("qb"))
-    val c = graft.Caches.persist(
-      corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
-        norm(col(vecCol)).as("cn"), signBands(col(vecCol), bands, bitsPerBand).as("cb")))
-    val qx = q.select(col("query_id"), col("qv"), col("qn"),
-      posexplode(col("qb")).as(Seq("band_idx", "bucket")))
-    val cx = c.select(col("neighbor_id"),
-      posexplode(col("cb")).as(Seq("band_idx", "bucket")))
-    // query side is bounded -> broadcast; a (query, neighbor) pair may
-    // collide in several bands, so dedup before the exact scoring join
-    val cands = broadcast(qx).join(cx, Seq("band_idx", "bucket"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select("query_id", "neighbor_id").distinct()
-    val scored = cands
-      .join(broadcast(q.select("query_id", "qv", "qn")), "query_id")
-      .join(c.select("neighbor_id", "cv", "cn"), "neighbor_id")
-      .withColumn("score", round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), 6))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("score").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "score", "rank")
+    val q = graft.Caches.persist(vectorSide(queries, idCol, vecCol))
+    val c = graft.Caches.persist(vectorSide(corpus, idCol, vecCol))
+    topK(postingMatches(broadcast(posts(queries)), broadcast(q), posts(corpus), c)
+        .filter(col("b_id") =!= col("c_id"))
+        .select(col("b_id").as("query_id"), col("c_id").as("neighbor_id"), col("score")), k)
   }
 
   // ------------------------------------------------------------------
@@ -482,24 +521,8 @@ object Similarity {
                           threshold: Double, plan: VectorBandPlan): DataFrame = {
     Hashing.register(batch.sparkSession)
     val b = graft.Caches.persist(vectorSide(batch, idCol, vecCol))
-    val probe = vectorPostings(batch, idCol, vecCol, plan)
-      .select(col("id").as("b_id"), col("band_idx"), col("bucket"))
-    val idx = postings.select(col("id").as("c_id"), col("band_idx"), col("bucket"))
-    // candidate ids FIRST (ints through the exchange), vectors joined back
-    // once per surviving pair
-    val cands = probe.join(idx, Seq("band_idx", "bucket"))
-      .select("b_id", "c_id").distinct()
-    val cside = vectorSide(vectors, idCol, vecCol)
-      .select(col("id").as("c_id"), col("v").as("cv"), col("n").as("cn"))
-    val scored = cands
-      .join(b.select(col("id").as("b_id"), col("v").as("bv"), col("n").as("bn")), "b_id")
-      .join(cside, "c_id")
-      .select(col("b_id"), col("c_id"),
-        round(dot(col("bv"), col("cv")) / (col("bn") * col("cn")), 6).as("score"))
-    val w = Window.partitionBy("b_id")
-      .orderBy(col("score").desc, col("c_id"))
-    val best = scored.withColumn("rk", row_number().over(w))
-      .filter(col("rk") === 1)
+    val best = topK(postingMatches(vectorPostings(batch, idCol, vecCol, plan), b,
+        postings, vectorSide(vectors, idCol, vecCol)), 1, by = "b_id", tie = "c_id")
       .select(col("b_id"), col("c_id").as("matched_id"), col("score"))
     batch.select(col(idCol).as("b_id"))
       .join(best, Seq("b_id"), "left")
@@ -552,19 +575,7 @@ object Similarity {
     // the postings once; without the barrier CollapseProject recomputes
     // norms + band quantizations per reference.
     val b = graft.Caches.persist(vectorSide(corpus, idCol, vecCol))
-    val buckets = vectorPostings(corpus, idCol, vecCol, plan)
-    val cands = buckets.as("l").join(buckets.as("r"),
-        col("l.band_idx") === col("r.band_idx") &&
-        col("l.bucket") === col("r.bucket") &&
-        col("l.id") < col("r.id"))
-      .select(col("l.id").as("id_a"), col("r.id").as("id_b"))
-      .distinct()
-    val left = b.select(col("id").as("id_a"), col("v").as("va"), col("n").as("na"))
-    val right = b.select(col("id").as("id_b"), col("v").as("vb"), col("n").as("nb"))
-    cands.join(left, "id_a").join(right, "id_b")
-      .withColumn("score",
-        round(dot(col("va"), col("vb")) / (col("na") * col("nb")), 6))
-      .filter(col("score") >= threshold)
+    postingPairs(vectorPostings(corpus, idCol, vecCol, plan), b, threshold)
       .select(col("id_a").as("vec_a"), col("id_b").as("vec_b"), col("score"))
   }
 
@@ -589,27 +600,6 @@ object Similarity {
     */
   def bandedTopKPlan(queries: DataFrame, corpus: DataFrame,
                      idCol: String, vecCol: String, k: Int,
-                     plan: VectorBandPlan): DataFrame = {
-    Hashing.register(corpus.sparkSession)
-    val q = graft.Caches.persist(vectorSide(queries, idCol, vecCol))
-    val c = graft.Caches.persist(vectorSide(corpus, idCol, vecCol))
-    val qx = vectorPostings(queries, idCol, vecCol, plan)
-      .select(col("id").as("query_id"), col("band_idx"), col("bucket"))
-    val cx = vectorPostings(corpus, idCol, vecCol, plan)
-      .select(col("id").as("neighbor_id"), col("band_idx"), col("bucket"))
-    val cands = broadcast(qx).join(cx, Seq("band_idx", "bucket"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select("query_id", "neighbor_id").distinct()
-    val scored = cands
-      .join(broadcast(q.select(col("id").as("query_id"), col("v").as("qv"),
-        col("n").as("qn"))), "query_id")
-      .join(c.select(col("id").as("neighbor_id"), col("v").as("cv"),
-        col("n").as("cn")), "neighbor_id")
-      .withColumn("score", round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), 6))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("score").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "score", "rank")
-  }
+                     plan: VectorBandPlan): DataFrame =
+    postingTopK(queries, corpus, idCol, vecCol, k, vectorPostings(_, idCol, vecCol, plan))
 }

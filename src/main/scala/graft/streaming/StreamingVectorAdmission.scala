@@ -9,10 +9,16 @@ import org.apache.spark.sql.streaming.StreamingQuery
 /** Continuous EMBEDDING-space corpus growth — the vector twin of
   * [[StreamingAdmission]]: each micro-batch of `(vec_id, embedding)` rows
   * is (1) near-dup'd WITHIN the batch (banded-SRP bucket collision +
-  * exact-cosine verify, smaller id survives), (2) admitted against the
+  * cosine verify, smaller id survives), (2) admitted against the
   * persisted banded POSTING index, and (3) appended — admitted vectors to
   * `admittedDir`, their int-only posting rows to `indexDir` — under the
   * [[Admission]] replay protocol.
+  *
+  * Both joins are the batch kernel's (`Similarity.postingPairs`,
+  * `Similarity.postingMatches`) and both verdicts compare the same
+  * 6-decimal rounded cosine (`Similarity.score`) with the threshold, so a
+  * vector is rejected here exactly when `Similarity.admitAgainstVectors`
+  * and `dedup_vector_incremental` call it a duplicate.
   *
   * Same scale posture as the text side: the index directory is the ONLY
   * cross-batch state (no state store — corpus growth bounded by object
@@ -110,18 +116,9 @@ object StreamingVectorAdmission {
         val posts = graft.Caches.persist(
           Similarity.vectorPostings(screened, "vec_id", "embedding", plan))
 
-        // (1) intra-batch: any-band collision (ids only) -> exact cosine on
-        // the joined-back vectors -> larger id dies
-        val intraCands = posts.as("l").join(posts.as("r"),
-            col("l.band_idx") === col("r.band_idx") &&
-            col("l.bucket") === col("r.bucket") && col("l.id") < col("r.id"))
-          .select(col("l.id").as("id_a"), col("r.id").as("id_b")).distinct()
-        val intraDropped = intraCands
-          .join(side.select(col("id").as("id_a"), col("v").as("va"), col("n").as("na")), "id_a")
-          .join(side.select(col("id").as("id_b"), col("v").as("vb"), col("n").as("nb")), "id_b")
-          .withColumn("score",
-            Similarity.dot(col("va"), col("vb")) / (col("na") * col("nb")))
-          .filter(col("score") >= threshold)
+        // (1) intra-batch: any-band collision (ids only) -> rounded cosine
+        // on the joined-back vectors -> larger id dies
+        val intraDropped = Similarity.postingPairs(posts, side, threshold)
           .select(col("id_b").as("id")).distinct()
         val intraSurvivors = side.join(intraDropped, Seq("id"), "left_anti")
         val survivorPosts = posts.join(intraDropped, Seq("id"), "left_anti")
@@ -129,21 +126,10 @@ object StreamingVectorAdmission {
         // (2) cross-batch admission against the tombstone-masked index and
         // corpus as of before this batch. The posting probe shuffles ints
         // only; indexed vectors come from the admitted corpus BY ID.
-        val idxPosts = b.asOf(indexDir, posts.limit(0), "id")
-          .select(col("id").as("c_id"), col("band_idx"), col("bucket"))
-        val crossCands = survivorPosts
-          .select(col("id").as("b_id"), col("band_idx"), col("bucket"))
-          .join(idxPosts, Seq("band_idx", "bucket"))
-          .select("b_id", "c_id").distinct()
-        val corpusSide = b.asOf(admittedDir, screened.limit(0), "vec_id")
-          .select(col("vec_id").as("c_id"), col("embedding").as("cv"))
-          .withColumn("cn", Similarity.norm(col("cv")))
-        val rejected = crossCands
-          .join(intraSurvivors.select(col("id").as("b_id"), col("v").as("bv"),
-            col("n").as("bn")), "b_id")
-          .join(corpusSide, "c_id")
-          .withColumn("score",
-            Similarity.dot(col("bv"), col("cv")) / (col("bn") * col("cn")))
+        val rejected = Similarity.postingMatches(survivorPosts, intraSurvivors,
+            b.asOf(indexDir, posts.limit(0), "id"),
+            Similarity.vectorSide(b.asOf(admittedDir, screened.limit(0), "vec_id"),
+              "vec_id", "embedding"))
           .filter(col("score") >= threshold)
           .select(col("b_id").as("id")).distinct()
         val admitted = intraSurvivors.join(rejected, Seq("id"), "left_anti")

@@ -4,19 +4,27 @@ import java.time.Duration
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 
-/** [[TtlDedup]] on Spark 4's `transformWithState` API — the same Redis
-  * `SET EX` idempotency contract (first occurrence admitted, duplicates
-  * dropped while the entry lives, key re-admitted after expiry;
-  * `service/BaseEventConsumer.java:175-204`), with the TTL delegated to the
-  * state store's native `TTLConfig` instead of hand-armed timers.
+/** Exact wall-clock-TTL idempotency — the SURVEY §7.4.1 parity path.
   *
-  * Differences from the `flatMapGroupsWithState` form that matter at scale:
-  * state eviction happens inside the store (RocksDB compaction-time drop),
-  * so expired keys cost no timer firings and no empty micro-batches per
-  * key; and the value is never updated on duplicates, so the original
-  * expiry holds — exactly `SET ... EX` + `EXISTS`, not `GETEX`-style
-  * sliding renewal. State per in-flight key is one boolean + TTL
-  * bookkeeping, hash-partitioned by the dedup key.
+  * `dropDuplicatesWithinWatermark` scopes dedup state by *event time*; the
+  * reference's Redis guard (`SET event:processed:<consumer>:<id> EX 3600`,
+  * `service/BaseEventConsumer.java:175-204`) is *processing-time* TTL.
+  * This reproduces its contract on Spark 4's `transformWithState` API
+  * (first occurrence admitted, duplicates dropped while the entry lives,
+  * key re-admitted after expiry), with the TTL delegated to the state
+  * store's native `TTLConfig` instead of hand-armed timers.
+  *
+  * State eviction happens inside the store (RocksDB compaction-time drop),
+  * so expired keys cost no timer firings; and the value is never updated
+  * on duplicates, so the original expiry holds — exactly `SET ... EX` +
+  * `EXISTS`, not `GETEX`-style sliding renewal. State per in-flight key is
+  * one boolean + TTL bookkeeping, hash-partitioned by the dedup key.
+  *
+  * Use it on long-running continuous pipelines (its intended home):
+  * pending processing-time TTL counts as available work, so a
+  * `Trigger.AvailableNow` drain can keep running empty micro-batches
+  * until every entry expires; `dropDuplicatesWithinWatermark` serves
+  * bounded replays and backfills.
   */
 object TwsDedup {
 

@@ -131,19 +131,7 @@ class MediaDedupSpec extends SparkSpec {
     val melt = """struct(lit(0).as("band")"""
     val hamming = """bit_count\([\w.]*0 \^""".r
     val home = "graft/scale/MediaDedup.scala"
-    val root = java.nio.file.Paths.get("src/main/scala")
-    assert(java.nio.file.Files.isDirectory(root), s"run from the repo root: $root")
-    val sources = {
-      val it = java.nio.file.Files.walk(root).iterator()
-      val out = Seq.newBuilder[(String, String)]
-      while (it.hasNext) {
-        val p = it.next()
-        if (p.toString.endsWith(".scala"))
-          out += root.relativize(p).toString ->
-            new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-      }
-      out.result().toMap
-    }
+    val sources = MainSources.all.toMap
     assert(sources.get(home).exists(_.contains(melt)), s"$home must hold the melt")
     val offenders = sources.toSeq.filter(_._1 != home).flatMap { case (f, src) =>
       val n = java.util.regex.Pattern.quote(melt).r.findAllIn(src).size

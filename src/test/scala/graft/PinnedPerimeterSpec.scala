@@ -42,20 +42,7 @@ class PinnedPerimeterSpec extends AnyFunSuite {
     // relation resolution per (session, dir, table) — catalog analog
     "graft/sources/Tables.scala" -> 2)
 
-  /** (path relative to src/main/scala, source text) of every main file. */
-  private lazy val mainSources: Seq[(String, String)] = {
-    val root = java.nio.file.Paths.get("src/main/scala")
-    assert(java.nio.file.Files.isDirectory(root), s"run from the repo root: $root")
-    val out = Seq.newBuilder[(String, String)]
-    val it = java.nio.file.Files.walk(root).iterator()
-    while (it.hasNext) {
-      val p = it.next()
-      if (p.toString.endsWith(".scala"))
-        out += root.relativize(p).toString ->
-          new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-    }
-    out.result()
-  }
+  private def mainSources: Seq[(String, String)] = MainSources.all
 
   test("sessionMemo call sites exactly match the frozen r13 perimeter") {
     val re = """sessionMemo(\[[^]]*\])?\(""".r

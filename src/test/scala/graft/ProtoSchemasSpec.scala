@@ -241,21 +241,14 @@ class ProtoSchemasSpec extends SparkSpec {
   }
 
   test("one protobuf decoder: no src/main file but ProtoSchemas calls a graft_proto_* function") {
-    val root = java.nio.file.Paths.get("src/main/scala")
-    assert(java.nio.file.Files.isDirectory(root), s"run from the repo root: $root")
     val call = """call_function\(\s*"graft_proto_""".r
-    val callers = Seq.newBuilder[String]
-    val it = java.nio.file.Files.walk(root).iterator()
-    while (it.hasNext) {
-      val p = it.next()
-      val rel = root.relativize(p).toString
-      if (rel.endsWith(".scala") && rel != "graft/schema/ProtoSchemas.scala" &&
-          call.findFirstIn(new String(java.nio.file.Files.readAllBytes(p), "UTF-8")).isDefined)
-        callers += rel
+    val callers = MainSources.all.collect {
+      case (rel, src) if rel != "graft/schema/ProtoSchemas.scala" &&
+        call.findFirstIn(src).isDefined => rel
     }
-    assert(callers.result().isEmpty,
+    assert(callers.isEmpty,
       "decode through graft.schema.ProtoSchemas, not a direct graft_proto_* call: " +
-        callers.result().mkString(", "))
+        callers.mkString(", "))
   }
 
   test("schema evolution at the WIRE level: old/new descriptors interoperate") {

@@ -275,7 +275,7 @@ class ScaleOpsSpec extends SparkSpec {
       (Array(1f, 0f, 2f), Array(1f, 0f, 2f)),
       (Array(1f, 0f, 0f), Array(0f, 1f, 0f)))
       .toDF("a", "b")
-      .select(round(Similarity.cosine(col("a"), col("b")), 9).as("c"))
+      .select(Similarity.score(col("a"), col("b")).as("c"))
     assert(df.collect().map(_.getDouble(0)).toSeq == Seq(1.0, 0.0))
   }
 

@@ -114,6 +114,63 @@ class StreamingVectorAdmissionSpec extends SparkSpec {
     assert(indexed == Set(2L), s"index must not contain gated vectors, got $indexed")
   }
 
+  test("a cosine in [θ − 5e-7, θ) is a dup in stream and batch alike") {
+    import spark.implicits._
+    val theta = 0.999
+    def dot(x: Array[Float], y: Array[Float]): Double =
+      x.indices.foldLeft(0.0d)((acc, i) => acc + x(i).toDouble * y(i).toDouble)
+    def cos(x: Array[Float], y: Array[Float]): Double =
+      dot(x, y) / (math.sqrt(dot(x, x)) * math.sqrt(dot(y, y)))
+    // b(t) = a + t·u drifts away from a as t grows: bisect t so the
+    // unrounded cosine lands in [θ − 5e-7, θ), where round(·, 6) = θ
+    val a = base(11); val u = base(12)
+    def at(t: Double) = a.indices.map(i => (a(i) + t * u(i)).toFloat).toArray
+    val target = theta - 2.5e-7
+    var (lo, hi) = (0.0, 1.0)
+    for (_ <- 0 until 60) {
+      val mid = (lo + hi) / 2
+      if (cos(a, at(mid)) > target) lo = mid else hi = mid
+    }
+    val b = at(hi)
+    val pair = Seq(Vec(1L, a), Vec(2L, b)).toDF()
+    // the plant is what it claims, in Spark's own arithmetic: unrounded
+    // below θ, rounded to θ, and the two vectors share a band bucket
+    val c = pair.as("x").join(pair.as("y"), col("x.vec_id") === 1L && col("y.vec_id") === 2L)
+      .select(Similarity.dot(col("x.embedding"), col("y.embedding")) /
+        (Similarity.norm(col("x.embedding")) * Similarity.norm(col("y.embedding"))))
+      .head().getDouble(0)
+    assert(c >= theta - 5e-7 && c < theta, s"planted cosine $c")
+    assert(BigDecimal(c).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble == theta)
+    val posts = Similarity.vectorPostings(pair, "vec_id", "embedding", plan)
+    assert(posts.filter(col("id") === 1L).select("band_idx", "bucket")
+      .intersect(posts.filter(col("id") === 2L).select("band_idx", "bucket")).count() > 0,
+      "the planted pair must share a band bucket")
+
+    // the batch twin calls 2 a duplicate of the indexed 1
+    val first = pair.filter(col("vec_id") === 1L)
+    val second = pair.filter(col("vec_id") === 2L)
+    val verdict = Similarity.admitAgainstVectors(
+      Similarity.vectorPostings(first, "vec_id", "embedding", plan), first, second,
+      "vec_id", "embedding", theta, plan).select("is_dup").head().getBoolean(0)
+    assert(verdict, "the batch twin must call the planted pair a duplicate")
+
+    // the stream agrees, across batches (the index probe) ...
+    val indexDir = tmp("vround-index")
+    val admittedDir = tmp("vround-out")
+    StreamingVectorAdmission.admitBatch(first, 0L, indexDir, admittedDir, plan,
+      threshold = theta)
+    StreamingVectorAdmission.admitBatch(second, 1L, indexDir, admittedDir, plan,
+      threshold = theta)
+    def admitted(dir: String) =
+      spark.read.parquet(dir).select("vec_id").as[Long].collect().toSet
+    assert(admitted(admittedDir) == Set(1L), "cross-batch verdict differs from the batch twin")
+    // ... and within one batch (the intra-batch pairs)
+    val intraDir = tmp("vround-intra-out")
+    StreamingVectorAdmission.admitBatch(pair, 0L, tmp("vround-intra-index"), intraDir,
+      plan, threshold = theta)
+    assert(admitted(intraDir) == Set(1L), "intra-batch verdict differs from the batch twin")
+  }
+
   test("tombstones mask the vector index: near-dup of a deleted-only vector re-admits") {
     import spark.implicits._
     val indexDir = tmp("vtomb-index")

@@ -6,10 +6,11 @@ import java.time.Duration
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import scala.util.Try
 
-/** transformWithState form of the TTL idempotency guard: same Redis
-  * `SET EX` contract as TtlDedupSpec, TTL enforced by the state store's
-  * native TTLConfig. RocksDB provider, live query + sink polling (the
-  * operator targets continuous pipelines, like TtlDedup).
+/** Exact processing-time-TTL idempotency: duplicates drop while the TTL
+  * state lives and re-admit after expiry — the Redis `SET EX` semantics
+  * of the reference (D2/W4), TTL enforced by the state store's native
+  * TTLConfig. RocksDB provider, live query + sink polling (the operator
+  * targets continuous pipelines, see the TwsDedup scaladoc).
   */
 class TwsDedupSpec extends SparkSpec {
 
